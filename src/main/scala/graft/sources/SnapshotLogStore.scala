@@ -75,6 +75,81 @@ object SnapshotLogStore {
          _: org.apache.hadoop.fs.LocalFileSystem => LocalExclusiveLogStore
     case _ => HadoopAtomicLogStore
   }
+
+  /** The one collision classifier of every committer: true iff `e`, raised
+    * by [[SnapshotLogStore.writeExclusive]] of `path`, means another
+    * writer already created it — the only failure a commit may retry.
+    * Besides the two FileAlreadyExists types, a plain IOException with
+    * the target present is a collision (a remote store's 412 on a
+    * conditional PUT). A persistent fault (permissions, full disk,
+    * unreachable root) is NOT: retrying would only mask the cause. A
+    * collision is remembered on this thread as the cause a
+    * [[commitLoop]] give-up carries. */
+  private[sources] def isCollision(fs: FileSystem, path: Path,
+                                   e: java.io.IOException): Boolean = {
+    val lost = e match {
+      case _: org.apache.hadoop.fs.FileAlreadyExistsException => true
+      case _: java.nio.file.FileAlreadyExistsException => true
+      case _ => fs.exists(path)
+    }
+    if (lost) lastCollision.set(e)
+    lost
+  }
+
+  private val lastCollision = new ThreadLocal[java.io.IOException]
+
+  /** Lost races one commit tolerates before giving up. */
+  private val MaxConflicts = 50
+
+  /** The one optimistic-commit loop (table manifests and the multi-table
+    * transaction log): run `attempt` on a base — `first` when given, else
+    * a fresh `tip()`, and a fresh `tip()` after every lost race (`None`)
+    * — up to 50 times, then raise `IllegalStateException("<op>: gave up
+    * after 50 conflicts")` with the last collision as its cause. No sleep
+    * between attempts: the loser's next base is the winner's published
+    * tip. Anything else the attempt throws propagates at once. */
+  private[sources] def commitLoop[A](op: => String, tip: () => Long,
+                                     first: Option[Long] = None)
+                                    (attempt: Long => Option[A]): A = {
+    lastCollision.remove()
+    try {
+      var attempts = 0
+      while (attempts < MaxConflicts) {
+        val base = if (attempts == 0) first.getOrElse(tip()) else tip()
+        attempt(base) match {
+          case Some(done) => return done
+          case None => attempts += 1
+        }
+      }
+      throw new IllegalStateException(
+        s"$op: gave up after $attempts conflicts", lastCollision.get)
+    } finally lastCollision.remove()
+  }
+
+  /** Read a published manifest, retrying failures with bounded backoff
+    * (9 tries, sleeping 2 → 200 ms between them, ~0.45 s in all): the
+    * exclusive publish elects the writer atomically, but on local/HDFS
+    * filesystems the content can become visible progressively, so a
+    * reader racing the winner may parse a truncated body. One that still
+    * fails is corrupt (a crash mid-publish) and raises
+    * `IllegalStateException(what)` with the last failure as its cause; a
+    * missing file (`FileNotFoundException`) raises at once. */
+  private[sources] def readRetrying[A](what: => String)(read: => A): A = {
+    var delayMs = 2L
+    var last: Throwable = null
+    var tries = 0
+    while (tries < 9) {
+      try return read
+      catch {
+        case e: java.io.FileNotFoundException => throw e
+        case scala.util.control.NonFatal(e) =>
+          last = e
+          tries += 1
+          if (tries < 9) { Thread.sleep(delayMs); delayMs = math.min(200L, delayMs * 2) }
+      }
+    }
+    throw new IllegalStateException(what, last)
+  }
 }
 
 /** file:// roots: stage the body to a temp file, publish with java.nio

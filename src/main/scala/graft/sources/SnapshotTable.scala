@@ -511,26 +511,15 @@ class SnapshotTable(spark: SparkSession, root: String,
     * writer, but content becomes visible progressively on local/HDFS
     * filesystems — a reader racing the winner's single write()+close()
     * can see a truncated manifest for a few microseconds. Parse failures
-    * therefore retry with bounded backoff; a manifest that still fails
-    * after ~1 s is genuinely corrupt (crash mid-publish) and raises.
-    * Missing manifests (vacuumed/never existed) raise immediately. */
-  def snapshot(version: Long): Snapshot = {
-    var delayMs = 2L
-    var last: Throwable = null
-    var attempt = 0
-    while (attempt < 9) {
-      try { return parseSnapshot(version) }
-      catch {
-        case e: java.io.FileNotFoundException => throw e
-        case scala.util.control.NonFatal(e) =>
-          last = e
-          attempt += 1
-          if (attempt < 9) { Thread.sleep(delayMs); delayMs = math.min(200L, delayMs * 2) }
-      }
+    * therefore retry with bounded backoff
+    * ([[SnapshotLogStore.readRetrying]]); a manifest that still fails is
+    * genuinely corrupt (crash mid-publish) and raises. Missing manifests
+    * (vacuumed/never existed) raise immediately. */
+  def snapshot(version: Long): Snapshot =
+    SnapshotLogStore.readRetrying(
+      s"manifest v$version at $root unreadable after retries (partial publish?)") {
+      parseSnapshot(version)
     }
-    throw new IllegalStateException(
-      s"manifest v$version at $root unreadable after retries (partial publish?)", last)
-  }
 
   // ---- manifest checkpoints: every `checkpointEvery` commits the
   // publisher archives that window's RAW manifest bodies into ONE chunk
@@ -784,17 +773,6 @@ class SnapshotTable(spark: SparkSession, root: String,
     ref
   }
 
-  /** Slice a FileSet's data-file side to index range [from, until). */
-  private def sliceFiles(fls: FileSet, from: Int, until: Int): FileSet = {
-    val idx = from until until
-    FileSet(idx.map(fls.files), sliceStats(fls.stats, idx),
-      idx.map(i => if (i < fls.seqs.length) fls.seqs(i) else 0L),
-      fls.deletes, fls.deleteSeqs, fls.deleteKey,
-      idx.map(alignLens(fls.lens, fls.files.length)), fls.deleteLens,
-      idx.map(alignLens(fls.frows, fls.files.length)),
-      fls.drows, fls.dmins, fls.dmaxs)
-  }
-
   /** Choose the manifest-list encoding for a commit: (group refs,
     * grouped prefix length, inline slice). An append whose prefix is
     * byte-identical to the base's grouped prefix (same stats columns)
@@ -818,15 +796,13 @@ class SnapshotTable(spark: SparkSession, root: String,
       case Some(b) => (b.groupRefs, b.groupedCount)
       case None => (Seq.empty[String], 0)
     }
+    def slice(from: Int) = keeping(fls, from until n)
     if (refs.length >= groupMergeAt)
-      (Seq(writeGroup(v, sliceFiles(fls, 0, n))), n, sliceFiles(fls, n, n))
+      (Seq(writeGroup(v, slice(0))), n, slice(n))
     else if (n - gcount >= groupInlineFold) {
-      if (gcount == 0)
-        (Seq(writeGroup(v, sliceFiles(fls, 0, n))), n, sliceFiles(fls, n, n))
-      else
-        (refs :+ writeGroup(v, sliceFiles(fls, gcount, n)), n,
-          sliceFiles(fls, n, n))
-    } else (refs, gcount, sliceFiles(fls, gcount, n))
+      if (gcount == 0) (Seq(writeGroup(v, slice(0))), n, slice(n))
+      else (refs :+ writeGroup(v, slice(gcount)), n, slice(n))
+    } else (refs, gcount, slice(gcount))
   }
 
   private def parseManifestText(txt: String): Snapshot = {
@@ -1298,16 +1274,6 @@ class SnapshotTable(spark: SparkSession, root: String,
       frows = parts.map(rowsFor)), rows)
   }
 
-  /** True iff this IOException means "another writer already created the
-    * manifest" — the only failure the publish loops may retry. A
-    * persistent fault (permissions, full disk, unreachable root) is NOT a
-    * collision: retrying 50 times would only mask the cause. */
-  private def isCollision(v: Long, e: java.io.IOException): Boolean = e match {
-    case _: org.apache.hadoop.fs.FileAlreadyExistsException => true
-    case _: java.nio.file.FileAlreadyExistsException => true
-    case _ => fs.exists(manifestPath(v)) // someone's manifest landed: a race
-  }
-
   /** Typed-bounds arrays for one stats column's manifest/group block —
     * emitted only when some file actually records a bound (base64 is
     * JSON-safe by construction; an all-Absent column costs zero bytes,
@@ -1443,11 +1409,6 @@ class SnapshotTable(spark: SparkSession, root: String,
     else statOf(p)
   }
 
-  /** Publish a manifest at the next version; on a create-exclusive
-    * collision (another writer won the version) retry on the new tip.
-    * Non-collision failures propagate immediately; a give-up after 50
-    * genuine collisions carries the last one as its cause. Returns the
-    * committed version. */
   /** This table's band-semantics version (see [[BandKeys]]): fixed by
     * the first manifest, [[BandKeys.CurrentBandsV]] for a table about to
     * be created. Every stats producer (writeDataFiles, the DSv2 writer
@@ -1474,54 +1435,73 @@ class SnapshotTable(spark: SparkSession, root: String,
     }
   }
 
+  /** Delete the commit directories (`data/<uuid>`) holding `files` —
+    * files no published manifest references. */
+  private def dropCommitDirs(files: Seq[String]): Unit =
+    files.map(_.split('/').head).distinct.foreach(uuid =>
+      fs.delete(new Path(dataDir, uuid), true))
+
+  /** Every commit of this table runs through here:
+    * [[SnapshotLogStore.commitLoop]] on this table's tip, named `op` in
+    * its give-up. */
+  private def commitLoop[A](op: String, first: Option[Long] = None)
+                           (attempt: Long => Option[A]): A =
+    SnapshotLogStore.commitLoop(s"$op at $root", () => latestVersion(), first)(attempt)
+
+  /** Publish at the next version, deriving the content from each
+    * attempt's base — [[commitLoop]] around [[publishAtBase]], for
+    * commits whose content is a pure function of the tip (appends,
+    * overwrites, schema changes, rollbacks, branch merges): a lost race
+    * re-derives manifest-only on the new tip. Non-collision failures
+    * propagate immediately; a give-up after 50 collisions carries the
+    * last one as its cause. Returns the committed version. */
   private def publish(action: String, files: Long => FileSet,
                       rows: Long => Long,
                       schemaJson: Long => Option[String],
                       batchId: Long = -1L,
                       dataChange: Boolean = true,
-                      txnApp: String = ""): Long = {
-    var attempts = 0
-    var last: java.io.IOException = null
-    while (attempts < 50) {
-      val base = latestVersion()
-      val v = base + 1
-      val fls = ensureLens(files(base))
-      val baseSnap = if (base == 0) None else Some(snapshot(base))
-      val (refs, _, inline) = encodeGroups(baseSnap, fls)
-      val body = manifestBody(v, action, base, rows(base), inline, schemaJson(base),
-        batchId, dataChange, txnApp, refs, inheritedBandsV(baseSnap))
-      fs.mkdirs(snapsDir)
-      try {
-        store.writeExclusive(fs, manifestPath(v), body.getBytes("UTF-8"))
-        writeTipHint(v)
-        maybeCheckpoint(v)
-        return v
-      } catch {
-        case e: java.io.IOException if isCollision(v, e) =>
-          dropAttemptGroups(refs, baseSnap)
-          last = e; attempts += 1 // lost the race; re-read tip
-      }
+                      txnApp: String = ""): Long =
+    commitLoop(action) { base =>
+      publishAtBase(base, action, files(base), rows(base), schemaJson(base),
+        dataChange, batchId = batchId, txnApp = txnApp)
     }
-    throw new IllegalStateException(
-      s"snapshot commit at $root: gave up after $attempts collisions", last)
-  }
 
   /** Tip's content plus the batch's new files (stamped with the
     * candidate version `base + 1` as their commit sequence). Existing
     * MOR deletes carry forward unchanged — they apply only to files with
     * smaller sequences, so the fresh files are untouched by them. */
-  private def appendedFileSet(base: Long, nw: FileSet): FileSet = {
-    val prev = if (base == 0) FileSet(Seq.empty, emptyStats)
-               else fileSetOf(snapshot(base))
-    FileSet(prev.files ++ nw.files, concatStats(prev.stats, nw.stats),
-      prev.seqs ++ Seq.fill(nw.files.length)(base + 1),
-      prev.deletes, prev.deleteSeqs, prev.deleteKey,
-      alignLens(prev.lens, prev.files.length) ++
-        alignLens(nw.lens, nw.files.length),
-      prev.deleteLens,
-      alignLens(prev.frows, prev.files.length) ++
-        alignLens(nw.frows, nw.files.length),
-      prev.drows, prev.dmins, prev.dmaxs)
+  private def appendedFileSet(base: Long, nw: FileSet): FileSet =
+    spliced(if (base == 0) FileSet(Seq.empty, emptyStats)
+            else fileSetOf(snapshot(base)), nw, base + 1)
+
+  /** `fls` with only the data files at `keep` (stats, sequences, lengths
+    * and row counts sliced alongside); MOR deletes carry unchanged. */
+  private def keeping(fls: FileSet, keep: Seq[Int]): FileSet = {
+    val n = fls.files.length
+    fls.copy(files = keep.map(fls.files), stats = sliceStats(fls.stats, keep),
+      seqs = keep.map(alignOr(fls.seqs, n, 0L)),
+      lens = keep.map(alignLens(fls.lens, n)),
+      frows = keep.map(alignLens(fls.frows, n)))
+  }
+
+  /** `kept` followed by `added`'s data and delete files, both stamped
+    * with commit sequence `seq` — how every commit builds its file list.
+    * Kept files keep their sequences, so the MOR deletes they carry keep
+    * applying to them and never to the added data (newer). Every vector
+    * is re-aligned, never positionally reinterpreted. */
+  private def spliced(kept: FileSet, added: FileSet, seq: Long): FileSet = {
+    val (n, m) = (kept.files.length, added.files.length)
+    val (d, k) = (kept.deletes.length, added.deletes.length)
+    FileSet(kept.files ++ added.files, concatStats(kept.stats, added.stats),
+      alignOr(kept.seqs, n, 0L) ++ Seq.fill(m)(seq),
+      kept.deletes ++ added.deletes, kept.deleteSeqs ++ Seq.fill(k)(seq),
+      if (k > 0) added.deleteKey else kept.deleteKey,
+      alignLens(kept.lens, n) ++ alignLens(added.lens, m),
+      alignLens(kept.deleteLens, d) ++ alignLens(added.deleteLens, k),
+      alignLens(kept.frows, n) ++ alignLens(added.frows, m),
+      alignLens(kept.drows, d) ++ alignLens(added.drows, k),
+      alignOr(kept.dmins, d, UnknownMin) ++ alignOr(added.dmins, k, UnknownMin),
+      alignOr(kept.dmaxs, d, UnknownMax) ++ alignOr(added.dmaxs, k, UnknownMax))
   }
 
   /** Columns opted into per-file point-lookup bloom filters
@@ -1665,8 +1645,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     } catch {
       case DuplicateIngest(v) =>
         // lost the race: this attempt's files are unreferenced — drop them
-        newFiles.files.map(_.split('/').head).distinct.foreach(uuid =>
-          fs.delete(new Path(dataDir, uuid), true))
+        dropCommitDirs(newFiles.files)
         (v, false)
     }
   }
@@ -2267,21 +2246,28 @@ class SnapshotTable(spark: SparkSession, root: String,
   }
 
   /** Publish exactly at `base + 1`; None when another writer got there
-    * first. Unlike [[publish]] this does NOT retry — the caller re-derives
-    * its content from the new tip (snapshot-isolation validation for
-    * read-modify-write commits, where a blind retry would lose the
-    * concurrent writer's rows). Non-collision failures propagate. */
+    * first. Does NOT retry: [[commitLoop]] does, and a read-modify-write
+    * caller re-derives its content from the new tip (snapshot-isolation
+    * validation — a blind retry would lose the concurrent writer's
+    * rows). A lost race leaves no debris: the group files only this
+    * attempt's manifest referenced go, and so do the commit directories
+    * of `written` — the data and delete files the attempt wrote for this
+    * base alone (files reused across attempts stay). Non-collision
+    * failures propagate. */
   private def publishAtBase(base: Long, action: String, fls: FileSet,
                             rowCount: Long, schemaJson: Option[String],
                             dataChange: Boolean = true,
-                            bandsVOverride: Option[Int] = None): Option[Long] = {
+                            bandsVOverride: Option[Int] = None,
+                            written: Seq[String] = Seq.empty,
+                            batchId: Long = -1L,
+                            txnApp: String = ""): Option[Long] = {
     val v = base + 1
     val ensured = ensureLens(fls)
     val baseSnap = if (base == 0) None else Some(snapshot(base))
     val (refs, _, inline) = encodeGroups(baseSnap, ensured)
     val body = manifestBody(v, action, base, rowCount, inline, schemaJson,
-      batchId = -1L, dataChange = dataChange, groupRefs = refs,
-      bandsV = bandsVOverride.getOrElse(inheritedBandsV(baseSnap)))
+      batchId, dataChange, txnApp, refs,
+      bandsVOverride.getOrElse(inheritedBandsV(baseSnap)))
     fs.mkdirs(snapsDir)
     try {
       store.writeExclusive(fs, manifestPath(v), body.getBytes("UTF-8"))
@@ -2289,8 +2275,9 @@ class SnapshotTable(spark: SparkSession, root: String,
       maybeCheckpoint(v)
       Some(v)
     } catch {
-      case e: java.io.IOException if isCollision(v, e) =>
+      case e: java.io.IOException if SnapshotLogStore.isCollision(fs, manifestPath(v), e) =>
         dropAttemptGroups(refs, baseSnap)
+        dropCommitDirs(written)
         None
     }
   }
@@ -2305,26 +2292,15 @@ class SnapshotTable(spark: SparkSession, root: String,
     * rewrite) per attempt, the price of row-level semantics on immutable
     * files. */
   def commitRewrite(action: String)
-                   (transform: Option[DataFrame] => DataFrame): Long = {
-    var attempts = 0
-    while (attempts < 50) {
-      val base = latestVersion()
+                   (transform: Option[DataFrame] => DataFrame): Long =
+    commitLoop("commitRewrite") { base =>
       val cur = if (base == 0) None else Some(read(base))
       val next = transform(cur)
       val (raw, rows) = writeDataFiles(guarded(next))
       // full rewrite: fresh sequences, MOR deletes absorbed into the data
-      val fls = raw.copy(seqs = Seq.fill(raw.files.length)(base + 1))
-      publishAtBase(base, action, fls, rows,
-        Some(normalizeSchema(next.schema).json)) match {
-        case Some(v) => return v
-        case None => // lost the race: drop this attempt's files, re-derive
-          fls.files.map(_.split('/').head).distinct.foreach(uuid =>
-            fs.delete(new Path(dataDir, uuid), true))
-          attempts += 1
-      }
+      publishAtBase(base, action, raw.copy(seqs = Seq.fill(raw.files.length)(base + 1)),
+        rows, Some(normalizeSchema(next.schema).json), written = raw.files)
     }
-    sys.error(s"commitRewrite at $root: gave up after $attempts conflicts")
-  }
 
   /** MERGE INTO (upsert by key, last-writer-wins on the watermark) —
     * FILE-SURGICAL copy-on-write: a matched row must agree with some
@@ -2393,51 +2369,35 @@ class SnapshotTable(spark: SparkSession, root: String,
       }
     }.toMap
     val hullLanes = box.filter { case (c, _) => !pointLanes.contains(c) }
-    var attempts = 0
-    while (attempts < 50) {
-      val base = latestVersion()
-      if (base == 0) return fullRewrite()
-      val snapBase = snapshot(base)
-      val tipSchema = tipSchemaOf(base).getOrElse(return fullRewrite())
-      if (evolveSchema(Some(tipSchema), batch.schema) != tipSchema)
-        return fullRewrite() // batch evolves the schema: full path handles it
-      val prev = ensureLens(fileSetOf(snapBase))
-      // a file is UNTOUCHABLE iff provably disjoint from the batch's
-      // keys on some stats key column (band + bloom evidence); unknown
-      // stats read as overlapping
-      val overlapIdx = prunedKeep(prev, hullLanes, pointLanes,
-        Set.empty, Seq.empty)
-      val keepIdx = prev.files.indices.filterNot(overlapIdx.toSet)
-      if (keepIdx.isEmpty) return fullRewrite() // nothing carries: same cost
-      val existing =
-        if (overlapIdx.isEmpty) read(base).limit(0)
-        else morPlan(snapBase, overlapIdx, mergeSchema = false)
-      val overlapLive = if (overlapIdx.isEmpty) 0L else existing.count()
-      val merged = graft.models.Meta.mergeUpsert(existing, batch,
-        uniqueKey, watermarkCol, tieBreak)
-      val (raw, mergedRows) = writeDataFiles(guarded(merged))
-      val lens = alignLens(prev.lens, prev.files.length)
-      val frs = alignLens(prev.frows, prev.files.length)
-      val fls = FileSet(
-        keepIdx.map(prev.files) ++ raw.files,
-        concatStats(sliceStats(prev.stats, keepIdx), raw.stats),
-        keepIdx.map(prev.seqs) ++ Seq.fill(raw.files.length)(base + 1),
-        prev.deletes, prev.deleteSeqs, prev.deleteKey,
-        keepIdx.map(lens) ++ alignLens(raw.lens, raw.files.length),
-        prev.deleteLens,
-        keepIdx.map(frs) ++ alignLens(raw.frows, raw.files.length),
-        prev.drows, prev.dmins, prev.dmaxs)
-      publishAtBase(base, "upsert", fls,
-        snapBase.rows - overlapLive + mergedRows,
-        snapBase.schemaJson) match {
-        case Some(v) => return v
-        case None => // lost the race: drop this attempt's files, re-derive
-          raw.files.map(_.split('/').head).distinct.foreach(uuid =>
-            fs.delete(new Path(dataDir, uuid), true))
-          attempts += 1
+    commitLoop("commitUpsert") { base =>
+      // an empty table or a batch that evolves the schema: the full path
+      if (base == 0 ||
+          tipSchemaOf(base).forall(t => evolveSchema(Some(t), batch.schema) != t))
+        Some(fullRewrite())
+      else {
+        val snapBase = snapshot(base)
+        val prev = ensureLens(fileSetOf(snapBase))
+        // a file is UNTOUCHABLE iff provably disjoint from the batch's
+        // keys on some stats key column (band + bloom evidence); unknown
+        // stats read as overlapping
+        val overlapIdx = prunedKeep(prev, hullLanes, pointLanes,
+          Set.empty, Seq.empty)
+        val keepIdx = prev.files.indices.filterNot(overlapIdx.toSet)
+        if (keepIdx.isEmpty) Some(fullRewrite()) // nothing carries: same cost
+        else {
+          val existing =
+            if (overlapIdx.isEmpty) read(base).limit(0)
+            else morPlan(snapBase, overlapIdx, mergeSchema = false)
+          val overlapLive = if (overlapIdx.isEmpty) 0L else existing.count()
+          val merged = graft.models.Meta.mergeUpsert(existing, batch,
+            uniqueKey, watermarkCol, tieBreak)
+          val (raw, mergedRows) = writeDataFiles(guarded(merged))
+          publishAtBase(base, "upsert", spliced(keeping(prev, keepIdx), raw, base + 1),
+            snapBase.rows - overlapLive + mergedRows,
+            snapBase.schemaJson, written = raw.files)
+        }
       }
     }
-    sys.error(s"commitUpsert at $root: gave up after $attempts conflicts")
   }
 
   /** Row-level DELETE WHERE: keep everything the predicate does not
@@ -2463,9 +2423,13 @@ class SnapshotTable(spark: SparkSession, root: String,
     keyCols.foreach(jsonSafe(_, "delete-key column")) // fail before any write
     import org.apache.spark.sql.functions.col
     val (keyFiles, _) = writeDataFiles(keys.select(keyCols.map(col): _*).distinct())
-    var attempts = 0
-    while (attempts < 50) {
-      val base = latestVersion()
+    // per-delete-file key counts + key bands: the writer's one stats
+    // pass already folded both; composite keys interleave to z-bands
+    val (newDmins, newDmaxs) = deleteKeyBands(keyCols, keyFiles)
+    val added = FileSet(Seq.empty, emptyStats, deletes = keyFiles.files,
+      deleteKey = keyCols, deleteLens = keyFiles.lens, drows = keyFiles.frows,
+      dmins = newDmins, dmaxs = newDmaxs)
+    commitLoop("commitDeleteByKey") { base =>
       require(base > 0, s"DELETE on empty table at $root")
       val snapBase = snapshot(base)
       val prev = fileSetOf(snapBase)
@@ -2486,26 +2450,9 @@ class SnapshotTable(spark: SparkSession, root: String,
           else None
         }
       val deleted = countMatchingKeys(base, keyFiles.files, keyCols, keyBand)
-      // per-delete-file key counts + key bands: the writer's one stats
-      // pass already folded both; composite keys interleave to z-bands
-      val (newDmins, newDmaxs) = deleteKeyBands(keyCols, keyFiles)
-      val fls = prev.copy(
-        deletes = prev.deletes ++ keyFiles.files,
-        deleteSeqs = prev.deleteSeqs ++ Seq.fill(keyFiles.files.length)(base + 1),
-        deleteKey = keyCols,
-        deleteLens = alignLens(prev.deleteLens, prev.deletes.length) ++
-          alignLens(keyFiles.lens, keyFiles.files.length),
-        drows = alignLens(prev.drows, prev.deletes.length) ++
-          alignLens(keyFiles.frows, keyFiles.files.length),
-        dmins = alignOr(prev.dmins, prev.deletes.length, UnknownMin) ++ newDmins,
-        dmaxs = alignOr(prev.dmaxs, prev.deletes.length, UnknownMax) ++ newDmaxs)
-      publishAtBase(base, "delete_mor", fls, snapBase.rows - deleted,
-        snapBase.schemaJson) match {
-        case Some(v) => return v
-        case None => attempts += 1
-      }
+      publishAtBase(base, "delete_mor", spliced(prev, added, base + 1),
+        snapBase.rows - deleted, snapBase.schemaJson)
     }
-    sys.error(s"commitDeleteByKey at $root: gave up after $attempts conflicts")
   }
 
   /** Atomic range replacement on the table's FIRST stats column. */
@@ -2587,9 +2534,7 @@ class SnapshotTable(spark: SparkSession, root: String,
                                 batchSchema: StructType): Long = {
     import org.apache.spark.sql.functions.col
     val ci = statsCols.indexOf(column)
-    var attempts = 0
-    while (attempts < 50) {
-      val base = latestVersion()
+    commitLoop("commitReplaceWhere") { base =>
       require(base > 0, s"replaceWhere on empty table at $root")
       val snap = snapshot(base)
       val prev = fileSetOf(snap)
@@ -2624,32 +2569,11 @@ class SnapshotTable(spark: SparkSession, root: String,
         }
       // kept rows outside the range in straddlers move to the rewrite;
       // net row delta = batch - rows removed from the range
-      val fls = FileSet(
-        keepIdx.map(prev.files) ++ rewrite.files ++ batchFiles.files,
-        concatStats(concatStats(sliceStats(prev.stats, keepIdx), rewrite.stats),
-          batchFiles.stats),
-        keepIdx.map(prev.seqs) ++
-          Seq.fill(rewrite.files.length + batchFiles.files.length)(base + 1),
-        prev.deletes, prev.deleteSeqs, prev.deleteKey,
-        keepIdx.map(alignLens(prev.lens, prev.files.length)) ++
-          alignLens(rewrite.lens, rewrite.files.length) ++
-          alignLens(batchFiles.lens, batchFiles.files.length),
-        prev.deleteLens,
-        keepIdx.map(alignLens(prev.frows, prev.files.length)) ++
-          alignLens(rewrite.frows, rewrite.files.length) ++
-          alignLens(batchFiles.frows, batchFiles.files.length),
-        prev.drows, prev.dmins, prev.dmaxs)
+      val added = spliced(rewrite, batchFiles, base + 1)
       val schema = Some(evolveSchema(snap.schemaJson.map(parseSchema), batchSchema).json)
-      publishAtBase(base, "replace_where", fls,
-        snap.rows - removed + batchRows, schema) match {
-        case Some(v) => return v
-        case None => // lost the race: drop this attempt's rewrite files only
-          rewrite.files.map(_.split('/').head).distinct.foreach(uuid =>
-            fs.delete(new Path(dataDir, uuid), true))
-          attempts += 1
-      }
+      publishAtBase(base, "replace_where", spliced(keeping(prev, keepIdx), added, base + 1),
+        snap.rows - removed + batchRows, schema, written = rewrite.files)
     }
-    sys.error(s"commitReplaceWhere at $root: gave up after $attempts conflicts")
   }
 
   // ---- commit entry points for files ALREADY WRITTEN under data/ by a
@@ -2760,11 +2684,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     // matched-row count is invariant across safe rebases (same removed
     // files, same applicable deletes) — pay its scan once
     var removedRowsMemo: Option[Long] = None
-    var at = base
-    var attempts = 0
-    while (attempts < 50) {
-      val snapAt = snapshot(at)
-      val prev = fileSetOf(snapAt)
+    rebasing("commitWrittenRewriteFiles", base, _ => removed) { (at, snapAt, prev) =>
       val unknown = removed.diff(prev.files.toSet)
       require(unknown.isEmpty,
         s"$action rewrite at $root: removed files not in v$at's manifest: " +
@@ -2777,41 +2697,46 @@ class SnapshotTable(spark: SparkSession, root: String,
         removedRowsMemo = Some(r)
         r
       }
-      val fls = FileSet(
-        files = keptIdx.map(prev.files) ++ files,
-        stats = concatStats(sliceStats(prev.stats, keptIdx), stats),
-        seqs = keptIdx.map(prev.seqs) ++ Seq.fill(files.length)(at + 1),
-        deletes = prev.deletes, deleteSeqs = prev.deleteSeqs,
-        deleteKey = prev.deleteKey,
-        // fresh DSv2-writer files carry no length yet: publish stats them
-        lens = keptIdx.map(alignLens(prev.lens, prev.files.length)) ++
-          Seq.fill(files.length)(-1L),
-        deleteLens = prev.deleteLens,
-        frows = keptIdx.map(alignLens(prev.frows, prev.files.length)) ++
-          alignLens(frows, files.length),
-        drows = prev.drows, dmins = prev.dmins, dmaxs = prev.dmaxs)
+      // fresh DSv2-writer files carry no length yet: publish stats them
+      val fls = spliced(keeping(prev, keptIdx),
+        FileSet(files, stats, frows = frows), at + 1)
       require(fls.files.nonEmpty,
         s"$action rewrite at $root would publish a file-less manifest")
       // row-level DML never evolves the schema: publish the base's
       // recorded one so time travel and change feeds stay consistent
       publishAtBase(at, action, fls, snapAt.rows - removedRows + addedRows,
-        snapAt.schemaJson.orElse(Some(normalizeSchema(batchSchema).json))) match {
-        case Some(v) => return Some(v)
-        case None =>
-          val tip = latestVersion()
-          if (tip <= at) return None // collision but no newer tip: give up
-          val tipSnap = snapshot(tip)
-          val tipFs = fileSetOf(tipSnap)
-          val disjoint =
-            removed.subsetOf(tipFs.files.toSet) &&
-              tipFs.deletes == prev.deletes &&
-              tipSnap.schemaJson == snapAt.schemaJson
-          if (!disjoint) return None
-          at = tip
-          attempts += 1
+        snapAt.schemaJson.orElse(Some(normalizeSchema(batchSchema).json)))
+        .map(Some(_))
+    }
+  }
+
+  /** The file-disjoint rebase of the SQL DML commits: the first attempt
+    * runs at the statement's `base`; after a lost race the next runs at
+    * the new tip only when the window provably left the statement's
+    * inputs alone — the tip still lists every `required` file of the
+    * last attempt's base (files are immutable, so presence IS identity),
+    * with the same delete vector and schema. Otherwise, or when the
+    * collision left no newer tip, the result is None: a conflict the
+    * caller surfaces. `attempt` receives (base, its snapshot, its files)
+    * and returns what [[publishAtBase]] returned, or Some(None) for a
+    * conflict it detected itself. */
+  private def rebasing(op: String, base: Long, required: FileSet => Set[String])
+                      (attempt: (Long, Snapshot, FileSet) => Option[Option[Long]])
+      : Option[Long] = {
+    var last: Option[(Long, Snapshot, FileSet)] = None
+    commitLoop(op, Some(base)) { at =>
+      val snapAt = snapshot(at)
+      val prev = fileSetOf(snapAt)
+      val disjoint = last.forall { case (was, wasSnap, wasFls) =>
+        at > was && required(wasFls).subsetOf(prev.files.toSet) &&
+          prev.deletes == wasFls.deletes && snapAt.schemaJson == wasSnap.schemaJson
+      }
+      if (!disjoint) Some(None)
+      else {
+        last = Some((at, snapAt, prev))
+        attempt(at, snapAt, prev)
       }
     }
-    None
   }
 
   /** Publish PRE-WRITTEN delete-key files as a merge-on-read DELETE at
@@ -2835,9 +2760,6 @@ class SnapshotTable(spark: SparkSession, root: String,
                                                 keyBands: Seq[(Long, Long)] = Seq.empty)
       : Option[Long] = {
     keyCols.foreach(jsonSafe(_, "delete-key column"))
-    val bands =
-      if (keyBands.length == keyFiles.length) keyBands
-      else Seq.fill(keyFiles.length)((UnknownMin, UnknownMax))
     // FILE-DISJOINT OPTIMISTIC CONCURRENCY, MOR flavor: a lost race
     // auto-rebases when the window held only appends (files superset,
     // delete vector and schema identical) AND a RECOUNT at the new tip
@@ -2848,11 +2770,10 @@ class SnapshotTable(spark: SparkSession, root: String,
     // statement never matched must surface as a conflict. The recount
     // reuses the commit's own key-band-pruned scan — O(overlapping
     // files), the cost the original commit already paid once.
-    var at = base
-    var attempts = 0
-    while (attempts < 50) {
-      val snapAt = snapshot(at)
-      val prev = fileSetOf(snapAt)
+    val added = FileSet(Seq.empty, emptyStats, deletes = keyFiles,
+      deleteKey = keyCols, drows = keyFrows,
+      dmins = keyBands.map(_._1), dmaxs = keyBands.map(_._2))
+    rebasing("commitWrittenDeleteByKey", base, _.files.toSet) { (at, snapAt, prev) =>
       require(prev.deleteKey.isEmpty || prev.deleteKey == keyCols,
         s"table at $root already carries MOR deletes keyed by " +
           s"(${prev.deleteKey.mkString(",")}); got (${keyCols.mkString(",")})")
@@ -2863,35 +2784,11 @@ class SnapshotTable(spark: SparkSession, root: String,
             s"but an equality delete on (${keyCols.mkString(",")}) would remove " +
             s"$removed — write.delete.key must be row-unique and non-null for " +
             "the matched rows (use copy-on-write mode for non-key predicates)")
-      else if (removed != deltaRows)
-        return None // concurrent appends carry matching keys: conflict
-      publishAtBase(at, "delete_mor", prev.copy(
-        deletes = prev.deletes ++ keyFiles,
-        deleteSeqs = prev.deleteSeqs ++ Seq.fill(keyFiles.length)(at + 1),
-        deleteKey = keyCols,
-        // fresh executor-written key files: publish stats them (O(new))
-        deleteLens = alignLens(prev.deleteLens, prev.deletes.length) ++
-          Seq.fill(keyFiles.length)(-1L),
-        drows = alignLens(prev.drows, prev.deletes.length) ++
-          alignLens(keyFrows, keyFiles.length),
-        dmins = alignOr(prev.dmins, prev.deletes.length, UnknownMin) ++ bands.map(_._1),
-        dmaxs = alignOr(prev.dmaxs, prev.deletes.length, UnknownMax) ++ bands.map(_._2)),
-        snapAt.rows - removed, snapAt.schemaJson) match {
-        case Some(v) => return Some(v)
-        case None =>
-          val tip = latestVersion()
-          if (tip <= at) return None
-          val tipSnap = snapshot(tip)
-          val tipFs = fileSetOf(tipSnap)
-          val appendOnly = prev.files.toSet.subsetOf(tipFs.files.toSet) &&
-            tipFs.deletes == prev.deletes &&
-            tipSnap.schemaJson == snapAt.schemaJson
-          if (!appendOnly) return None
-          at = tip
-          attempts += 1
-      }
+      if (removed != deltaRows) Some(None) // concurrent appends carry matching keys
+      // fresh executor-written key files: publish stats them (O(new))
+      else publishAtBase(at, "delete_mor", spliced(prev, added, at + 1),
+        snapAt.rows - removed, snapAt.schemaJson).map(Some(_))
     }
-    None
   }
 
   /** Per-file delete-KEY bands from a written key FileSet, aligned to
@@ -2988,11 +2885,11 @@ class SnapshotTable(spark: SparkSession, root: String,
     // equal to the statement's matched count proves the rebase sound
     // (the delta's replacement rows outsequence everything, and the
     // concurrent appends provably hold no matched key).
-    var at = base
-    var attempts = 0
-    while (attempts < 50) {
-      val snapAt = snapshot(at)
-      val prev = fileSetOf(snapAt)
+    // fresh executor files (data and delete): publish stats them
+    val added = FileSet(dataFiles, dataStats, frows = dataFrows,
+      deletes = keyFiles, deleteKey = keyCols, drows = keyFrows,
+      dmins = keyBands.map(_._1), dmaxs = keyBands.map(_._2))
+    rebasing("commitWrittenRowDelta", base, _.files.toSet) { (at, snapAt, prev) =>
       val removed =
         if (keyFiles.isEmpty) 0L
         else {
@@ -3008,47 +2905,12 @@ class SnapshotTable(spark: SparkSession, root: String,
             s"(${keyCols.mkString(",")}) would remove $removed — " +
             "write.delete.key must be row-unique and non-null for the " +
             "matched rows (use copy-on-write mode otherwise)")
-      else if (removed != deltaDeleteRows)
-        return None // concurrent appends carry matched keys: conflict
-      val fls = prev.copy(
-        files = prev.files ++ dataFiles,
-        stats = concatStats(prev.stats, dataStats),
-        seqs = prev.seqs ++ Seq.fill(dataFiles.length)(at + 1),
-        lens = alignLens(prev.lens, prev.files.length) ++
-          Seq.fill(dataFiles.length)(-1L), // fresh executor files: publish stats them
-        frows = alignLens(prev.frows, prev.files.length) ++
-          alignLens(dataFrows, dataFiles.length),
-        deletes = prev.deletes ++ keyFiles,
-        deleteSeqs = prev.deleteSeqs ++ Seq.fill(keyFiles.length)(at + 1),
-        deleteKey = if (keyFiles.nonEmpty) keyCols else prev.deleteKey,
-        deleteLens = alignLens(prev.deleteLens, prev.deletes.length) ++
-          Seq.fill(keyFiles.length)(-1L),
-        drows = alignLens(prev.drows, prev.deletes.length) ++
-          alignLens(keyFrows, keyFiles.length),
-        dmins = alignOr(prev.dmins, prev.deletes.length, UnknownMin) ++
-          (if (keyBands.length == keyFiles.length) keyBands.map(_._1)
-           else Seq.fill(keyFiles.length)(UnknownMin)),
-        dmaxs = alignOr(prev.dmaxs, prev.deletes.length, UnknownMax) ++
-          (if (keyBands.length == keyFiles.length) keyBands.map(_._2)
-           else Seq.fill(keyFiles.length)(UnknownMax)))
+      if (removed != deltaDeleteRows) Some(None) // concurrent appends carry matched keys
       // row-level DML never evolves the schema: keep the base's recorded one
-      publishAtBase(at, action, fls, snapAt.rows - removed + insertedRows,
-        snapAt.schemaJson.orElse(Some(normalizeSchema(batchSchema).json))) match {
-        case Some(v) => return Some(v)
-        case None =>
-          val tip = latestVersion()
-          if (tip <= at) return None
-          val tipSnap = snapshot(tip)
-          val tipFs = fileSetOf(tipSnap)
-          val appendOnly = prev.files.toSet.subsetOf(tipFs.files.toSet) &&
-            tipFs.deletes == prev.deletes &&
-            tipSnap.schemaJson == snapAt.schemaJson
-          if (!appendOnly) return None
-          at = tip
-          attempts += 1
-      }
+      else publishAtBase(at, action, spliced(prev, added, at + 1),
+        snapAt.rows - removed + insertedRows,
+        snapAt.schemaJson.orElse(Some(normalizeSchema(batchSchema).json))).map(Some(_))
     }
-    None
   }
 
   /** Classify every file of `version` against contiguous predicate
@@ -3129,9 +2991,7 @@ class SnapshotTable(spark: SparkSession, root: String,
       s"metadata delete needs contiguous bands/range-unions on stats " +
         s"columns (${statsCols.mkString(",")}); got " +
         s"${(bands.keys ++ unions.map(_._1)).mkString(",")}")
-    var attempts = 0
-    while (attempts < 50) {
-      val base = latestVersion()
+    commitLoop("commitDeleteByBands") { base =>
       require(base > 0, s"DELETE on empty table at $root")
       val (snapBase, classes) = classifyByBands(base, bands, unions)
       require(!classes.contains(-1),
@@ -3139,32 +2999,27 @@ class SnapshotTable(spark: SparkSession, root: String,
           "(a concurrent commit re-shaped the table mid-statement); " +
           "re-run the statement")
       val removedIdx = classes.indices.filter(classes(_) == 1)
-      if (removedIdx.isEmpty) return None // matched nothing: no version
-      val keptIdx = classes.indices.filter(classes(_) == 0)
-      require(keptIdx.nonEmpty,
-        s"metadata DELETE at $root would drop every file — re-run " +
-          "(concurrent writer); a full delete takes the row-level path")
-      val fl = fileSetOf(snapBase)
-      // with per-file row counts recorded and NO MOR delete applying to
-      // any dropped file, the exact count is metadata too — this was
-      // the metadata DELETE's one remaining scan
-      val fr = alignLens(fl.frows, fl.files.length)
-      val removedRows =
-        if (removedIdx.forall(i => fr(i) >= 0L &&
-            fl.deleteSeqs.forall(_ <= fl.seqs(i))))
-          removedIdx.map(fr).sum
-        else morPlan(snapBase, removedIdx, mergeSchema = false).count()
-      publishAtBase(base, "delete", FileSet(
-          keptIdx.map(fl.files), sliceStats(fl.stats, keptIdx),
-          keptIdx.map(fl.seqs), fl.deletes, fl.deleteSeqs, fl.deleteKey,
-          keptIdx.map(alignLens(fl.lens, fl.files.length)), fl.deleteLens,
-          keptIdx.map(fr), fl.drows, fl.dmins, fl.dmaxs),
-        snapBase.rows - removedRows, snapBase.schemaJson) match {
-        case Some(v) => return Some(v)
-        case None => attempts += 1 // tip moved: re-classify and retry
+      if (removedIdx.isEmpty) Some(None) // matched nothing: no version
+      else {
+        val keptIdx = classes.indices.filter(classes(_) == 0)
+        require(keptIdx.nonEmpty,
+          s"metadata DELETE at $root would drop every file — re-run " +
+            "(concurrent writer); a full delete takes the row-level path")
+        val fl = fileSetOf(snapBase)
+        // with per-file row counts recorded and NO MOR delete applying to
+        // any dropped file, the exact count is metadata too — this was
+        // the metadata DELETE's one remaining scan
+        val fr = alignLens(fl.frows, fl.files.length)
+        val removedRows =
+          if (removedIdx.forall(i => fr(i) >= 0L &&
+              fl.deleteSeqs.forall(_ <= fl.seqs(i))))
+            removedIdx.map(fr).sum
+          else morPlan(snapBase, removedIdx, mergeSchema = false).count()
+        // a lost race re-classifies on the new tip
+        publishAtBase(base, "delete", keeping(fl, keptIdx),
+          snapBase.rows - removedRows, snapBase.schemaJson).map(Some(_))
       }
     }
-    sys.error(s"commitDeleteByBands at $root: gave up after $attempts conflicts")
   }
 
   // ----- table-properties sidecar ----------------------------------
@@ -3781,10 +3636,8 @@ class SnapshotTable(spark: SparkSession, root: String,
     * range-sort on A alone leaves a filter on B reading every file).
     * Z-order contract matches Layout's: non-negative integral columns,
     * quantize continuous domains first. */
-  def compact(targetRowsPerFile: Long, clusterByCols: Seq[String]): Long = {
-    var attempts = 0
-    while (attempts < 50) {
-      val base = latestVersion()
+  def compact(targetRowsPerFile: Long, clusterByCols: Seq[String]): Long =
+    commitLoop("compact") { base =>
       require(base > 0, s"nothing to compact at $root")
       val snapBase = snapshot(base)
       val cur = read(base)
@@ -3809,39 +3662,11 @@ class SnapshotTable(spark: SparkSession, root: String,
       // stale compacted content and erase a concurrent commit's rows —
       // worse here, tagged dataChange=false so no feed ever corrects it.
       val (raw, rows) = writeDataFiles(arranged, BandKeys.CurrentBandsV)
-      val fls = raw.copy(seqs = Seq.fill(raw.files.length)(base + 1))
-      publishAtBase(base, "compact", fls, rows, snapBase.schemaJson,
-        dataChange = false,
-        bandsVOverride = Some(BandKeys.CurrentBandsV)) match {
-        case Some(v) => return v
-        case None => // lost the race: drop this attempt's files, re-read tip
-          raw.files.map(_.split('/').head).distinct.foreach(uuid =>
-            fs.delete(new Path(dataDir, uuid), true))
-          attempts += 1
-      }
+      publishAtBase(base, "compact", raw.copy(seqs = Seq.fill(raw.files.length)(base + 1)),
+        rows, snapBase.schemaJson, dataChange = false,
+        bandsVOverride = Some(BandKeys.CurrentBandsV), written = raw.files)
     }
-    sys.error(s"compact at $root: gave up after $attempts conflicts")
-  }
 
-  /** SELECTIVE small-file compaction — the maintenance op that survives
-    * 100 TB: [[compact]] rewrites the whole table (right for layout
-    * changes and the band upgrade, impossible as routine upkeep), this
-    * rewrites ONLY the files whose manifest-recorded length is under
-    * `minFileBytes` (zero filesystem calls to decide — the manifest IS
-    * the listing) and re-lists every other file untouched BY IDENTITY.
-    * A streaming sink's small-file debris folds away at O(debris), not
-    * O(table).
-    *
-    * The rewritten subset is read THROUGH any MOR deletes (absorbing
-    * them for those files only — the replacement files take sequence
-    * `base + 1`, newer than every delete, while kept files keep their
-    * sequences so the retained delete files still apply to them).
-    * Output sizing comes from the known byte total:
-    * ceil(Σ small bytes / targetFileBytes) files. Published
-    * `dataChange=false` (same contents — feeds skip it); bandsV is
-    * INHERITED, never upgraded (a partial rewrite must not mix key
-    * spaces — only the full [[compact]] may migrate). Returns the new
-    * version, or the tip when fewer than two files qualify. */
   /** BAND-SCOPED compaction — Delta's `OPTIMIZE WHERE` shape: rewrite
     * ONLY the files whose `column` band overlaps `[lo, hi]` (band keys,
     * [[BandKeys]] semantics), range-clustered on that column, and
@@ -3863,9 +3688,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     val ci = statsCols.indexOf(column)
     require(ci >= 0,
       s"compactRange on $root: '$column' is not a stats column (${statsCols.mkString(",")})")
-    var attempts = 0
-    while (attempts < 50) {
-      val base = latestVersion()
+    commitLoop("compactRange") { base =>
       require(base > 0, s"nothing to compact at $root")
       val snapBase = snapshot(base)
       val fl = fileSetOf(snapBase)
@@ -3874,47 +3697,48 @@ class SnapshotTable(spark: SparkSession, root: String,
       // (they may hold in-range rows, so they join the rewrite)
       val hotIdx = fl.files.indices
         .filter(i => cs.maxs(i) >= lo && cs.mins(i) <= hi)
-      if (hotIdx.length <= 1) return base
-      val hot = hotIdx.toSet
-      val keptIdx = fl.files.indices.filterNot(hot.contains)
-      val fr = alignLens(fl.frows, fl.files.length)
-      val hotRows =
-        if (hotIdx.forall(fr(_) >= 0L)) hotIdx.map(fr).sum
-        else morPlan(snapBase, hotIdx, mergeSchema = false).count()
-      val n = math.max(1L,
-        (hotRows + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-      val src = morPlan(snapBase, hotIdx, mergeSchema = false)
-      val (raw, _) = writeDataFiles(
-        src.repartitionByRange(n, bandKeyCol(src, column, snapBase.bandsV)))
-      val fls = FileSet(
-        files = keptIdx.map(fl.files) ++ raw.files,
-        stats = concatStats(sliceStats(fl.stats, keptIdx), raw.stats),
-        seqs = keptIdx.map(fl.seqs) ++ Seq.fill(raw.files.length)(base + 1),
-        deletes = fl.deletes, deleteSeqs = fl.deleteSeqs,
-        deleteKey = fl.deleteKey,
-        lens = keptIdx.map(alignLens(fl.lens, fl.files.length)) ++
-          alignLens(raw.lens, raw.files.length),
-        deleteLens = fl.deleteLens,
-        frows = keptIdx.map(fr) ++ alignLens(raw.frows, raw.files.length),
-        drows = fl.drows, dmins = fl.dmins, dmaxs = fl.dmaxs)
-      publishAtBase(base, "compact", fls, snapBase.rows, snapBase.schemaJson,
-        dataChange = false) match {
-        case Some(v) => return v
-        case None => // lost the race: drop this attempt's files, re-read tip
-          raw.files.map(_.split('/').head).distinct.foreach(uuid =>
-            fs.delete(new Path(dataDir, uuid), true))
-          attempts += 1
+      if (hotIdx.length <= 1) Some(base)
+      else {
+        val hot = hotIdx.toSet
+        val keptIdx = fl.files.indices.filterNot(hot.contains)
+        val fr = alignLens(fl.frows, fl.files.length)
+        val hotRows =
+          if (hotIdx.forall(fr(_) >= 0L)) hotIdx.map(fr).sum
+          else morPlan(snapBase, hotIdx, mergeSchema = false).count()
+        val n = math.max(1L,
+          (hotRows + targetRowsPerFile - 1) / targetRowsPerFile).toInt
+        val src = morPlan(snapBase, hotIdx, mergeSchema = false)
+        val (raw, _) = writeDataFiles(
+          src.repartitionByRange(n, bandKeyCol(src, column, snapBase.bandsV)))
+        publishAtBase(base, "compact", spliced(keeping(fl, keptIdx), raw, base + 1),
+          snapBase.rows, snapBase.schemaJson, dataChange = false, written = raw.files)
       }
     }
-    sys.error(s"compactRange at $root: gave up after $attempts conflicts")
   }
 
+  /** SELECTIVE small-file compaction — the maintenance op that survives
+    * 100 TB: [[compact]] rewrites the whole table (right for layout
+    * changes and the band upgrade, impossible as routine upkeep), this
+    * rewrites ONLY the files whose manifest-recorded length is under
+    * `minFileBytes` (zero filesystem calls to decide — the manifest IS
+    * the listing) and re-lists every other file untouched BY IDENTITY.
+    * A streaming sink's small-file debris folds away at O(debris), not
+    * O(table).
+    *
+    * The rewritten subset is read THROUGH any MOR deletes (absorbing
+    * them for those files only — the replacement files take sequence
+    * `base + 1`, newer than every delete, while kept files keep their
+    * sequences so the retained delete files still apply to them).
+    * Output sizing comes from the known byte total:
+    * ceil(Σ small bytes / targetFileBytes) files. Published
+    * `dataChange=false` (same contents — feeds skip it); bandsV is
+    * INHERITED, never upgraded (a partial rewrite must not mix key
+    * spaces — only the full [[compact]] may migrate). Returns the new
+    * version, or the tip when fewer than two files qualify. */
   def compactFiles(minFileBytes: Long, targetFileBytes: Long): Long = {
     require(minFileBytes > 0 && targetFileBytes > 0,
       s"compactFiles needs positive thresholds; got ($minFileBytes, $targetFileBytes)")
-    var attempts = 0
-    while (attempts < 50) {
-      val base = latestVersion()
+    commitLoop("compactFiles") { base =>
       require(base > 0, s"nothing to compact at $root")
       val snapBase = snapshot(base)
       val fl = fileSetOf(snapBase)
@@ -3923,35 +3747,19 @@ class SnapshotTable(spark: SparkSession, root: String,
       // they stay kept — conservative, and the next commit records them
       val smallIdx = fl.files.indices
         .filter(i => lens(i) >= 0L && lens(i) < minFileBytes)
-      if (smallIdx.length <= 1) return base
-      val small = smallIdx.toSet // O(1) membership — file lists reach 10^5
-      val keptIdx = fl.files.indices.filterNot(small.contains)
-      val smallBytes = smallIdx.map(lens).sum
-      val n = math.max(1L, (smallBytes + targetFileBytes - 1) / targetFileBytes).toInt
-      val (raw, _) =
-        writeDataFiles(morPlan(snapBase, smallIdx, mergeSchema = false)
-          .repartition(n))
-      val fls = FileSet(
-        files = keptIdx.map(fl.files) ++ raw.files,
-        stats = concatStats(sliceStats(fl.stats, keptIdx), raw.stats),
-        seqs = keptIdx.map(fl.seqs) ++ Seq.fill(raw.files.length)(base + 1),
-        deletes = fl.deletes, deleteSeqs = fl.deleteSeqs,
-        deleteKey = fl.deleteKey,
-        lens = keptIdx.map(lens) ++ alignLens(raw.lens, raw.files.length),
-        deleteLens = fl.deleteLens,
-        frows = keptIdx.map(alignLens(fl.frows, fl.files.length)) ++
-          alignLens(raw.frows, raw.files.length),
-        drows = fl.drows, dmins = fl.dmins, dmaxs = fl.dmaxs)
-      publishAtBase(base, "compact", fls, snapBase.rows, snapBase.schemaJson,
-        dataChange = false) match {
-        case Some(v) => return v
-        case None => // lost the race: drop this attempt's files, re-read tip
-          raw.files.map(_.split('/').head).distinct.foreach(uuid =>
-            fs.delete(new Path(dataDir, uuid), true))
-          attempts += 1
+      if (smallIdx.length <= 1) Some(base)
+      else {
+        val small = smallIdx.toSet // O(1) membership — file lists reach 10^5
+        val keptIdx = fl.files.indices.filterNot(small.contains)
+        val smallBytes = smallIdx.map(lens).sum
+        val n = math.max(1L, (smallBytes + targetFileBytes - 1) / targetFileBytes).toInt
+        val (raw, _) =
+          writeDataFiles(morPlan(snapBase, smallIdx, mergeSchema = false)
+            .repartition(n))
+        publishAtBase(base, "compact", spliced(keeping(fl, keptIdx), raw, base + 1),
+          snapBase.rows, snapBase.schemaJson, dataChange = false, written = raw.files)
       }
     }
-    sys.error(s"compactFiles at $root: gave up after $attempts conflicts")
   }
 
   /** MINOR compaction: fold the accumulated merge-on-read delete files
@@ -3976,65 +3784,57 @@ class SnapshotTable(spark: SparkSession, root: String,
     * unchanged when there is nothing to fold. */
   def compactDeletes(): Long = {
     import org.apache.spark.sql.functions.col
-    var attempts = 0
-    while (attempts < 50) {
-      val base = latestVersion()
+    commitLoop("compactDeletes") { base =>
       require(base > 0, s"nothing to compact at $root")
       val snapBase = snapshot(base)
       val fl = fileSetOf(snapBase)
-      if (fl.deletes.length <= 1) return base
-      val dataSeqs = fl.seqs.distinct.sorted
+      lazy val dataSeqs = fl.seqs.distinct.sorted
       def cut(s: Long): Int = dataSeqs.count(_ < s)
-      val classes = fl.deletes.indices.groupBy(i => cut(fl.deleteSeqs(i)))
-      if (classes.values.forall(_.length <= 1)) return base
-      val delLens = alignLens(fl.deleteLens, fl.deletes.length)
-      // fold each multi-file class into one file; single-member classes
-      // carry forward by identity (no I/O for them). The folded file's
-      // key count / band come from the writer's stats pass; a folded
-      // drows (distinct keys across the class) stays an upper bound on
-      // the rows the class removes.
-      case class DelEntry(file: String, seq: Long, len: Long, rows: Long,
-                          bmin: Long, bmax: Long)
-      val folded: Seq[Seq[DelEntry]] =
-        classes.toSeq.sortBy(_._1).map { case (_, idxs) =>
-          if (idxs.length == 1) {
-            val i = idxs.head
-            Seq(DelEntry(fl.deletes(i), fl.deleteSeqs(i), delLens(i),
-              fl.drows(i), fl.dmins(i), fl.dmaxs(i)))
-          } else {
-            val keys = spark.read.parquet(
-                idxs.map(i => new Path(dataDir, fl.deletes(i)).toString): _*)
-              .select(fl.deleteKey.map(col): _*)
-              .distinct() // equality deletes are sets — duplicates collapse
-              .coalesce(1) // one file per class IS the point
-            val (kf, _) = writeDataFiles(keys)
-            val seq = idxs.map(fl.deleteSeqs).min
-            val (bmins, bmaxs) = deleteKeyBands(fl.deleteKey, kf)
-            val lens = alignLens(kf.lens, kf.files.length)
-            val rows = alignLens(kf.frows, kf.files.length)
-            kf.files.indices.map(j =>
-              DelEntry(kf.files(j), seq, lens(j), rows(j), bmins(j), bmaxs(j)))
+      lazy val classes = fl.deletes.indices.groupBy(i => cut(fl.deleteSeqs(i)))
+      if (fl.deletes.length <= 1 || classes.values.forall(_.length <= 1))
+        Some(base) // nothing to fold
+      else {
+        val delLens = alignLens(fl.deleteLens, fl.deletes.length)
+        // fold each multi-file class into one file; single-member classes
+        // carry forward by identity (no I/O for them). The folded file's
+        // key count / band come from the writer's stats pass; a folded
+        // drows (distinct keys across the class) stays an upper bound on
+        // the rows the class removes.
+        case class DelEntry(file: String, seq: Long, len: Long, rows: Long,
+                            bmin: Long, bmax: Long)
+        val folded: Seq[Seq[DelEntry]] =
+          classes.toSeq.sortBy(_._1).map { case (_, idxs) =>
+            if (idxs.length == 1) {
+              val i = idxs.head
+              Seq(DelEntry(fl.deletes(i), fl.deleteSeqs(i), delLens(i),
+                fl.drows(i), fl.dmins(i), fl.dmaxs(i)))
+            } else {
+              val keys = spark.read.parquet(
+                  idxs.map(i => new Path(dataDir, fl.deletes(i)).toString): _*)
+                .select(fl.deleteKey.map(col): _*)
+                .distinct() // equality deletes are sets — duplicates collapse
+                .coalesce(1) // one file per class IS the point
+              val (kf, _) = writeDataFiles(keys)
+              val seq = idxs.map(fl.deleteSeqs).min
+              val (bmins, bmaxs) = deleteKeyBands(fl.deleteKey, kf)
+              val lens = alignLens(kf.lens, kf.files.length)
+              val rows = alignLens(kf.frows, kf.files.length)
+              kf.files.indices.map(j =>
+                DelEntry(kf.files(j), seq, lens(j), rows(j), bmins(j), bmaxs(j)))
+            }
           }
-        }
-      val entries = folded.flatten
-      val fls = fl.copy(
-        deletes = entries.map(_.file),
-        deleteSeqs = entries.map(_.seq),
-        deleteLens = entries.map(_.len),
-        drows = entries.map(_.rows),
-        dmins = entries.map(_.bmin),
-        dmaxs = entries.map(_.bmax))
-      publishAtBase(base, "compact_deletes", fls, snapBase.rows,
-        snapBase.schemaJson, dataChange = false) match {
-        case Some(v) => return v
-        case None => // lost the race: drop this attempt's folded files
-          entries.map(_.file).filterNot(fl.deletes.contains)
-            .map(_.split('/').head).distinct
-            .foreach(uuid => fs.delete(new Path(dataDir, uuid), true))
-          attempts += 1
+        val entries = folded.flatten
+        publishAtBase(base, "compact_deletes", fl.copy(
+            deletes = entries.map(_.file),
+            deleteSeqs = entries.map(_.seq),
+            deleteLens = entries.map(_.len),
+            drows = entries.map(_.rows),
+            dmins = entries.map(_.bmin),
+            dmaxs = entries.map(_.bmax)),
+          snapBase.rows, snapBase.schemaJson, dataChange = false,
+          written = entries.map(_.file).filterNot(fl.deletes.contains))
       }
     }
-    sys.error(s"compactDeletes at $root: gave up after $attempts conflicts")
   }
 
   /** ONE maintenance step chosen by POLICY from the manifest's debris
@@ -4704,10 +4504,8 @@ class SnapshotTable(spark: SparkSession, root: String,
     *    consumers from the repaired snapshot. Streaming reads fail
     *    loudly at it like any non-append change. */
   def repairTable(dryRun: Boolean = true,
-                  dropDeletes: Boolean = false): TableRepairReport = {
-    var attempts = 0
-    while (attempts < 50) {
-      val base = latestVersion()
+                  dropDeletes: Boolean = false): TableRepairReport =
+    commitLoop("repairTable") { base =>
       require(base > 0, s"no committed snapshot to repair at $root")
       val s = snapshot(base)
       val fl = fileSetOf(s)
@@ -4719,65 +4517,55 @@ class SnapshotTable(spark: SparkSession, root: String,
       val badDelIdx =
         fl.deletes.indices.filter(j => probed.contains(fl.deletes(j)))
       if (badIdx.isEmpty && badDelIdx.isEmpty)
-        return TableRepairReport(base, Seq.empty, Seq.empty, s.rows, s.rows, None)
-      require(badDelIdx.isEmpty || dropDeletes,
-        s"repair at $root: damaged delete files " +
-          s"(${badDelIdx.map(fl.deletes).mkString(", ")}) — dropping one " +
-          "RESURRECTS the rows it deleted; pass dropDeletes=true to accept")
-      val keptIdx = fl.files.indices.filterNot(badIdx.toSet)
-      require(keptIdx.nonEmpty,
-        s"repair at $root would drop every data file — restore from a " +
-          "backup/clone instead")
-      val keptDelIdx = fl.deletes.indices.filterNot(badDelIdx.toSet)
-      val fr = alignLens(fl.frows, fl.files.length)
-      // exact from metadata when provable: counts recorded and no MOR
-      // delete outsequences any dropped file (none of its rows were
-      // already dead) and no delete file is being dropped (nothing
-      // resurrects)
-      val cheap = badDelIdx.isEmpty && badIdx.forall(i => fr(i) >= 0L &&
-        fl.deleteSeqs.forall(_ <= fl.seqs(i)))
-      if (dryRun)
-        return TableRepairReport(base, badIdx.map(fl.files),
-          badDelIdx.map(fl.deletes), s.rows,
-          if (cheap) s.rows - badIdx.map(fr).sum else -1L, None)
-      val rowsAfter =
-        if (cheap) s.rows - badIdx.map(fr).sum
+        Some(TableRepairReport(base, Seq.empty, Seq.empty, s.rows, s.rows, None))
+      else {
+        require(badDelIdx.isEmpty || dropDeletes,
+          s"repair at $root: damaged delete files " +
+            s"(${badDelIdx.map(fl.deletes).mkString(", ")}) — dropping one " +
+            "RESURRECTS the rows it deleted; pass dropDeletes=true to accept")
+        val keptIdx = fl.files.indices.filterNot(badIdx.toSet)
+        require(keptIdx.nonEmpty,
+          s"repair at $root would drop every data file — restore from a " +
+            "backup/clone instead")
+        val keptDelIdx = fl.deletes.indices.filterNot(badDelIdx.toSet)
+        val fr = alignLens(fl.frows, fl.files.length)
+        // exact from metadata when provable: counts recorded and no MOR
+        // delete outsequences any dropped file (none of its rows were
+        // already dead) and no delete file is being dropped (nothing
+        // resurrects)
+        val cheap = badDelIdx.isEmpty && badIdx.forall(i => fr(i) >= 0L &&
+          fl.deleteSeqs.forall(_ <= fl.seqs(i)))
+        def report(rowsAfter: Long, committed: Option[Long]) =
+          TableRepairReport(base, badIdx.map(fl.files),
+            badDelIdx.map(fl.deletes), s.rows, rowsAfter, committed)
+        if (dryRun) Some(report(if (cheap) s.rows - badIdx.map(fr).sum else -1L, None))
         else {
-          // the repaired content as an in-memory snapshot view: kept
-          // data files, surviving deletes, groups already resolved —
-          // one recount plan that never touches a damaged file
-          val s2 = s.copy(
-            files = keptIdx.map(fl.files),
-            statsCols = statsCols,
-            stats = sliceStats(fl.stats, keptIdx),
-            seqs = keptIdx.map(fl.seqs),
+          // the repaired content: kept data files, surviving deletes
+          val kept = keeping(fl, keptIdx).copy(
             deletes = keptDelIdx.map(fl.deletes),
             deleteSeqs = keptDelIdx.map(fl.deleteSeqs),
-            lens = keptIdx.map(lens),
-            deleteLens = keptDelIdx.map(dlens),
-            frows = keptIdx.map(fr),
-            drows = keptDelIdx.map(fl.drows),
-            dmins = keptDelIdx.map(fl.dmins),
-            dmaxs = keptDelIdx.map(fl.dmaxs),
-            groupRefs = Seq.empty, groupedCount = 0)
-          morPlan(s2, s2.files.indices, mergeSchema = false).count()
+            deleteLens = keptDelIdx.map(dlens), drows = keptDelIdx.map(fl.drows),
+            dmins = keptDelIdx.map(fl.dmins), dmaxs = keptDelIdx.map(fl.dmaxs))
+          val rowsAfter =
+            if (cheap) s.rows - badIdx.map(fr).sum
+            else {
+              // the repaired content as an in-memory snapshot view, groups
+              // already resolved — one recount plan that never touches a
+              // damaged file
+              val s2 = s.copy(files = kept.files, statsCols = statsCols,
+                stats = kept.stats, seqs = kept.seqs, deletes = kept.deletes,
+                deleteSeqs = kept.deleteSeqs, lens = kept.lens,
+                deleteLens = kept.deleteLens, frows = kept.frows,
+                drows = kept.drows, dmins = kept.dmins, dmaxs = kept.dmaxs,
+                groupRefs = Seq.empty, groupedCount = 0)
+              morPlan(s2, s2.files.indices, mergeSchema = false).count()
+            }
+          // a lost race re-probes on the new tip
+          publishAtBase(base, "repair", kept, rowsAfter, s.schemaJson)
+            .map(v => report(rowsAfter, Some(v)))
         }
-      publishAtBase(base, "repair", FileSet(
-          keptIdx.map(fl.files), sliceStats(fl.stats, keptIdx),
-          keptIdx.map(fl.seqs), keptDelIdx.map(fl.deletes),
-          keptDelIdx.map(fl.deleteSeqs), fl.deleteKey,
-          keptIdx.map(lens), keptDelIdx.map(dlens),
-          keptIdx.map(fr), keptDelIdx.map(fl.drows),
-          keptDelIdx.map(fl.dmins), keptDelIdx.map(fl.dmaxs)),
-        rowsAfter, s.schemaJson) match {
-        case Some(v) =>
-          return TableRepairReport(base, badIdx.map(fl.files),
-            badDelIdx.map(fl.deletes), s.rows, rowsAfter, Some(v))
-        case None => attempts += 1 // tip moved: re-probe and retry
       }
     }
-    sys.error(s"repairTable at $root: gave up after $attempts conflicts")
-  }
 
   /** All RETAINED snapshots, oldest first (the table's audit history;
     * [[vacuum]] may have dropped a prefix). Inherently O(retained

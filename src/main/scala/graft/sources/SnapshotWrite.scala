@@ -94,9 +94,10 @@ object SnapshotWrite {
   /** Post-DML auto-maintenance (`write.delete.compact.at = N`): once the
     * tip carries >= N delete files, fold them ([[SnapshotTable
     * .compactDeletes]]). Runs AFTER the statement's commit published —
-    * the DML has succeeded, so a maintenance failure (e.g. a lost fold
-    * race after 50 retries) is reported, never propagated: failing a
-    * committed statement over its housekeeping would be a lie. */
+    * the DML has succeeded, so a maintenance failure (e.g. the fold
+    * giving up after 50 conflicts) is reported, never propagated:
+    * failing a committed statement over its housekeeping would be a
+    * lie. */
   private[sources] def maybeAutoCompactDeletes(table: SnapshotTable,
                                                threshold: Option[Int]): Unit =
     threshold.foreach { n =>

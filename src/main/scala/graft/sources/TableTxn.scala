@@ -128,24 +128,13 @@ class TableTransactions(spark: SparkSession, root: String,
     * manifests: the exclusive publish stages the full body before the
     * atomic link/rename, but a bounded retry keeps a progressive-
     * visibility store from raising spuriously. */
-  def manifest(txn: Long): TxnManifest = {
-    var delayMs = 2L
-    var last: Throwable = null
-    var attempt = 0
-    while (attempt < 10) {
-      val p = txnPath(txn)
-      val in = fs.open(p)
+  def manifest(txn: Long): TxnManifest =
+    SnapshotLogStore.readRetrying(s"corrupt transaction manifest ${txnPath(txn)}") {
+      val in = fs.open(txnPath(txn))
       val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
                 finally in.close()
-      try return parseTxnText(txt)
-      catch { case scala.util.control.NonFatal(e) =>
-        last = e; Thread.sleep(delayMs); delayMs = math.min(delayMs * 2, 256L)
-      }
-      attempt += 1
+      parseTxnText(txt)
     }
-    throw new IllegalStateException(
-      s"corrupt transaction manifest ${txnPath(txn)}", last)
-  }
 
   /** The consistent cut: every published table's pinned version as of
     * the latest transaction (empty before the first). ONE manifest
@@ -179,42 +168,33 @@ class TableTransactions(spark: SparkSession, root: String,
     updates.values.foreach(v => require(v > 0,
       s"cannot pin version $v — versions start at 1"))
     val touched = updates.keySet ++ drop
-    var attempts = 0
-    var base = latestTxn()
-    var baseTables = if (base == 0) Map.empty[String, Long]
-                     else manifest(base).tables
-    while (attempts < 50) {
+    // the published map the previous attempt built on (None on the first)
+    var prior: Option[Map[String, Long]] = None
+    SnapshotLogStore.commitLoop(s"transaction publish at $root", () => latestTxn()) { base =>
+      val baseTables = if (base == 0) Map.empty[String, Long]
+                       else manifest(base).tables
+      // lost the CAS: rebase iff every racer touched only OTHER tables
+      val moved = prior.toSeq.flatMap(p => touched.filter(t => p.get(t) != baseTables.get(t)))
+      if (moved.nonEmpty)
+        throw new ConcurrentTxnException(
+          s"transaction lost race at $root: table(s) " +
+            s"${moved.sorted.mkString(", ")} moved by a " +
+            "concurrent transaction — re-stage against the new " +
+            "published state")
+      prior = Some(baseTables)
       val next = base + 1
-      val tables = (baseTables -- drop) ++ updates
-      val body = txnBody(next, base, action, tables,
+      val body = txnBody(next, base, action, (baseTables -- drop) ++ updates,
         touched.toSeq.sorted)
       if (!fs.exists(txnDir)) fs.mkdirs(txnDir)
       try {
         store.writeExclusive(fs, txnPath(next), body.getBytes("UTF-8"))
         writeTipHint(next)
-        return next
+        Some(next)
       } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-             _: java.nio.file.FileAlreadyExistsException =>
-          // lost the CAS: rebase iff every racer touched only OTHER tables
-          val newTip = latestTxn()
-          val newTables = if (newTip == 0) Map.empty[String, Long]
-                          else manifest(newTip).tables
-          val moved = touched.filter { t =>
-            baseTables.get(t) != newTables.get(t)
-          }
-          if (moved.nonEmpty)
-            throw new ConcurrentTxnException(
-              s"transaction lost race at $root: table(s) " +
-                s"${moved.toSeq.sorted.mkString(", ")} moved by a " +
-                "concurrent transaction — re-stage against the new " +
-                "published state")
-          base = newTip; baseTables = newTables
+        case e: java.io.IOException
+            if SnapshotLogStore.isCollision(fs, txnPath(next), e) => None
       }
-      attempts += 1
     }
-    throw new IllegalStateException(
-      s"transaction publish at $root exhausted $attempts rebase attempts")
   }
 
   /** Blue-green promote with validation and all-or-nothing rollback:

@@ -115,6 +115,50 @@ class TableTxnSpec extends SparkSpec {
       "the racing winner's pin must survive the conflict")
   }
 
+  /** A remote conditional-PUT store's lost election: a plain IOException
+    * carrying the HTTP 412, with the winner's object visible — none of
+    * the FileAlreadyExists types. Counts the rejections. */
+  private class S3Style412LogStore extends SnapshotLogStore {
+    val rejections = new java.util.concurrent.atomic.AtomicInteger
+    private val lock = new Object
+    override def writeExclusive(fs: FileSystem, path: Path,
+                                body: Array[Byte]): Unit = lock.synchronized {
+      if (fs.exists(path)) {
+        rejections.incrementAndGet()
+        throw new java.io.IOException(
+          s"PUT $path: 412 Precondition Failed (If-None-Match: *)")
+      }
+      val out = fs.create(path, true)
+      try out.write(body) finally out.close()
+    }
+  }
+
+  test("a remote 412 rejection is a lost race: disjoint racers rebase, same-table racers conflict") {
+    val root = freshRoot("s3put")
+    val (tx, a, b, _) = dims(root)
+    val va = a.commitAppend(Seq((1L, "tv")).toDF("id", "name"))
+    val vb = b.commitAppend(Seq((1L, "soap")).toDF("id", "name"))
+    val store = new S3Style412LogStore
+    val racer = new TableTransactions(spark, root, Some(store))
+    val disjoint = new TableTransactions(spark, root,
+      Some(new RaceOnFirstWrite(store, () => racer.commit(Map("dim_channel" -> va)))))
+    assert(disjoint.commit(Map("dim_product" -> vb)) == 2L,
+      "the 412 loser must rebase to the next number")
+    assert(store.rejections.get() == 1)
+    assert(tx.published() == Map("dim_channel" -> va, "dim_product" -> vb))
+
+    val va2 = a.commitAppend(Seq((2L, "radio")).toDF("id", "name"))
+    val overlapping = new TableTransactions(spark, root,
+      Some(new RaceOnFirstWrite(store, () => racer.commit(Map("dim_channel" -> va2)))))
+    val e = intercept[ConcurrentTxnException] {
+      overlapping.commit(Map("dim_channel" -> va))
+    }
+    assert(e.getMessage.contains("dim_channel"))
+    assert(store.rejections.get() == 2)
+    assert(tx.published() == Map("dim_channel" -> va2, "dim_product" -> vb),
+      "the racing winner's pin must survive the conflict")
+  }
+
   test("promoteAll: failed validation rolls back ALL tables in one transaction, unpinning first-time publishes") {
     val root = freshRoot("rollback")
     val (tx, a, b, c) = dims(root)
