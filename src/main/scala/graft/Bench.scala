@@ -11,7 +11,9 @@ import org.apache.spark.sql.SparkSession
   *   - then THREE timed runs per query, reporting the MEDIAN — one noise
   *     spike cannot corrupt a reported number;
   *   - per-query seconds rounded to 2 decimals so the whole JSON line stays
-  *     under ~1.9 KB (downstream log capture keeps only a 2000-char tail).
+  *     under ~1.9 KB (downstream log capture keeps only a 2000-char tail);
+  *   - a query that throws in a timed run is listed in `failed` instead of
+  *     timed, and the bench exits 1.
   */
 object Bench {
   private val TimedRuns = 3
@@ -114,14 +116,21 @@ object Bench {
     }
     spark.sparkContext.addSparkListener(shf)
     val shfStart = (shf.read.get, shf.write.get, shf.spill.get)
-    val results = selected.map { case (name, fn) =>
+    // A query whose timed run throws is FAILED, not fast: it gets no
+    // seconds, stays out of `total`, is named in `failed`, and the bench
+    // exits non-zero (the seconds until a throw time nothing).
+    val timed = selected.toSeq.map { case (name, fn) =>
       val runs = (1 to TimedRuns).map { i =>
         val t0 = System.nanoTime(); val g0 = gcMillis; val s0 = shf.write.get
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        val ok = try { fn(spark, sfDir).count(); true } catch {
+          case e: Throwable =>
+            System.err.println(s"[bench] $name run$i FAILED: $e")
+            false
+        }
         val sec = (System.nanoTime() - t0) / 1e9
         System.err.println(f"[bench] $name%-28s run$i ${sec}%8.2f s  gc=${gcMillis - g0} ms  shfw=${(shf.write.get - s0) / 1048576}%4d MB")
-        sec
-      }.sorted
+        (sec, ok)
+      }
       // run1 rebuilds this query's scoped caches (released below), runs
       // 2-3 hit them warm — the MEDIAN still reports steady state
       QueryCaches.releaseAll()
@@ -129,8 +138,11 @@ object Bench {
       // this query's dead shuffle files/broadcasts before the next one
       // is timed (see the periodicGC comment above).
       System.gc()
-      name -> runs(TimedRuns / 2) // median
+      name -> (if (runs.forall(_._2)) Some(runs.map(_._1).sorted.apply(TimedRuns / 2)) // median
+               else None)
     }
+    val results = timed.collect { case (name, Some(sec)) => name -> sec }.toMap
+    val failed = timed.collect { case (name, None) => name }
     // Locale.ROOT: the f-interpolator honors the JVM default locale, and a
     // comma-decimal locale would render 45,23 — invalid JSON
     def fmt(d: Double): String =
@@ -161,8 +173,10 @@ object Bench {
       .map(_.group(1))
       .getOrElse("\"" + sfDir.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
     val mb = (b: Long) => b / 1048576
+    val failedJson = failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")
     val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,""" +
-      s""""n_queries":${results.size},"n_omitted":${omitted.size},""" +
+      s""""n_queries":${selected.size},"n_omitted":${omitted.size},""" +
+      s""""failed":$failedJson,""" +
       s""""omitted_sum":${fmt(omitted.map(_._2).sum)},""" +
       s""""shuffle_read_mb":${mb(shf.read.get - shfStart._1)},""" +
       s""""shuffle_write_mb":${mb(shf.write.get - shfStart._2)},""" +
@@ -177,5 +191,6 @@ object Bench {
     Thread.sleep(100)
     println(line)
     System.out.flush()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -2,10 +2,10 @@ package graft.sources
 
 /** The ONE mapping from typed column values to the manifest's LONG
   * stats bands, shared by every producer and consumer so they can never
-  * disagree: the executor-side parquet writers fold these keys inline
-  * ([[SnapshotParquetWriter]]), the Scala commit path derives them from
-  * native min/max aggregates ([[SnapshotTable]]'s writeDataFiles), and
-  * the read side turns pushed filter literals into [lo, hi] bands
+  * disagree: the one parquet writer folds these keys inline for every
+  * commit path ([[SnapshotParquetWriter]]), row-level rewrites filter
+  * on the same key as a native column ([[SnapshotTable.bandKeyCol]]),
+  * and the read side turns pushed filter literals into [lo, hi] bands
   * ([[SnapshotBatch.bandOf]]).
   *
   * Band semantics per type (`exact` = the key function is INJECTIVE and

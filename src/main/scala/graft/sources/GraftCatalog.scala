@@ -278,11 +278,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // bootstrap version: dataChange=false — an empty create delivers
     // nothing, so feeds and streams start cleanly from it
     t.commitWrittenOverwrite(Seq(s"$uuid/${msg.file}"),
-      statsCols.indices.map(c =>
-        ColStats(Seq(msg.mins(c)), Seq(msg.maxs(c)), Seq(msg.nulls(c)),
-          Seq(msg.tminsOr(statsCols.length)(c)), Seq(msg.tmaxsOr(statsCols.length)(c)),
-          Seq(msg.bloomsOr(statsCols.length)(c)))),
-      0L, schema, dataChange = false, frows = Seq(0L))
+      SnapshotWrite.colStats(Seq(msg), statsCols.length), 0L, schema,
+      dataChange = false, frows = Seq(0L))
     // persist user TBLPROPERTIES (config sidecar) — minus the keys Spark
     // injects and stats_cols, which lives in the manifests themselves
     if (userProps.nonEmpty) t.setTableProperties(userProps)

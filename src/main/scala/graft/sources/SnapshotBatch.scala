@@ -468,11 +468,8 @@ class GraftSnapshotBatchTable(spark: SparkSession, root: String,
       spark.sparkContext.hadoopConfiguration, bandsV = table.tableBandsV)
     val msg = w.commit().asInstanceOf[SnapshotWriteMessage]
     table.commitWrittenOverwrite(Seq(s"$uuid/${msg.file}"),
-      statsCols.indices.map(c =>
-        ColStats(Seq(msg.mins(c)), Seq(msg.maxs(c)), Seq(msg.nulls(c)),
-          Seq(msg.tminsOr(statsCols.length)(c)), Seq(msg.tmaxsOr(statsCols.length)(c)),
-          Seq(msg.bloomsOr(statsCols.length)(c)))),
-      0L, tableSchema, frows = Seq(0L))
+      SnapshotWrite.colStats(Seq(msg), statsCols.length), 0L, tableSchema,
+      frows = Seq(0L))
     true
   }
 }

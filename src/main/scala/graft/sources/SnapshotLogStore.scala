@@ -105,11 +105,13 @@ object SnapshotLogStore {
     * transaction log): run `attempt` on a base — `first` when given, else
     * a fresh `tip()`, and a fresh `tip()` after every lost race (`None`)
     * — up to 50 times, then raise `IllegalStateException("<op>: gave up
-    * after 50 conflicts")` with the last collision as its cause. No sleep
-    * between attempts: the loser's next base is the winner's published
-    * tip. Anything else the attempt throws propagates at once. */
+    * after 50 conflicts")` with the last collision as its cause, after
+    * running `onGiveUp` (no attempt published). No sleep between
+    * attempts: the loser's next base is the winner's published tip.
+    * Anything else the attempt throws propagates at once. */
   private[sources] def commitLoop[A](op: => String, tip: () => Long,
-                                     first: Option[Long] = None)
+                                     first: Option[Long] = None,
+                                     onGiveUp: () => Unit = () => ())
                                     (attempt: Long => Option[A]): A = {
     lastCollision.remove()
     try {
@@ -121,6 +123,7 @@ object SnapshotLogStore {
           case None => attempts += 1
         }
       }
+      onGiveUp()
       throw new IllegalStateException(
         s"$op: gave up after $attempts conflicts", lastCollision.get)
     } finally lastCollision.remove()

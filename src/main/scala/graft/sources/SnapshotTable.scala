@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
@@ -1085,12 +1085,12 @@ class SnapshotTable(spark: SparkSession, root: String,
     morPlan(snap, snap.files.indices, mergeSchema = true)
   }
 
-  /** Write the batch's data files under a fresh commit dir, return the
-    * manifest-relative file names (+ per-file min/max/null-count for
-    * every stats column the frame carries) + exact row count — all from
-    * the WRITTEN files, not a second scan of the input. Stats cost one
-    * aggregate pass grouped by `input_file_name()` over the freshly
-    * written commit dir only. */
+  /** Write the batch's data files under a fresh commit dir and return
+    * them as a [[FileSet]] (manifest-relative names, lengths, row counts
+    * and every per-file stat the manifest records) plus the exact row
+    * count. One Spark job: [[SnapshotParquetWriter]] folds the stats
+    * while it writes ([[SnapshotWrite.writeFiles]]), over `df`'s own
+    * partitioning. */
   private def writeDataFiles(df: DataFrame): (FileSet, Long) =
     writeDataFiles(df, tableBandsV)
 
@@ -1100,178 +1100,29 @@ class SnapshotTable(spark: SparkSession, root: String,
     * file's stats, so it may re-key them all consistently). */
   private def writeDataFiles(df: DataFrame, bandsV: Int): (FileSet, Long) = {
     val commitId = java.util.UUID.randomUUID().toString
-    val dir = new Path(dataDir, commitId)
-    // column-mapped tables store PHYSICAL names in every data file:
-    // rename on the way in, and read the written files back as logical
-    // for the stats pass (identity on unmapped tables — no plan change)
+    // column-mapped tables store PHYSICAL names in every data file
+    // (identity on unmapped tables — no plan change); files are written
+    // nullable, as df.write.parquet writes them
     val mapping = tipLogicalToPhysical
     val out = ColumnMapping.toPhysical(df, mapping)
-    // the commit-dir listing doubles as the length source: manifests
-    // record each file's byte length so reads never re-stat them
-    def listParts(): Seq[(String, Long)] = fs.listStatus(dir)
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .map(st => (s"$commitId/${st.getPath.getName}", st.getLen)).toSeq
-    out.write.mode(SaveMode.ErrorIfExists).parquet(dir.toString)
-    var partEntries = listParts()
-    if (partEntries.isEmpty) {
-      // zero-task plan (empty batch through AQE can drop every partition):
-      // force one writer task so the commit carries a schema-bearing file —
-      // a file-less manifest would make read() of this version unplannable.
-      fs.delete(dir, true)
-      out.repartition(1).write.mode(SaveMode.ErrorIfExists).parquet(dir.toString)
-      partEntries = listParts()
-    }
-    val parts = partEntries.map(_._1)
-    val writtenPhys = spark.read.parquet(dir.toString)
-    val written =
-      if (mapping.isEmpty) writtenPhys
-      else {
-        val inverse = mapping.map(_.swap)
-        import org.apache.spark.sql.functions.col
-        writtenPhys.select(writtenPhys.columns.toIndexedSeq.map(c =>
-          col(c).as(inverse.getOrElse(c, c))): _*)
-      }
-    // ONE per-file aggregation serves EVERYTHING the manifest records
-    // about the written files — row counts, per-stats-column
-    // min/max/null-count/NDV sketch, and point-lookup blooms — so the
-    // write's read-back costs exactly one job regardless of how many
-    // stats/bloom columns the table declares (this path used to run up
-    // to three read-backs: count, stats, blooms — r20 measurement:
-    // every snapshot commit paid 1-2 avoidable scans of its own
-    // output). Zero-row files simply don't group.
-    import org.apache.spark.sql.functions.input_file_name
-    // stats only for the stats columns the written frame carries
-    // (delete-key files may carry none) — absent stats read as the
-    // never-pruned sentinel, unknown null counts as -1
-    val presentCols = statsCols.filter(written.columns.contains)
-    // per-file point-lookup blooms for the opted columns ride the same
-    // aggregation, ONLY on bloom-opted tables (the DSv2 executor
-    // writers fold theirs inline; this is the driver path)
-    val bloomColsHere = bloomColumns.filter(presentCols.contains)
-    val combined: Array[org.apache.spark.sql.Row] = {
-      import org.apache.spark.sql.functions.{col, count, lit, max, min, sum, when}
-      // native typed MIN/MAX (string min/max IS bytewise-lexicographic,
-      // which BandKeys' prefix key preserves), mapped to band keys
-      // driver-side via the ONE shared BandKeys.valueKey — the same
-      // mapping the executor writers fold inline and the read side
-      // applies to filter literals, so the three can never disagree.
-      // Unmapped types (double, decimal, …) fold to the unknown
-      // sentinel: never pruned, conservatively correct.
-      // the NDV sketch rides the SAME aggregation (4th slot per
-      // column): hll_sketch_agg over the band key — zero extra jobs;
-      // unmapped column types carry a null placeholder (no sketch)
-      def ndvAgg(c: String): org.apache.spark.sql.Column = {
-        import org.apache.spark.sql.types._
-        written.schema.fields.find(_.name == c).map(_.dataType) match {
-          case Some(ByteType | ShortType | IntegerType | LongType |
-                    BooleanType | DateType | TimestampType | StringType) =>
-            org.apache.spark.sql.functions.hll_sketch_agg(
-              bandKeyCol(written, c, bandsV), FileNdv.LgK)
-          case _ => min(lit(null).cast("binary"))
-        }
-      }
-      def bloomAgg(c: String): org.apache.spark.sql.Column = {
-        import org.apache.spark.sql.catalyst.expressions.Literal
-        import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-        bridge.column(new BloomFilterAggregate(
-          bridge.expression(bandKeyCol(written, c, bandsV)),
-          Literal(FileBlooms.ExpectedItems),
-          Literal(FileBlooms.NumBits)).toAggregateExpression())
-      }
-      // layout: [__f, count, (min,max,nulls,ndv)×presentCols, blooms…]
-      val aggExprs = count(lit(1)) +:
-        (presentCols.flatMap(c => Seq(
-          min(col(c)), max(col(c)),
-          sum(when(col(c).isNull, lit(1L)).otherwise(lit(0L))),
-          ndvAgg(c))) ++ bloomColsHere.map(bloomAgg))
-      val rows = written.groupBy(input_file_name().as("__f"))
-        .agg(aggExprs.head, aggExprs.tail: _*)
-        .collect() // ≤ one row per written file — commit-sized, bounded
-      // the positional parse below (count at 1, 4-wide stats blocks,
-      // blooms at 2 + 4·presentCols) must stay in lockstep with
-      // aggExprs; a slot added to one side would silently misattribute
-      // stats to the wrong column — fail loudly instead (advisor note)
-      rows.foreach(r => assert(
-        r.length == 2 + 4 * presentCols.length + bloomColsHere.length,
-        s"combined read-back row width ${r.length} != expected " +
-          s"${2 + 4 * presentCols.length + bloomColsHere.length} " +
-          s"(presentCols=${presentCols.length}, blooms=${bloomColsHere.length})"))
-      rows
-    }
-    val rowsByFile = combined.map(r => (r.getString(0), r.getLong(1))).toMap
-    val rows = rowsByFile.valuesIterator.sum
-    def rowsFor(rel: String): Long = rowsByFile.collectFirst {
-      case (uri, n) if uri.endsWith(rel.split('/').last) => n }.getOrElse(0L)
-    val stats: Seq[ColStats] =
-      if (presentCols.isEmpty) statsCols.map(_ => unknownStats(parts.length))
-      else {
-        def keyOr(v: Any, unknown: Long): Long =
-          Option(v).flatMap(BandKeys.valueKey(_, bandsV).map(_._1)).getOrElse(unknown)
-        // typed bounds ride the same collected min/max: for STRING stats
-        // columns the aggregate value IS the extremum — encode it
-        // (size-gated) so the manifest can SERVE min/max, not just prune
-        def typedOr(v: Any): String = v match {
-          case s: String => TypedBounds.encode(s)
-          case _ => TypedBounds.Absent
-        }
-        // parse the combined rows: slot 0 = file, 1 = count, then the
-        // 4-wide (min,max,nulls,ndv) stats blocks
-        val byFile = combined
-          .map { r =>
-            val per = presentCols.zipWithIndex.map { case (c, i) =>
-              c -> ((keyOr(r.get(2 + 4 * i), UnknownMin),
-                     keyOr(r.get(3 + 4 * i), UnknownMax),
-                     Option(r.get(4 + 4 * i)).fold(UnknownNulls)(_.asInstanceOf[Long]),
-                     typedOr(r.get(2 + 4 * i)), typedOr(r.get(3 + 4 * i)),
-                     Option(r.get(5 + 4 * i)).map(b =>
-                       java.util.Base64.getEncoder.encodeToString(
-                         b.asInstanceOf[Array[Byte]])).getOrElse("")))
-            }.toMap
-            r.getString(0) -> per
-          }.toMap
-        def statsFor(rel: String, c: String)
-            : (Long, Long, Long, String, String, String) =
-          byFile.collectFirst {
-            case (uri, per) if uri.endsWith(rel.split('/').last) => per(c)
-          }.getOrElse(
-            // a file the stats pass saw NO rows for is either provably
-            // EMPTY (the row-count pass agrees: zero rows) — record the
-            // inverted never-overlapping band, like the executor
-            // writers do — or unexpectedly missing: unknown sentinel
-            if (rowsFor(rel) == 0L)
-              (UnknownMax, UnknownMin, 0L, TypedBounds.Absent, TypedBounds.Absent, "")
-            else (UnknownMin, UnknownMax, UnknownNulls,
-              TypedBounds.Absent, TypedBounds.Absent, ""))
-        // blooms ride the tail of the same combined rows (offset past
-        // the count slot and the 4-wide stats blocks)
-        val bloomBase = 2 + 4 * presentCols.length
-        val bloomByFile: Map[String, Map[String, String]] =
-          if (bloomColsHere.isEmpty) Map.empty
-          else combined.map { r =>
-            r.getString(0) -> bloomColsHere.zipWithIndex.map { case (c, i) =>
-              c -> Option(r.get(bloomBase + i)).map(b =>
-                java.util.Base64.getEncoder.encodeToString(
-                  b.asInstanceOf[Array[Byte]])).getOrElse("")
-            }.toMap
-          }.toMap
-        def bloomFor(rel: String, c: String): String =
-          bloomByFile.collectFirst {
-            case (uri, per) if uri.endsWith(rel.split('/').last) =>
-              per.getOrElse(c, "")
-          }.getOrElse("")
-        statsCols.map { c =>
-          if (!presentCols.contains(c)) unknownStats(parts.length)
-          else {
-            val trip = parts.map(p => statsFor(p, c))
-            ColStats(trip.map(_._1), trip.map(_._2), trip.map(_._3),
-              trip.map(_._4), trip.map(_._5),
-              parts.map(p => bloomFor(p, c)),
-              trip.map(_._6))
-          }
-        }
-      }
-    (FileSet(parts, stats, lens = partEntries.map(_._2),
-      frows = parts.map(rowsFor)), rows)
+    val physSchema = bridge.asNullable(out.schema)
+    val physStatsCols = statsCols.map(c => mapping.getOrElse(c, c))
+    val conf = spark.sessionState.conf
+    val written = SnapshotWrite.committedFiles(spark, dataDir, commitId,
+      physSchema, physStatsCols,
+      SnapshotWrite.writeFiles(out, SnapshotWriterFactory(dataDir.toString,
+        commitId, physSchema.json, physStatsCols,
+        conf.writeLegacyParquetFormat.toString,
+        conf.parquetOutputTimestampType.toString, bandsV = bandsV,
+        bloomCols = bloomColumns.map(c => mapping.getOrElse(c, c)))))
+    // the commit-dir listing is the length source: manifests record each
+    // file's byte length so reads never re-stat them
+    val lens = fs.listStatus(new Path(dataDir, commitId))
+      .map(st => st.getPath.getName -> st.getLen).toMap
+    (FileSet(written.map(m => s"$commitId/${m.file}"),
+      SnapshotWrite.colStats(written, statsCols.length),
+      lens = written.map(m => lens(m.file)),
+      frows = written.map(_.rows)), written.map(_.rows).sum)
   }
 
   /** Typed-bounds arrays for one stats column's manifest/group block —
@@ -1443,10 +1294,14 @@ class SnapshotTable(spark: SparkSession, root: String,
 
   /** Every commit of this table runs through here:
     * [[SnapshotLogStore.commitLoop]] on this table's tip, named `op` in
-    * its give-up. */
-  private def commitLoop[A](op: String, first: Option[Long] = None)
+    * its give-up. `preWritten` are files the commit wrote once, before
+    * its loop, for every attempt to reuse: a give-up drops their commit
+    * dirs, since no manifest references them. */
+  private def commitLoop[A](op: String, first: Option[Long] = None,
+                            preWritten: Seq[String] = Seq.empty)
                            (attempt: Long => Option[A]): A =
-    SnapshotLogStore.commitLoop(s"$op at $root", () => latestVersion(), first)(attempt)
+    SnapshotLogStore.commitLoop(s"$op at $root", () => latestVersion(), first,
+      () => dropCommitDirs(preWritten))(attempt)
 
   /** Publish at the next version, deriving the content from each
     * attempt's base — [[commitLoop]] around [[publishAtBase]], for
@@ -1460,8 +1315,9 @@ class SnapshotTable(spark: SparkSession, root: String,
                       schemaJson: Long => Option[String],
                       batchId: Long = -1L,
                       dataChange: Boolean = true,
-                      txnApp: String = ""): Long =
-    commitLoop(action) { base =>
+                      txnApp: String = "",
+                      preWritten: Seq[String] = Seq.empty): Long =
+    commitLoop(action, preWritten = preWritten) { base =>
       publishAtBase(base, action, files(base), rows(base), schemaJson(base),
         dataChange, batchId = batchId, txnApp = txnApp)
     }
@@ -1544,7 +1400,8 @@ class SnapshotTable(spark: SparkSession, root: String,
     publish("append",
       base => appendedFileSet(base, newFiles),
       base => (if (base == 0) 0L else snapshot(base).rows) + newRows,
-      base => Some(evolveSchema(tipSchemaOf(base), df.schema).json))
+      base => Some(evolveSchema(tipSchemaOf(base), df.schema).json),
+      preWritten = newFiles.files)
   }
 
   /** Epoch-idempotent append — the foreachBatch streaming-sink contract
@@ -1593,7 +1450,7 @@ class SnapshotTable(spark: SparkSession, root: String,
         base => appendedFileSet(base, newFiles),
         base => (if (base == 0) 0L else snapshot(base).rows) + newRows,
         base => Some(evolveSchema(tipSchemaOf(base), df.schema).json),
-        batchId, txnApp = txnApp)
+        batchId, txnApp = txnApp, preWritten = newFiles.files)
     }
   }
 
@@ -1640,7 +1497,7 @@ class SnapshotTable(spark: SparkSession, root: String,
         },
         base => (if (base == 0) 0L else snapshot(base).rows) + newRows,
         base => Some(evolveSchema(tipSchemaOf(base), df.schema).json),
-        txnApp = source)
+        txnApp = source, preWritten = newFiles.files)
       (v, true)
     } catch {
       case DuplicateIngest(v) =>
@@ -1795,7 +1652,8 @@ class SnapshotTable(spark: SparkSession, root: String,
       base => newFiles.copy(seqs = Seq.fill(newFiles.files.length)(base + 1)),
       _ => newRows,
       _ => Some(normalizeSchema(
-        ColumnMapping.inheritMapping(df.schema, tip)).json))
+        ColumnMapping.inheritMapping(df.schema, tip)).json),
+      preWritten = newFiles.files)
   }
 
   /** Data-skipping read on the table's FIRST stats column. */
@@ -2423,13 +2281,13 @@ class SnapshotTable(spark: SparkSession, root: String,
     keyCols.foreach(jsonSafe(_, "delete-key column")) // fail before any write
     import org.apache.spark.sql.functions.col
     val (keyFiles, _) = writeDataFiles(keys.select(keyCols.map(col): _*).distinct())
-    // per-delete-file key counts + key bands: the writer's one stats
-    // pass already folded both; composite keys interleave to z-bands
+    // per-delete-file key counts + key bands: the writer folded both
+    // while writing; composite keys interleave to z-bands
     val (newDmins, newDmaxs) = deleteKeyBands(keyCols, keyFiles)
     val added = FileSet(Seq.empty, emptyStats, deletes = keyFiles.files,
       deleteKey = keyCols, deleteLens = keyFiles.lens, drows = keyFiles.frows,
       dmins = newDmins, dmaxs = newDmaxs)
-    commitLoop("commitDeleteByKey") { base =>
+    commitLoop("commitDeleteByKey", preWritten = keyFiles.files) { base =>
       require(base > 0, s"DELETE on empty table at $root")
       val snapBase = snapshot(base)
       val prev = fileSetOf(snapBase)
@@ -2534,7 +2392,7 @@ class SnapshotTable(spark: SparkSession, root: String,
                                 batchSchema: StructType): Long = {
     import org.apache.spark.sql.functions.col
     val ci = statsCols.indexOf(column)
-    commitLoop("commitReplaceWhere") { base =>
+    commitLoop("commitReplaceWhere", preWritten = batchFiles.files) { base =>
       require(base > 0, s"replaceWhere on empty table at $root")
       val snap = snapshot(base)
       val prev = fileSetOf(snap)
@@ -3797,7 +3655,7 @@ class SnapshotTable(spark: SparkSession, root: String,
         val delLens = alignLens(fl.deleteLens, fl.deletes.length)
         // fold each multi-file class into one file; single-member classes
         // carry forward by identity (no I/O for them). The folded file's
-        // key count / band come from the writer's stats pass; a folded
+        // key count / band come from the writer's inline fold; a folded
         // drows (distinct keys across the class) stays an upper bound on
         // the rows the class removes.
         case class DelEntry(file: String, seq: Long, len: Long, rows: Long,

@@ -23,11 +23,11 @@ import org.apache.spark.sql.types._
   *    fresh `data/<uuid>/` dir — reads plan from the manifest's explicit
   *    file list, so unreferenced files are invisible by construction:
   *    writing "in place" IS staging;
-  *  - each task folds its per-file column stats (min/max cast to long +
-  *    null count for every stats column) INLINE while writing — unlike
-  *    the Scala-API [[SnapshotTable.commitAppend]] (which re-scans the
-  *    written files for stats), the distributed write pays zero extra
-  *    I/O for the skipping index;
+  *  - each task folds its per-file column stats (band-key min/max, null
+  *    count, typed string bounds, blooms, NDV sketch for every stats
+  *    column) INLINE while writing, so the skipping index costs no extra
+  *    I/O — the same [[SnapshotParquetWriter]] writes the Scala-API
+  *    commits' files too ([[SnapshotWrite.writeFiles]]);
   *  - the driver's `commit` assembles the aligned stats and publishes
   *    via [[SnapshotTable.commitWrittenAppend]] /
   *    [[SnapshotTable.commitWrittenOverwrite]] — manifest-only, with the
@@ -49,6 +49,77 @@ object SnapshotWrite {
   private[sources] val UnknownMin = Long.MinValue
   private[sources] val UnknownMax = Long.MaxValue
   private[sources] val UnknownNulls = -1L
+
+  /** Write `df` under `data/<commitUuid>/` with `factory`'s writers as
+    * ONE Spark job over `df`'s own partitions (no distribution imposed),
+    * inside a SQL execution and counted in the tasks' output metrics,
+    * like any `df.write`. Returns every task's
+    * message, 0-row files included ([[committedFiles]] settles those).
+    * A failed job drops the commit dir: no manifest references it. */
+  private[sources] def writeFiles(df: org.apache.spark.sql.DataFrame,
+                                  factory: SnapshotWriterFactory)
+      : Seq[SnapshotWriteMessage] = {
+    val qe = df.queryExecution
+    try org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(
+        qe, Some("graft snapshot write")) {
+      qe.toRdd.mapPartitionsWithIndex { (i, rows) =>
+        val w = factory.createWriter(i,
+          org.apache.spark.TaskContext.get().taskAttemptId())
+        val msg = try {
+          rows.foreach(w.write)
+          w.commit().asInstanceOf[SnapshotWriteMessage]
+        } catch { case e: Throwable => w.abort(); throw e }
+        org.apache.spark.sql.graft.bridge.recordOutput(
+          new Path(new Path(factory.dataDir, factory.commitUuid), msg.file), msg.rows)
+        Iterator.single(msg)
+      }.collect().toSeq
+    } catch {
+      case e: Throwable =>
+        val dir = new Path(factory.dataDir, factory.commitUuid)
+        dir.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+          .delete(dir, true)
+        throw e
+    }
+  }
+
+  /** The files a finished write commits. Every task opens its file
+    * eagerly, so empty input partitions leave 0-row files: they are
+    * dropped from the commit and from disk — a wide empty plan must not
+    * litter the manifest with schema-only shards. A write with no rows
+    * at all still needs one schema-bearing file (a file-less manifest
+    * would make read() of the version unplannable): it is written here,
+    * with the same writer, no Spark job. */
+  private[sources] def committedFiles(spark: SparkSession, dataDir: Path,
+                                      commitUuid: String,
+                                      physSchema: StructType,
+                                      physStatsCols: Seq[String],
+                                      all: Seq[SnapshotWriteMessage])
+      : Seq[SnapshotWriteMessage] = {
+    val (nonEmpty, empty) = all.partition(_.rows > 0L)
+    if (empty.nonEmpty) {
+      val fs = dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      empty.foreach(m => fs.delete(new Path(new Path(dataDir, commitUuid), m.file), false))
+    }
+    if (nonEmpty.nonEmpty) nonEmpty
+    else {
+      val conf = spark.sessionState.conf
+      val w = new SnapshotParquetWriter(dataDir.toString, commitUuid,
+        "part-00000-empty.parquet", physSchema, physStatsCols,
+        conf.writeLegacyParquetFormat.toString,
+        conf.parquetOutputTimestampType.toString,
+        spark.sparkContext.hadoopConfiguration)
+      Seq(w.commit().asInstanceOf[SnapshotWriteMessage])
+    }
+  }
+
+  /** Per-stats-column [[ColStats]] over written files' messages, each
+    * aligned with the writer's `n` stats columns. */
+  private[sources] def colStats(msgs: Seq[SnapshotWriteMessage], n: Int): Seq[ColStats] =
+    (0 until n).map { c =>
+      ColStats(msgs.map(_.mins(c)), msgs.map(_.maxs(c)), msgs.map(_.nulls(c)),
+        msgs.map(_.tminsOr(n)(c)), msgs.map(_.tmaxsOr(n)(c)),
+        msgs.map(_.bloomsOr(n)(c)), msgs.map(_.ndvsOr(n)(c)))
+    }
 
   /** The delete-KEY band folded across a statement's non-empty key
     * files, when it is usable for pruning the commit's exact-count
@@ -386,38 +457,11 @@ class GraftSnapshotBatchWrite(spark: SparkSession, root: String,
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val all = messages.toSeq.map(_.asInstanceOf[SnapshotWriteMessage])
-    // every task opens its file eagerly, so empty input partitions leave
-    // 0-row files: drop them from the commit (and disk) — a wide empty
-    // plan must not litter the manifest with schema-only shards
-    val nonEmpty = all.filter(_.rows > 0L)
-    if (nonEmpty.length != all.length) {
-      val fs = dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      all.filter(_.rows == 0L).foreach(m =>
-        fs.delete(new Path(new Path(dataDir, commitUuid), m.file), false))
-    }
-    val tasks = nonEmpty
-    // zero-task/zero-row plans still need one schema-bearing file — a
-    // file-less manifest would make read() of this version unplannable.
-    // The driver writes it locally with the same writer (no Spark job).
-    val ensured =
-      if (tasks.nonEmpty) tasks
-      else {
-        val w = new SnapshotParquetWriter(dataDir.toString, commitUuid,
-          "part-00000-empty.parquet", physSchema, physStatsCols,
-          spark.sessionState.conf.writeLegacyParquetFormat.toString,
-          spark.sessionState.conf.parquetOutputTimestampType.toString,
-          spark.sparkContext.hadoopConfiguration)
-        Seq(w.commit().asInstanceOf[SnapshotWriteMessage])
-      }
+    val ensured = SnapshotWrite.committedFiles(spark, dataDir, commitUuid,
+      physSchema, physStatsCols,
+      messages.toSeq.map(_.asInstanceOf[SnapshotWriteMessage]))
     val files = ensured.map(m => s"$commitUuid/${m.file}")
-    val stats: Seq[ColStats] = statsCols.indices.map { c =>
-      ColStats(ensured.map(_.mins(c)), ensured.map(_.maxs(c)), ensured.map(_.nulls(c)),
-        ensured.map(_.tminsOr(statsCols.length)(c)),
-        ensured.map(_.tmaxsOr(statsCols.length)(c)),
-        ensured.map(_.bloomsOr(statsCols.length)(c)),
-        ensured.map(_.ndvsOr(statsCols.length)(c)))
-    }
+    val stats = SnapshotWrite.colStats(ensured, statsCols.length)
     val rows = ensured.map(_.rows).sum
     val table = new SnapshotTable(spark, root, statsCols)
     mode match {
@@ -862,14 +906,7 @@ class SnapshotDeltaRowBatchWrite(spark: SparkSession, root: String,
       hadoopFs.delete(new Path(dataDir, commitUuid), true)
       return
     }
-    val stats: Seq[ColStats] = statsCols.indices.map { c =>
-      ColStats(dataMsgs.map(_.mins(c)), dataMsgs.map(_.maxs(c)),
-        dataMsgs.map(_.nulls(c)),
-        dataMsgs.map(_.tminsOr(statsCols.length)(c)),
-        dataMsgs.map(_.tmaxsOr(statsCols.length)(c)),
-        dataMsgs.map(_.bloomsOr(statsCols.length)(c)),
-        dataMsgs.map(_.ndvsOr(statsCols.length)(c)))
-    }
+    val stats = SnapshotWrite.colStats(dataMsgs, statsCols.length)
     val table = new SnapshotTable(spark, root, statsCols)
     table.commitWrittenRowDelta(base, action,
         keyMsgs.map(m => s"$commitUuid/${m.file}"), keyCols,
@@ -963,10 +1000,11 @@ case class SnapshotWriterFactory(dataDir: String, commitUuid: String,
 /** Task-side parquet writer over Spark's own [[ParquetWriteSupport]]
   * (InternalRow → parquet, the exact encoder the native scan writes
   * with), folding the per-file skipping-index stats as rows stream
-  * through. Long-casts mirror [[SnapshotTable.writeDataFiles]]'s
-  * `cast(col as long)`: integral types widen, boolean is 0/1, timestamp
-  * is floor(epoch seconds); anything else records unknown (never
-  * pruned — conservative, not wrong). */
+  * through — every data file of a snapshot table is written here. Band
+  * keys are [[BandKeys]]': integral types widen, boolean is 0/1, date is
+  * epoch days, timestamp follows `bandsV`, string is the 8-byte prefix
+  * key; anything else records unknown (never pruned — conservative, not
+  * wrong). */
 class SnapshotParquetWriter(dataDir: String, commitUuid: String, fileName: String,
                             schema: StructType, statsCols: Seq[String],
                             legacyFormat: String, timestampType: String,

@@ -12,6 +12,21 @@ object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** `schema` with every field, element and value nullable — what
+    * `df.write.parquet` writes files under (`asNullable` is private). */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+
+  /** Count a file this task wrote in its output metrics, as Spark's own
+    * file writers do (the setters are private to Spark). */
+  def recordOutput(file: org.apache.hadoop.fs.Path, records: Long): Unit = {
+    val bytes = file.getFileSystem(new org.apache.hadoop.conf.Configuration())
+      .getFileStatus(file).getLen
+    val m = org.apache.spark.TaskContext.get().taskMetrics().outputMetrics
+    m.setBytesWritten(m.bytesWritten + bytes)
+    m.setRecordsWritten(m.recordsWritten + records)
+  }
+
   /** Build a DataFrame from a logical plan (`Dataset.ofRows` went
     * private-to-sql in the classic split). Streaming V1 sources need it
     * to return batch-planned scans with streaming-flagged leaves. */

@@ -30,12 +30,16 @@ class CommitLoopSpec extends SparkSpec {
     }
   }
 
+  /** The give-up contract, plus: no attempt published, so nothing the
+    * commit wrote may stay under `data/`. */
   private def assertGaveUp(store: AlwaysCollides, op: String, root: String)
                           (commit: => Any): Unit = {
     val e = intercept[IllegalStateException](commit)
     assert(e.getMessage == s"$op at $root: gave up after 50 conflicts")
     assert(e.getCause eq store.last, s"the last collision must be the cause: ${e.getCause}")
     assert(store.attempts.get() == 50, s"publish attempts: ${store.attempts.get()}")
+    val orphans = commitDirsOnDisk(root) -- commitDirsReferenced(new SnapshotTable(spark, root))
+    assert(orphans.isEmpty, s"$op gave up and left unreferenced commit dirs: $orphans")
   }
 
   test("give-up: a publish that always collides raises after exactly 50 attempts, last collision as cause") {
@@ -43,6 +47,22 @@ class CommitLoopSpec extends SparkSpec {
     val store = new AlwaysCollides
     val t = new SnapshotTable(spark, root, logStore = Some(store))
     assertGaveUp(store, "append", root)(t.commitAppend(Seq(1L).toDF("id")))
+  }
+
+  // verbs that write their files once, before the loop, for every attempt
+  Seq[(String, SnapshotTable => Any)](
+    ("commitDeleteByKey", _.commitDeleteByKey(Seq(2L).toDF("id"), Seq("id"))),
+    ("commitReplaceWhere",
+      _.commitReplaceWhere("id", Seq(1L, 2L).toDF("id"), 1L, 2L))
+  ).foreach { case (op, commit) =>
+    test(s"give-up: $op drops the files it wrote before its loop") {
+      val root = freshRoot(s"${op}giveup")
+      new SnapshotTable(spark, root, statsCols = Seq("id"))
+        .commitAppend(Seq(1L, 2L, 3L).toDF("id").repartition(1))
+      val store = new AlwaysCollides
+      assertGaveUp(store, op, root)(commit(
+        new SnapshotTable(spark, root, statsCols = Seq("id"), logStore = Some(store))))
+    }
   }
 
   test("give-up: a re-deriving verb gives up the same way") {
@@ -76,8 +96,10 @@ class CommitLoopSpec extends SparkSpec {
     Option(new java.io.File(s"$root/data").listFiles()).toSeq.flatten
       .filter(_.isDirectory).map(_.getName).toSet
 
+  // history() may serve summaries without file lists: read each manifest
   private def commitDirsReferenced(t: SnapshotTable): Set[String] =
-    t.history().flatMap(s => s.files ++ s.deletes).map(_.split('/').head).toSet
+    t.history().map(s => t.snapshot(s.version))
+      .flatMap(s => s.files ++ s.deletes).map(_.split('/').head).toSet
 
   // (verb, unraced setup, the raced commit) — the rival's row (id 1000)
   // lies outside every verb's predicate, so it must survive
