@@ -50,6 +50,7 @@ object Bench {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // ContextCleaner reclaims dead shuffle files / broadcasts only when
       // driver GC collects their references; the periodic-GC fallback

@@ -494,16 +494,16 @@ object Dedup {
     // struct-typed buffer planned a SortAggregate with a Sort on each
     // side of the exchange over the corpus-scale block frame (r21
     // measurement, plans/r21/llm_paragraph_dedup_before.txt); min(doc_id)
-    // + ArgMinLongPair(doc_id, pos) — pos of the row minimizing
-    // (doc_id, pos), i.e. exactly struct-min's pair since min pos within
-    // the min doc_id IS the lexicographic minimum — hash-aggregate with
-    // whole-stage codegen and map-side combine. doc_id/pos are non-null
+    // + ArgExtremePairValue.argminValue(doc_id, pos, pos) — pos of the
+    // row minimizing (doc_id, pos), i.e. exactly struct-min's pair since
+    // min pos within the min doc_id IS the lexicographic minimum —
+    // hash-aggregate with whole-stage codegen and map-side combine. doc_id/pos are non-null
     // by construction (generated), so the aggregates' skip-null contract
     // matches struct-min here.
     val keeper = blocks.groupBy(col("h"))
       .agg(min(col("doc_id")).as("keep_doc"),
-        org.apache.spark.sql.graft.ArgMinLongPair
-          .argminValue(col("doc_id"), col("pos")).as("keep_pos"))
+        org.apache.spark.sql.graft.ArgExtremePairValue
+          .argminValue(col("doc_id"), col("pos"), col("pos")).as("keep_pos"))
     blocks.join(keeper, "h")
       .withColumn("kept",
         col("doc_id") === col("keep_doc") && col("pos") === col("keep_pos"))

@@ -244,8 +244,9 @@ object Similarity {
       collect_list(struct(col("cell_id"), col("centroid"))).as("cents")))
 
   /** per-row argmax-fold cell assignment against a broadcast centroid
-    * list — map-side, codegen'd, tie-break on smaller cell_id so the
-    * result is independent of the collect_list order */
+    * list — map-side, tie-break on smaller cell_id so the result is
+    * independent of the collect_list order. The fold is interpreted:
+    * `ArrayAggregate` and `ZipWith` are `CodegenFallback` in Spark 4.1. */
   private def assignCells(df: DataFrame, embCol: String, cents: DataFrame): DataFrame =
     df.crossJoin(cents) // one-row broadcast: a map-side pass
       .withColumn("cell_id",
@@ -269,34 +270,27 @@ object Similarity {
     * fold, and the mean update accumulates in DECIMAL (order-independent
     * exact sums — a float sum would make the trained centroids depend on
     * shuffle order). Each iteration is one map-side assignment pass plus
-    * one (cell, dim)-keyed aggregation; per-iteration localCheckpoint
-    * keeps the plan from growing with the iteration count. Empty cells
-    * drop out (standard Lloyd behavior). */
+    * one (cell, dim)-keyed aggregation; per-iteration checkpoints
+    * ([[graft.operators.Checkpoints.iterate]]) keep the plan from growing
+    * with the iteration count. Empty cells drop out (standard Lloyd
+    * behavior). Returns the last iteration's checkpoint. */
   def kmeansCentroids(corpus: DataFrame, k: Int, iters: Int = 5): DataFrame = {
     require(k >= 1 && iters >= 0, s"need k >= 1, iters >= 0; got k=$k iters=$iters")
     val base = corpus.select(col("vec_id"), col("embedding"))
-    var cents = base.orderBy("vec_id").limit(k)
-      .select(col("vec_id").as("cell_id"), col("embedding").as("centroid"))
-      .localCheckpoint(true)
-    var i = 0
-    while (i < iters) {
-      val assigned = assignCells(base, "embedding", centsFrame(cents))
-      val next = assigned
-        .select(col("cell_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
-        .groupBy(col("cell_id"), col("pos"))
-        .agg((sum(col("v").cast(org.apache.spark.sql.types.DecimalType(27, 10))) /
-          count(lit(1))).cast(org.apache.spark.sql.types.FloatType).as("m"))
-        .groupBy(col("cell_id"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-          x => x.getField("m")).as("centroid"))
-        .localCheckpoint(true)
-      // free the superseded iteration's blocks (k rows each, but they
-      // accumulate per call otherwise — same hygiene as the CC loop)
-      graft.operators.Checkpoints.release(cents)
-      cents = next
-      i += 1
+    graft.operators.Checkpoints.iterate { loop =>
+      val init = loop.eager(base.orderBy("vec_id").limit(k)
+        .select(col("vec_id").as("cell_id"), col("embedding").as("centroid")))
+      loop.rounds(iters, init) { (cents, _) =>
+        loop.eager(assignCells(base, "embedding", centsFrame(cents))
+          .select(col("cell_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
+          .groupBy(col("cell_id"), col("pos"))
+          .agg((sum(col("v").cast(org.apache.spark.sql.types.DecimalType(27, 10))) /
+            count(lit(1))).cast(org.apache.spark.sql.types.FloatType).as("m"))
+          .groupBy(col("cell_id"))
+          .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
+            x => x.getField("m")).as("centroid")))
+      }
     }
-    cents
   }
 
   /** IVF top-k. Centroids are the first `nCells` corpus vectors by vec_id
@@ -305,8 +299,9 @@ object Similarity {
     * metadata-only job on parquet sources; pass nCells explicitly to keep
     * construction fully lazy). Cell assignment is an argmax fold over the broadcast
     * centroid list — tie-break on smaller cell_id, so the result is
-    * independent of the collect_list order — executed per row inside
-    * codegen: no shuffle and no window over corpus×cells. Queries probe
+    * independent of the collect_list order — evaluated per row (an
+    * interpreted fold, see [[assignCells]]): no shuffle and no window
+    * over corpus×cells. Queries probe
     * their `nProbe` nearest cells (multi-probe recovers boundary recall;
     * the probe ranking explodes query×cells, but queries are the small
     * side by definition, so that window never touches corpus volume). A
@@ -387,9 +382,11 @@ object Similarity {
     * assignment pass plus one aggregation regardless of m. Deterministic
     * and layout-independent for the same reasons as kmeansCentroids:
     * lowest-vec_id init, round(L2²,6)+smaller-code tie-broken argmin,
-    * DECIMAL mean accumulation, per-iteration checkpoint+release. Empty
+    * DECIMAL mean accumulation, per-iteration checkpoints. Empty
     * codewords drop out (standard Lloyd). Returns the one-row
-    * broadcastable `cbs` frame [[ivfPqTopK]] accepts via `codebook`. */
+    * broadcastable `cbs` frame [[ivfPqTopK]] accepts via `codebook`: a
+    * lazy row over the last iteration's checkpoint, which stays live for
+    * it (one per call). */
   def trainedPqCodebook(corpus: DataFrame, m: Int = 8, ksub: Int = 16,
                         iters: Int = 5): DataFrame = {
     val dim = corpus.select(size(col("embedding")).as("d")).head().getInt(0)
@@ -397,44 +394,41 @@ object Similarity {
     val dsub = dim / m
     val sv = graft.QueryCaches.scoped(pqSubvectors(
       corpus.select(col("vec_id"), col("embedding")), m, dsub))
-    var cb = corpus.orderBy("vec_id").limit(ksub)
-      .select(col("vec_id").as("code"),
-        explode(sequence(lit(0), lit(m - 1))).as("sub"), col("embedding"))
-      .select(col("sub"), col("code"),
-        slice(col("embedding"), col("sub") * lit(dsub) + lit(1), lit(dsub)).as("cw"))
-      .localCheckpoint(true)
-    var i = 0
-    while (i < iters) {
-      // per-sub codeword slot instead of an m·ksub filter per row (the
-      // pqEncode r21 layout): element_at is an O(1) lookup on the
-      // broadcast side's pre-split array
-      val cbRow = perSubCodebook(broadcast(cb.agg(
-        collect_list(struct(col("sub"), col("code"), col("cw"))).as("cbs"))), m)
-      val assigned = sv.crossJoin(cbRow) // one-row broadcast, map-side
-        .withColumn("code", aggregate(
-          element_at(col("cbss"), col("sub").cast("int") + 1),
-          struct(lit(Double.MaxValue).as("d"), lit(Long.MaxValue).as("c")),
-          (acc, x) => {
-            val d = l2sq(col("sv"), x.getField("cw"))
-            val c = x.getField("code").cast(L)
-            when(d < acc.getField("d") ||
-                (d === acc.getField("d") && c < acc.getField("c")),
-              struct(d.as("d"), c.as("c"))).otherwise(acc)
-          },
-          acc => acc.getField("c")))
-        .drop("cbs").drop("cbss")
-      val next = assigned
-        .select(col("sub"), col("code"), posexplode(col("sv")).as(Seq("pos", "v")))
-        .groupBy(col("sub"), col("code"), col("pos"))
-        .agg((sum(col("v").cast(org.apache.spark.sql.types.DecimalType(27, 10))) /
-          count(lit(1))).cast(org.apache.spark.sql.types.FloatType).as("mv"))
-        .groupBy(col("sub"), col("code"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("mv")))),
-          x => x.getField("mv")).as("cw"))
-        .localCheckpoint(true)
-      graft.operators.Checkpoints.release(cb)
-      cb = next
-      i += 1
+    // the final codebook stays live: the returned row reads it
+    val cb = graft.operators.Checkpoints.iterate { loop =>
+      val init = loop.eager(corpus.orderBy("vec_id").limit(ksub)
+        .select(col("vec_id").as("code"),
+          explode(sequence(lit(0), lit(m - 1))).as("sub"), col("embedding"))
+        .select(col("sub"), col("code"),
+          slice(col("embedding"), col("sub") * lit(dsub) + lit(1), lit(dsub)).as("cw")))
+      loop.rounds(iters, init) { (cb, _) =>
+        // per-sub codeword slot instead of an m·ksub filter per row (the
+        // pqEncode r21 layout): element_at is an O(1) lookup on the
+        // broadcast side's pre-split array
+        val cbRow = perSubCodebook(broadcast(cb.agg(
+          collect_list(struct(col("sub"), col("code"), col("cw"))).as("cbs"))), m)
+        val assigned = sv.crossJoin(cbRow) // one-row broadcast, map-side
+          .withColumn("code", aggregate(
+            element_at(col("cbss"), col("sub").cast("int") + 1),
+            struct(lit(Double.MaxValue).as("d"), lit(Long.MaxValue).as("c")),
+            (acc, x) => {
+              val d = l2sq(col("sv"), x.getField("cw"))
+              val c = x.getField("code").cast(L)
+              when(d < acc.getField("d") ||
+                  (d === acc.getField("d") && c < acc.getField("c")),
+                struct(d.as("d"), c.as("c"))).otherwise(acc)
+            },
+            acc => acc.getField("c")))
+          .drop("cbs").drop("cbss")
+        loop.eager(assigned
+          .select(col("sub"), col("code"), posexplode(col("sv")).as(Seq("pos", "v")))
+          .groupBy(col("sub"), col("code"), col("pos"))
+          .agg((sum(col("v").cast(org.apache.spark.sql.types.DecimalType(27, 10))) /
+            count(lit(1))).cast(org.apache.spark.sql.types.FloatType).as("mv"))
+          .groupBy(col("sub"), col("code"))
+          .agg(transform(array_sort(collect_list(struct(col("pos"), col("mv")))),
+            x => x.getField("mv")).as("cw")))
+      }
     }
     broadcast(cb.agg(
       collect_list(struct(col("sub"), col("code"), col("cw"))).as("cbs")))

@@ -17,8 +17,7 @@ import org.apache.spark.sql.functions._
   * not the visited set — drives the expansion join, so per-round cost is
   * O(edges touching the frontier), and the anti-join against the visited
   * set keeps every node's FIRST (minimal) hop: classic distributed BFS
-  * (Pregel's SSSP specialization to unit weights). Per-round
-  * `localCheckpoint` + release keeps lineage flat across rounds.
+  * (Pregel's SSSP specialization to unit weights).
   */
 object Bfs {
 
@@ -36,28 +35,20 @@ object Bfs {
     // round's expansion join keys und.s against the frontier's node, so
     // with und laid out by s only the (small) frontier side ever
     // shuffles — the edge frame never moves again.
-    val und = e.unionAll(e.select(col("t").as("s"), col("s").as("t")))
-      .distinct()
-      .repartition(col("s"))
-      .localCheckpoint(true)
-    var visited = seeds.select(col(seedCol).cast("long").as("node")).distinct()
-      .withColumn("hop", lit(0L))
-      .localCheckpoint(true)
-    try {
-      for (r <- 1 to rounds) {
+    Checkpoints.iterate { loop =>
+      val und = loop.eager(e.unionAll(e.select(col("t").as("s"), col("s").as("t")))
+        .distinct()
+        .repartition(col("s")))
+      val init = loop.eager(seeds.select(col(seedCol).cast("long").as("node")).distinct()
+        .withColumn("hop", lit(0L)))
+      loop.rounds(rounds, init) { (visited, r) =>
         val frontier = visited.filter(col("hop") === lit(r - 1L)).select(col("node"))
         val next = und.join(frontier, und("s") === frontier("node"))
           .select(col("t").as("node")).distinct()
           .join(visited.select(col("node")), Seq("node"), "left_anti")
           .withColumn("hop", lit(r.toLong))
-        val merged = visited.unionAll(next).localCheckpoint(true)
-        Checkpoints.release(visited)
-        visited = merged
+        loop.eager(visited.unionAll(next))
       }
-      visited.localCheckpoint(true)
-    } finally {
-      Checkpoints.release(visited)
-      Checkpoints.release(und)
     }
   }
 }

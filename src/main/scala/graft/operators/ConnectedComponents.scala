@@ -15,26 +15,23 @@ import org.apache.spark.sql.functions._
   * worst-case graphs (vs O(diameter) for plain label propagation, which
   * is unbounded on path graphs). Nothing is collected to the driver
   * except a per-round (count, checksum) convergence scalar; per-round
-  * `localCheckpoint` truncates the lineage that otherwise grows
-  * per-iteration and blows up replay at scale.
+  * checkpoints ([[Checkpoints.iterate]]) truncate the lineage that
+  * otherwise grows per-iteration and blows up replay at scale.
   */
 object ConnectedComponents {
 
   /** Components of the undirected graph given by `edges` (two integral
     * columns `srcCol`, `dstCol`; self-loops and duplicates tolerated).
     * Returns ("node", "component") for every node incident to an edge,
-    * where component = the minimum node id in the node's component. */
+    * where component = the minimum node id in the node's component.
+    * The result is a lazy labelling over the converged edge set's
+    * checkpoint, which stays live for it: one per call (the
+    * `QueryCaches.shared` memo persists the labelling for its consumers).
+    * Non-convergence within `maxIter` raises and leaves no checkpoint. */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
                           maxIter: Int = 50): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // canonical working set: distinct directed-down pairs (u > v)
-    var e = edges.select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
-      .filter(col("u") =!= col("v"))
-      .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
-      .distinct()
-      .localCheckpoint(true)
-
     def signature(df: DataFrame): (Long, Long) = {
       // bit_xor: order-independent and overflow-free under ANSI (a long
       // sum of 64-bit hashes overflows); count disambiguates xor collisions
@@ -73,26 +70,35 @@ object ConnectedComponents {
         .distinct()
     }
 
-    var sig = signature(e)
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIter) {
-      // LAZY localCheckpoint: the signature aggregation is the first
-      // action over the marked RDD, so ONE job per round both
-      // materializes the round's blocks and computes the convergence
-      // scalar (an eager checkpoint + separate agg paid two passes).
-      // (Batching two alternations per checkpoint was tried and measured
-      // SLOWER at sf0.1 — the deeper per-job plan (4 window shuffles)
-      // costs more than the job-scheduling overhead it saves.)
-      val next = smallStar(largeStar(e)).localCheckpoint(false)
-      val nextSig = signature(next)
-      converged = nextSig == sig
-      // free the superseded round's blocks, or maxIter rounds of edge
-      // sets pile up in executor storage until a driver GC
-      Checkpoints.release(e)
-      e = next; sig = nextSig; it += 1
+    // the final edge set stays live: the lazy labelling below reads it
+    val e = Checkpoints.iterate { loop =>
+      // canonical working set: distinct directed-down pairs (u > v)
+      val init = loop.eager(edges
+        .select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
+        .filter(col("u") =!= col("v"))
+        .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
+        .distinct())
+      var sig = signature(init)
+      var converged = false
+      // the signature aggregation is the first action over the deferred
+      // checkpoint, so ONE job per round both materializes the round's
+      // blocks and computes the convergence scalar (an eager checkpoint +
+      // separate agg paid two passes). (Batching two alternations per
+      // checkpoint was tried and measured SLOWER at sf0.1 — the deeper
+      // per-job plan (4 window shuffles) costs more than the
+      // job-scheduling overhead it saves.)
+      val same = (_: DataFrame, next: DataFrame) => {
+        val nextSig = signature(next)
+        converged = nextSig == sig
+        sig = nextSig
+        converged
+      }
+      val last = loop.rounds(maxIter, init, Some(same)) { (e, _) =>
+        loop.deferred(smallStar(largeStar(e)))
+      }
+      require(converged, s"connectedComponents did not converge in $maxIter rounds")
+      last
     }
-    require(converged, s"connectedComponents did not converge in $maxIter rounds")
     // converged edge set is min-rooted stars: every non-root points at its
     // component min, and each root's neighbors are all above it — so
     // min(N(x) ∪ {x}) labels roots and leaves alike.

@@ -43,42 +43,37 @@ object Hits {
                      iters: Int = 3, massUnit: Long = 1000000L): DataFrame = {
     require(iters >= 1 && massUnit > 0,
       s"need iters >= 1 and a positive massUnit; got $iters, $massUnit")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .localCheckpoint(true)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(true)
-    val n = nodes.count()
-    require(n > 0, "hitsFixedPoint needs at least one edge")
-    // Mirror of the overflow bound on the other side: with massUnit < n
-    // the integer seed massUnit/n truncates to 0, every L1 total is 0,
-    // and the `div s` normalization divides by zero.
-    require(massUnit >= n,
-      s"massUnit ($massUnit) must be >= node count ($n) or the integer seed truncates to zero")
-    // Degrees are LOOP INVARIANT and — past the seed join below — come
-    // FREE as count(lit(1)) inside each half-round's aggregation: the
-    // hub state provably contains EVERY edge's src (round 1 seeds all
-    // nodes; later rounds' groupBy(src) emits every src because the auth
-    // state contains every dst), so every edge joins and the per-dst
-    // joined-row count IS the in-degree — symmetrically for out-degree.
-    // An r21 intermediate that instead joined odeg+ideg into the edge
-    // checkpoint measured WORSE (two one-time shuffle joins over the
-    // edge frame: first action 0.58 → 1.99 s) and was replaced by this.
-    // odeg = 0 for pure authorities: they contribute nothing to the L1
-    // total — exactly their (absent) contribution to the old raw sum.
-    val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("odeg"))
-    var hub = nodes
-      .join(outDeg, nodes("node") === outDeg("src"), "left")
-      .select(col("node"), coalesce(col("odeg"), lit(0L)).as("odeg"),
-        lit(massUnit / n).as("hub_fp"))
-      .localCheckpoint(true)
-    var auth: DataFrame = null
-    try {
-      var it = 0
-      while (it < iters) {
+    Checkpoints.iterate { loop =>
+      val e = loop.eager(edges.select(col(srcCol).cast("long").as("src"),
+        col(dstCol).cast("long").as("dst"))
+        .filter(col("src").isNotNull && col("dst").isNotNull)
+        .distinct())
+      val nodes = loop.eager(e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct())
+      val n = nodes.count()
+      require(n > 0, "hitsFixedPoint needs at least one edge")
+      // Mirror of the overflow bound on the other side: with massUnit < n
+      // the integer seed massUnit/n truncates to 0, every L1 total is 0,
+      // and the `div s` normalization divides by zero.
+      require(massUnit >= n,
+        s"massUnit ($massUnit) must be >= node count ($n) or the integer seed truncates to zero")
+      // Degrees are LOOP INVARIANT and — past the seed join below — come
+      // FREE as count(lit(1)) inside each half-round's aggregation: the
+      // hub state provably contains EVERY edge's src (round 1 seeds all
+      // nodes; later rounds' groupBy(src) emits every src because the auth
+      // state contains every dst), so every edge joins and the per-dst
+      // joined-row count IS the in-degree — symmetrically for out-degree.
+      // An r21 intermediate that instead joined odeg+ideg into the edge
+      // checkpoint measured WORSE (two one-time shuffle joins over the
+      // edge frame: first action 0.58 → 1.99 s) and was replaced by this.
+      // odeg = 0 for pure authorities: they contribute nothing to the L1
+      // total — exactly their (absent) contribution to the old raw sum.
+      val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("odeg"))
+      val init = loop.eager(nodes
+        .join(outDeg, nodes("node") === outDeg("src"), "left")
+        .select(col("node"), coalesce(col("odeg"), lit(0L)).as("odeg"),
+          lit(massUnit / n).as("hub_fp")))
+      loop.rounds(iters, init) { (hub, r) =>
         // authorities: sum incoming hub mass, L1-normalize in units.
         // The total Σraw = Σ hub_fp·odeg over the PREVIOUS state — a
         // 1-row broadcast inside this plan (node-sized scan), so the
@@ -86,45 +81,30 @@ object Hits {
         // next half-round's total the same way.
         val sa = broadcast(hub.agg(
           sum(col("hub_fp") * col("odeg")).as("s")))
-        val nextAuth = e.join(hub, e("src") === hub("node"))
+        val auth = loop.eager(e.join(hub, e("src") === hub("node"))
           .groupBy(col("dst"))
           .agg(sum(col("hub_fp")).as("raw"), count(lit(1)).as("ideg"))
           .crossJoin(sa)
           .select(col("dst").as("node"), col("ideg"),
-            expr(s"(raw * ${massUnit}L) div s").as("auth_fp"))
-          .localCheckpoint(true)
-        if (auth != null) Checkpoints.release(auth)
-        auth = nextAuth
+            expr(s"(raw * ${massUnit}L) div s").as("auth_fp")))
         // hubs: sum outgoing authority mass, L1-normalize in units
         val sh = broadcast(auth.agg(
           sum(col("auth_fp") * col("ideg")).as("s")))
-        val nextHub = e.join(auth, e("dst") === auth("node"))
+        val nextHub = loop.eager(e.join(auth, e("dst") === auth("node"))
           .groupBy(col("src"))
           .agg(sum(col("auth_fp")).as("raw"), count(lit(1)).as("odeg"))
           .crossJoin(sh)
           .select(col("src").as("node"), col("odeg"),
-            expr(s"(raw * ${massUnit}L) div s").as("hub_fp"))
-          .localCheckpoint(true)
-        Checkpoints.release(hub)
-        hub = nextHub
-        it += 1
+            expr(s"(raw * ${massUnit}L) div s").as("hub_fp")))
+        // the last round's state is the result, joined from both halves
+        if (r < iters) nextHub
+        else loop.eager(nodes
+          .join(nextHub, Seq("node"), "left")
+          .join(auth, Seq("node"), "left")
+          .select(col("node"),
+            coalesce(col("hub_fp"), lit(0L)).as("hub_fp"),
+            coalesce(col("auth_fp"), lit(0L)).as("auth_fp")))
       }
-      // materialize the result BEFORE the finally releases the shared
-      // inputs its plan reads (the same last-round discipline as
-      // pageRankFixedPoint)
-      val out = nodes
-        .join(hub, Seq("node"), "left")
-        .join(auth, Seq("node"), "left")
-        .select(col("node"),
-          coalesce(col("hub_fp"), lit(0L)).as("hub_fp"),
-          coalesce(col("auth_fp"), lit(0L)).as("auth_fp"))
-        .localCheckpoint(true)
-      Checkpoints.release(hub)
-      Checkpoints.release(auth)
-      out
-    } finally {
-      Checkpoints.release(e)
-      Checkpoints.release(nodes)
     }
   }
 }

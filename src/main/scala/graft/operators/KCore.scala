@@ -15,8 +15,6 @@ import org.apache.spark.sql.functions._
   * monotonically from above, so R rounds give a deterministic,
   * engine-replayable over-approximation that a DuckDB CTE unroll can
   * mirror exactly (a data-dependent round count could not be gated).
-  * Per-round `localCheckpoint` + release keeps lineage flat and frees
-  * each superseded edge set's blocks, the [[PageRank]] hygiene contract.
   */
 object KCore {
 
@@ -29,24 +27,19 @@ object KCore {
     def degrees(e: DataFrame): DataFrame =
       e.select(col("u").as("n")).unionAll(e.select(col("v").as("n")))
         .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-    var e = edges
-      .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
-      .distinct()
-      .localCheckpoint(true)
-    try {
-      for (_ <- 1 to rounds) {
+    Checkpoints.iterate { loop =>
+      val init = loop.eager(edges
+        .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
+        .filter(col("a") =!= col("b"))
+        .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
+        .distinct())
+      val e = loop.rounds(rounds, init) { (e, _) =>
         val alive = degrees(e).filter(col("deg") >= k).select(col("n"))
-        val next = e
+        loop.eager(e
           .join(alive, e("u") === alive("n"), "left_semi")
-          .join(alive, e("v") === alive("n"), "left_semi")
-          .localCheckpoint(true)
-        Checkpoints.release(e)
-        e = next
+          .join(alive, e("v") === alive("n"), "left_semi"))
       }
-      degrees(e).select(col("n").as("node"), col("deg").as("degree"))
-        .localCheckpoint(true)
-    } finally Checkpoints.release(e)
+      loop.eager(degrees(e).select(col("n").as("node"), col("deg").as("degree")))
+    }
   }
 }

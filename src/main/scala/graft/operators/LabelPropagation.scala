@@ -17,12 +17,10 @@ import org.apache.spark.sql.functions._
   * LPA can oscillate on bipartite structures, so a convergence loop may
   * not even terminate). Each round is two keyed aggregations — count
   * labels over incident edges, then an argmax fold via struct-min
-  * ((-count, label)) so no window over the node set is needed. Per-round
-  * `localCheckpoint` + release keeps lineage flat and frees superseded
-  * label frames; the symmetrized edge list is checkpointed ONCE and
-  * reused every round. All shuffles key on node id — at 1000 executors
-  * each round is two hash exchanges over (node, label) pairs, never
-  * adjacency payloads.
+  * ((-count, label)) so no window over the node set is needed. The
+  * symmetrized edge list is checkpointed ONCE and reused every round.
+  * All shuffles key on node id — at 1000 executors each round is two
+  * hash exchanges over (node, label) pairs, never adjacency payloads.
   */
 object LabelPropagation {
 
@@ -46,22 +44,20 @@ object LabelPropagation {
     // per-round join is co-partitioned — zero edge shuffle per round
     // at forced-shuffle scale (locally the small label side broadcasts;
     // the plan shape is the 100 TB story).
-    val und = canon.select(col("u").as("src"), col("v").as("dst"))
-      .unionAll(canon.select(col("v").as("src"), col("u").as("dst")))
-      .repartition(col("dst"))
-      .localCheckpoint(true)
-    var lbl = und.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("lbl"))
-      .localCheckpoint(true)
-    try {
-      for (_ <- 1 to rounds) {
-        // argmax label = ArgMinLongPair over (-count, label): identical
+    Checkpoints.iterate { loop =>
+      val und = loop.eager(canon.select(col("u").as("src"), col("v").as("dst"))
+        .unionAll(canon.select(col("v").as("src"), col("u").as("dst")))
+        .repartition(col("dst")))
+      val init = loop.eager(und.select(col("src").as("node")).distinct()
+        .select(col("node"), col("node").as("lbl")))
+      val lbl = loop.rounds(rounds, init) { (lbl, _) =>
+        // argmax label = argmin over (-count, label, label): identical
         // semantics to the min(struct((-c), l)).lb idiom but with a FLAT
-        // (long, long, bool) buffer, so both aggregations hash-aggregate
-        // with whole-stage codegen — the struct-buffer form planned a
-        // SortAggregate with a Sort on each side of the exchange every
-        // round (r20 measurement; see ArgMinLongPair's scaladoc, which
-        // also records why the two-phase and packed-long rewrites lost).
+        // buffer, so both aggregations hash-aggregate with whole-stage
+        // codegen — the struct-buffer form planned a SortAggregate with a
+        // Sort on each side of the exchange every round (r20 measurement;
+        // see ArgExtremePairValue's scaladoc, which also records why the
+        // two-phase and packed-long rewrites lost).
         // ONE exchange per round (r21): the join output repartitions by
         // the new node key alone, which satisfies the CLUSTERED
         // distribution of BOTH aggregations (n is a prefix of (n, l)),
@@ -69,26 +65,19 @@ object LabelPropagation {
         // paid two, (n, l) then (n). The single exchange carries raw
         // (n, l) pairs instead of two combined passes; count and argmin
         // are partitioning-independent, so results are bit-identical.
-        val next = und.join(lbl, und("dst") === lbl("node"))
+        loop.eager(und.join(lbl, und("dst") === lbl("node"))
           .select(und("src").as("n"), lbl("lbl").as("l"))
           .repartition(col("n"))
           .groupBy(col("n"), col("l"))
           .agg(count(lit(1)).as("c"))
           .groupBy(col("n"))
-          .agg(org.apache.spark.sql.graft.ArgMinLongPair
-            .argminValue(-col("c"), col("l")).as("lbl"))
-          .select(col("n").as("node"), col("lbl"))
-          .localCheckpoint(true)
-        Checkpoints.release(lbl)
-        lbl = next
+          .agg(org.apache.spark.sql.graft.ArgExtremePairValue
+            .argminValue(-col("c"), col("l"), col("l")).as("lbl"))
+          .select(col("n").as("node"), col("lbl")))
       }
       val sizes = lbl.groupBy(col("lbl")).agg(count(lit(1)).as("community_size"))
-      lbl.join(sizes, "lbl")
-        .select(col("node"), col("lbl").as("community"), col("community_size"))
-        .localCheckpoint(true)
-    } finally {
-      Checkpoints.release(lbl)
-      Checkpoints.release(und)
+      loop.eager(lbl.join(sizes, "lbl")
+        .select(col("node"), col("lbl").as("community"), col("community_size")))
     }
   }
 }

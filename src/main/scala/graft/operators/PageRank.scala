@@ -17,9 +17,9 @@ import org.apache.spark.sql.functions._
   * round, each shuffle paid once: the ranks⋈out-degree join is eagerly
   * checkpointed (both the dangling aggregate and the contributions read
   * its blocks), then the delta job materializes the lazily-checkpointed
-  * next ranks while computing the L1 convergence scalar; superseded
-  * block sets are released every round — the same hygiene as the
-  * connected-components loop.
+  * next ranks while computing the L1 convergence scalar. Every variant
+  * runs through [[Checkpoints.iterate]] and returns its last round's
+  * checkpoint.
   *
   * Scale shape: state is one (node, rank) row per node; every round is
   * two shuffles hash-partitioned on node id. Spec-gated (not DuckDB-
@@ -37,72 +37,49 @@ object PageRank {
     // at d=0.85 needs ~log(tol)/log(d) ≈ 114 rounds on an ordinary graph
     // — the default budget leaves headroom (CC's 50 does NOT transfer:
     // star rounds converge in O(log n), diffusion converges at rate d)
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .localCheckpoint(true)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(true)
-    val n = nodes.count().toDouble
-    require(n > 0, "pageRank needs at least one edge")
-    val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
-
-    var ranks = nodes.select(col("node"), lit(1.0 / n).as("rank")).localCheckpoint(true)
-    var it = 0
-    var delta = Double.MaxValue
-    // working-set frames live in vars so the error path (non-convergence
-    // require, or any mid-loop failure) can release their checkpoint
-    // blocks too — without this they leak until the session ends
-    var withDeg: DataFrame = null
-    var next: DataFrame = null
-    try {
-      while (delta > tol && it < maxIter) {
-        // job 1: materialize the join once; dangling agg and contribs both
-        // read its blocks instead of re-running the shuffle
-        withDeg = ranks.join(outDeg, ranks("node") === outDeg("src"), "left")
-          .localCheckpoint(true)
-        // dangling nodes (no out-edges) donate their mass to everyone —
-        // a 1-row broadcast INSIDE the plan, not a separate driver action
-        val dangling = broadcast(withDeg.filter(col("deg").isNull)
-          .agg(coalesce(sum(col("rank")), lit(0.0)).as("dm")))
-        val contribs = withDeg.filter(col("deg").isNotNull)
-          .select(col("node"), (col("rank") / col("deg")).as("share"))
-          .join(e, col("node") === col("src"))
-          .groupBy(col("dst")).agg(sum(col("share")).as("inflow"))
-        next = nodes
-          .join(contribs, nodes("node") === contribs("dst"), "left")
-          .crossJoin(dangling)
-          .select(nodes("node"),
-            (lit((1.0 - damping) / n) +
-              lit(damping) * (coalesce(col("inflow"), lit(0.0)) + col("dm") / lit(n)))
-              .as("rank"))
-          .localCheckpoint(false)
-        // job 2: materializes the checkpoint AND computes the L1 delta
-        delta = next.join(ranks.withColumnRenamed("rank", "prev"), Seq("node"))
+    Checkpoints.iterate { loop =>
+      val e = loop.eager(edges.select(col(srcCol).cast("long").as("src"),
+        col(dstCol).cast("long").as("dst"))
+        .filter(col("src").isNotNull && col("dst").isNotNull)
+        .distinct())
+      val nodes = loop.eager(e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct())
+      val n = nodes.count().toDouble
+      require(n > 0, "pageRank needs at least one edge")
+      val outDeg = loop.eager(e.groupBy(col("src")).agg(count(lit(1)).as("deg")))
+      var delta = Double.MaxValue
+      // job 2 of each round: materializes the deferred next ranks AND
+      // computes the L1 delta
+      val l1 = (prev: DataFrame, next: DataFrame) => {
+        delta = next.join(prev.withColumnRenamed("rank", "prev"), Seq("node"))
           .agg(sum(abs(col("rank") - col("prev")))).head().getDouble(0)
-        Checkpoints.release(ranks)
-        Checkpoints.release(withDeg)
-        withDeg = null
-        ranks = next; next = null
-        it += 1
+        delta <= tol
+      }
+      val ranks = loop.rounds(maxIter,
+          loop.eager(nodes.select(col("node"), lit(1.0 / n).as("rank"))), Some(l1)) {
+        (ranks, _) =>
+          // job 1: materialize the join once; dangling agg and contribs
+          // both read its blocks instead of re-running the shuffle
+          val withDeg = loop.eager(
+            ranks.join(outDeg, ranks("node") === outDeg("src"), "left"))
+          // dangling nodes (no out-edges) donate their mass to everyone —
+          // a 1-row broadcast INSIDE the plan, not a separate driver action
+          val dangling = broadcast(withDeg.filter(col("deg").isNull)
+            .agg(coalesce(sum(col("rank")), lit(0.0)).as("dm")))
+          val contribs = withDeg.filter(col("deg").isNotNull)
+            .select(col("node"), (col("rank") / col("deg")).as("share"))
+            .join(e, col("node") === col("src"))
+            .groupBy(col("dst")).agg(sum(col("share")).as("inflow"))
+          loop.deferred(nodes
+            .join(contribs, nodes("node") === contribs("dst"), "left")
+            .crossJoin(dangling)
+            .select(nodes("node"),
+              (lit((1.0 - damping) / n) +
+                lit(damping) * (coalesce(col("inflow"), lit(0.0)) + col("dm") / lit(n)))
+                .as("rank")))
       }
       require(delta <= tol, s"pageRank did not converge in $maxIter rounds (delta=$delta)")
       ranks
-    } catch { case t: Throwable =>
-      // free the in-flight working set; `ranks` is superseded on error
-      Checkpoints.release(ranks)
-      if (withDeg != null) Checkpoints.release(withDeg)
-      if (next != null) Checkpoints.release(next)
-      throw t
-    } finally {
-      // the returned frame is a materialized LogicalRDD; the shared
-      // inputs are no longer reachable on ANY exit path — free them
-      Checkpoints.release(e)
-      Checkpoints.release(nodes)
-      Checkpoints.release(outDeg)
     }
   }
 
@@ -126,7 +103,7 @@ object PageRank {
     * next-state job whose only exchange is the groupBy(dst) aggregation
     * (the state⋈edges and state⋈contribs joins are co-partitioned).
     * `dampNum/dampDen` is the rational damping factor (85/100 = 0.85).
-    * Returns (node: long, rank_fp: long). */
+    * Returns (node: long, rank_fp: long), the last round's checkpoint. */
   def pageRankFixedPoint(edges: DataFrame, srcCol: String, dstCol: String,
                          iters: Int = 5, massUnit: Long = 1000000000000L,
                          dampNum: Long = 85, dampDen: Long = 100): DataFrame = {
@@ -138,66 +115,45 @@ object PageRank {
     // join is co-partitioned — zero per-round edge shuffle. The round's
     // only exchange left is the groupBy(dst) aggregation (guide §2.4:
     // establish the partitioning once, reuse it every round).
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .repartition(col("src"))
-      .localCheckpoint(true)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val n = nodes.count()
-    require(n > 0, "pageRankFixedPoint needs at least one edge")
-    // (1-d)/n of the total mass, in units — driver-side long division,
-    // matching the oracle's `((dampDen-dampNum)*massUnit) // (dampDen*n)`
-    val base = (dampDen - dampNum) * massUnit / (dampDen * n)
-    // State carries (node, deg, rank_fp): the out-degree is LOOP
-    // INVARIANT, so joining it in once — instead of ranks⋈outDeg every
-    // round (the r20-measured shape: one extra join + checkpoint job per
-    // round) — removes a whole shuffle join from every iteration. deg is
-    // NULL for dangling nodes, exactly the old withDeg contract.
-    var ranks = nodes.join(outDeg, nodes("node") === outDeg("src"), "left")
-      .select(nodes("node"), col("deg"), lit(massUnit / n).as("rank_fp"))
-      .localCheckpoint(true)
-    // ONE job per round: the eager next-state checkpoint (its dangling
-    // 1-row broadcast rides inside the same plan, reading the previous
-    // state's blocks).
-    try {
-      var it = 0
-      while (it < iters) {
+    Checkpoints.iterate { loop =>
+      val e = loop.eager(edges.select(col(srcCol).cast("long").as("src"),
+        col(dstCol).cast("long").as("dst"))
+        .filter(col("src").isNotNull && col("dst").isNotNull)
+        .distinct()
+        .repartition(col("src")))
+      val nodes = e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct()
+      val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      val n = nodes.count()
+      require(n > 0, "pageRankFixedPoint needs at least one edge")
+      // (1-d)/n of the total mass, in units — driver-side long division,
+      // matching the oracle's `((dampDen-dampNum)*massUnit) // (dampDen*n)`
+      val base = (dampDen - dampNum) * massUnit / (dampDen * n)
+      // State carries (node, deg, rank_fp): the out-degree is LOOP
+      // INVARIANT, so joining it in once — instead of ranks⋈outDeg every
+      // round (the r20-measured shape: one extra join + checkpoint job per
+      // round) — removes a whole shuffle join from every iteration. deg is
+      // NULL for dangling nodes, exactly the old withDeg contract.
+      val init = loop.eager(nodes.join(outDeg, nodes("node") === outDeg("src"), "left")
+        .select(nodes("node"), col("deg"), lit(massUnit / n).as("rank_fp")))
+      // ONE job per round: the eager next-state checkpoint (its dangling
+      // 1-row broadcast rides inside the same plan, reading the previous
+      // state's blocks). The last round drops deg: the public (node,
+      // rank_fp) shape is that round's checkpoint itself.
+      loop.rounds(iters, init) { (ranks, r) =>
         val dangling = broadcast(ranks.filter(col("deg").isNull)
           .agg(coalesce(sum(col("rank_fp")), lit(0L)).as("dm")))
         val contribs = ranks.filter(col("deg").isNotNull)
           .select(col("node"), expr("rank_fp div deg").as("share"))
           .join(e, col("node") === col("src"))
           .groupBy(col("dst")).agg(sum(col("share")).as("inflow"))
-        val next = ranks.select(col("node"), col("deg"))
+        val rank = (lit(base) + expr(
+          s"($dampNum * (coalesce(inflow, 0L) + dm div ${n}L)) div $dampDen")).as("rank_fp")
+        loop.eager(ranks.select(col("node"), col("deg"))
           .join(contribs, col("node") === col("dst"), "left")
           .crossJoin(dangling)
-          .select(col("node"), col("deg"),
-            (lit(base) + expr(
-              s"($dampNum * (coalesce(inflow, 0L) + dm div ${n}L)) div $dampDen"))
-              .as("rank_fp"))
-          .localCheckpoint(true)
-        Checkpoints.release(ranks)
-        ranks = next
-        it += 1
+          .select(col("node") +: (if (r < iters) Seq(col("deg"), rank) else Seq(rank)): _*))
       }
-      // the checkpoint holds (node, deg, rank_fp); the public contract
-      // is (node, rank_fp) — a zero-cost projection over its blocks.
-      // OWNERSHIP (advisor note): the returned frame is a projection
-      // OVER the final checkpoint, not the checkpoint itself, so
-      // Checkpoints.release(returned) is deliberately a no-op (its root
-      // is a Project, not the LogicalRDD) — the final round's blocks
-      // live until driver GC / session end. Callers needing eager
-      // release must keep their own handle on an eager materialization.
-      ranks.select(col("node"), col("rank_fp"))
-    } catch { case t: Throwable =>
-      Checkpoints.release(ranks)
-      throw t
-    } finally {
-      Checkpoints.release(e)
     }
   }
 
@@ -213,8 +169,8 @@ object PageRank {
     * carried in BIGINT mass units with truncating div throughout —
     * bit-identical under any partitioning and in any engine. Seeds not
     * present in the graph are ignored (|S| counts the intersection).
-    * Same deg-in-state loop, one job per round, checkpoint hygiene as
-    * the uniform variant. Returns (node, is_seed, rank_fp). */
+    * Same deg-in-state loop, one job per round, as the uniform variant.
+    * Returns (node, is_seed, rank_fp), the last round's checkpoint. */
   def personalizedPageRankFixedPoint(edges: DataFrame, srcCol: String, dstCol: String,
                                      seeds: DataFrame, seedCol: String,
                                      iters: Int = 5, massUnit: Long = 1000000000000L,
@@ -223,58 +179,46 @@ object PageRank {
       s"need iters >= 1 and 0 < dampNum < dampDen; got $iters, $dampNum/$dampDen")
     // same src-partitioned edge checkpoint + deg-in-state loop shape as
     // [[pageRankFixedPoint]] — see the comments there
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .repartition(col("src"))
-      .localCheckpoint(true)
-    val sd = seeds.select(col(seedCol).cast("long").as("node"))
-      .filter(col("node").isNotNull).distinct()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .join(sd.withColumn("is_seed", lit(1L)), Seq("node"), "left")
-      .select(col("node"), coalesce(col("is_seed"), lit(0L)).as("is_seed"))
-    val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    // seed count BEFORE the state checkpoint (nodes' subtree runs twice,
-    // once per action, reading e's blocks — cheaper than a third
-    // checkpoint whose only reader is this count)
-    val nS = nodes.filter(col("is_seed") === 1L).count()
-    require(nS > 0, "personalizedPageRankFixedPoint needs >= 1 seed present in the graph")
-    val base = (dampDen - dampNum) * massUnit / (dampDen * nS)
-    // init: ALL mass on the seeds — the personalized stationary start;
-    // is_seed AND deg ride in the state frame (loop invariants both)
-    var ranks = nodes.join(outDeg, nodes("node") === outDeg("src"), "left")
-      .select(nodes("node"), col("is_seed"), col("deg"),
-        (col("is_seed") * lit(massUnit / nS)).as("rank_fp"))
-      .localCheckpoint(true)
-    try {
-      var it = 0
-      while (it < iters) {
+    Checkpoints.iterate { loop =>
+      val e = loop.eager(edges.select(col(srcCol).cast("long").as("src"),
+        col(dstCol).cast("long").as("dst"))
+        .filter(col("src").isNotNull && col("dst").isNotNull)
+        .distinct()
+        .repartition(col("src")))
+      val sd = seeds.select(col(seedCol).cast("long").as("node"))
+        .filter(col("node").isNotNull).distinct()
+      val nodes = e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct()
+        .join(sd.withColumn("is_seed", lit(1L)), Seq("node"), "left")
+        .select(col("node"), coalesce(col("is_seed"), lit(0L)).as("is_seed"))
+      val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      // seed count BEFORE the state checkpoint (nodes' subtree runs twice,
+      // once per action, reading e's blocks — cheaper than a third
+      // checkpoint whose only reader is this count)
+      val nS = nodes.filter(col("is_seed") === 1L).count()
+      require(nS > 0, "personalizedPageRankFixedPoint needs >= 1 seed present in the graph")
+      val base = (dampDen - dampNum) * massUnit / (dampDen * nS)
+      // init: ALL mass on the seeds — the personalized stationary start;
+      // is_seed AND deg ride in the state frame (loop invariants both)
+      val init = loop.eager(nodes.join(outDeg, nodes("node") === outDeg("src"), "left")
+        .select(nodes("node"), col("is_seed"), col("deg"),
+          (col("is_seed") * lit(massUnit / nS)).as("rank_fp")))
+      loop.rounds(iters, init) { (ranks, r) =>
         val dangling = broadcast(ranks.filter(col("deg").isNull)
           .agg(coalesce(sum(col("rank_fp")), lit(0L)).as("dm")))
         val contribs = ranks.filter(col("deg").isNotNull)
           .select(col("node"), expr("rank_fp div deg").as("share"))
           .join(e, col("node") === col("src"))
           .groupBy(col("dst")).agg(sum(col("share")).as("inflow"))
-        val next = ranks.select(col("node"), col("is_seed"), col("deg"))
+        val rank = (col("is_seed") * lit(base) + expr(
+          s"($dampNum * (coalesce(inflow, 0L) + is_seed * (dm div ${nS}L))) div $dampDen"))
+          .as("rank_fp")
+        loop.eager(ranks.select(col("node"), col("is_seed"), col("deg"))
           .join(contribs, col("node") === col("dst"), "left")
           .crossJoin(dangling)
-          .select(col("node"), col("is_seed"), col("deg"),
-            (col("is_seed") * lit(base) + expr(
-              s"($dampNum * (coalesce(inflow, 0L) + is_seed * (dm div ${nS}L))) div $dampDen"))
-              .as("rank_fp"))
-          .localCheckpoint(true)
-        Checkpoints.release(ranks)
-        ranks = next
-        it += 1
+          .select(Seq(col("node"), col("is_seed")) ++
+            (if (r < iters) Seq(col("deg"), rank) else Seq(rank)): _*))
       }
-      ranks.select(col("node"), col("is_seed"), col("rank_fp"))
-    } catch { case t: Throwable =>
-      Checkpoints.release(ranks)
-      throw t
-    } finally {
-      Checkpoints.release(e)
     }
   }
 }

@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions._
   * aggregation per round — associative, partitioning-independent integer
   * math that an unrolled CTE replays exactly. After R rounds the result
   * is the exact minimum over paths of ≤ R edges: the same fixed-round
-  * determinism contract as fixed-point PageRank and [[KCore]], with
-  * per-round `localCheckpoint` + release lineage hygiene.
+  * determinism contract as fixed-point PageRank and [[KCore]].
   */
 object ShortestPaths {
 
@@ -39,26 +38,18 @@ object ShortestPaths {
     // relaxation join keys both.s against the distance state's node, so
     // only the state side shuffles per round; the edge frame never
     // moves again.
-    val both = und.unionAll(und.select(col("t").as("s"), col("s").as("t"), col("w")))
-      .repartition(col("s"))
-      .localCheckpoint(true)
-    var dist = seeds.select(col(seedCol).cast("long").as("node")).distinct()
-      .withColumn("dist", lit(0L))
-      .localCheckpoint(true)
-    try {
-      for (_ <- 1 to rounds) {
+    Checkpoints.iterate { loop =>
+      val both = loop.eager(
+        und.unionAll(und.select(col("t").as("s"), col("s").as("t"), col("w")))
+          .repartition(col("s")))
+      val init = loop.eager(seeds.select(col(seedCol).cast("long").as("node")).distinct()
+        .withColumn("dist", lit(0L)))
+      loop.rounds(rounds, init) { (dist, _) =>
         val relaxed = both.join(dist, both("s") === dist("node"))
           .select(col("t").as("node"), (col("dist") + col("w")).as("dist"))
-        val merged = dist.unionAll(relaxed)
-          .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-          .localCheckpoint(true)
-        Checkpoints.release(dist)
-        dist = merged
+        loop.eager(dist.unionAll(relaxed)
+          .groupBy(col("node")).agg(min(col("dist")).as("dist")))
       }
-      dist.localCheckpoint(true)
-    } finally {
-      Checkpoints.release(dist)
-      Checkpoints.release(both)
     }
   }
 }

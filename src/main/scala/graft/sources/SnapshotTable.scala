@@ -2279,6 +2279,8 @@ class SnapshotTable(spark: SparkSession, root: String,
   def commitDeleteByKey(keys: DataFrame, keyCols: Seq[String]): Long = {
     require(keyCols.nonEmpty, "MOR delete needs at least one key column")
     keyCols.foreach(jsonSafe(_, "delete-key column")) // fail before any write
+    val tip = latestVersion()
+    require(tip > 0, s"DELETE on empty table at $root")
     import org.apache.spark.sql.functions.col
     val (keyFiles, _) = writeDataFiles(keys.select(keyCols.map(col): _*).distinct())
     // per-delete-file key counts + key bands: the writer folded both
@@ -2287,8 +2289,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     val added = FileSet(Seq.empty, emptyStats, deletes = keyFiles.files,
       deleteKey = keyCols, deleteLens = keyFiles.lens, drows = keyFiles.frows,
       dmins = newDmins, dmaxs = newDmaxs)
-    commitLoop("commitDeleteByKey", preWritten = keyFiles.files) { base =>
-      require(base > 0, s"DELETE on empty table at $root")
+    commitLoop("commitDeleteByKey", Some(tip), keyFiles.files) { base =>
       val snapBase = snapshot(base)
       val prev = fileSetOf(snapBase)
       require(prev.deleteKey.isEmpty || prev.deleteKey == keyCols,
@@ -2340,6 +2341,8 @@ class SnapshotTable(spark: SparkSession, root: String,
     require(statsCols.contains(column),
       s"commitReplaceWhere on $root: '$column' is not a stats column " +
         s"(${statsCols.mkString(",")})")
+    val tip = latestVersion()
+    require(tip > 0, s"replaceWhere on empty table at $root")
     // NULL keys count as outside (they can't be range-validated); the
     // null-safe <=> keeps them from slipping through a three-valued NOT
     val outside = batch.filter(
@@ -2349,7 +2352,7 @@ class SnapshotTable(spark: SparkSession, root: String,
         "(NULLs count as outside)")
     val (batchFiles, batchRows) = writeDataFiles(guarded(batch))
     replaceWhereAtTip(column, lo, hi, batchFiles, batchRows,
-      normalizeSchema(batch.schema))
+      normalizeSchema(batch.schema), Some(tip))
   }
 
   /** The DSv2 half of replaceWhere: publish PRE-WRITTEN files as the
@@ -2386,13 +2389,15 @@ class SnapshotTable(spark: SparkSession, root: String,
 
   /** Shared optimistic loop of both replaceWhere paths: keep files fully
     * outside the range, drop files provably fully inside, rewrite only
-    * straddlers, publish at the validated base. */
+    * straddlers, publish at the validated base. `first` is a tip the
+    * caller already resolved and found non-empty. */
   private def replaceWhereAtTip(column: String, lo: Long, hi: Long,
                                 batchFiles: FileSet, batchRows: Long,
-                                batchSchema: StructType): Long = {
+                                batchSchema: StructType,
+                                first: Option[Long] = None): Long = {
     import org.apache.spark.sql.functions.col
     val ci = statsCols.indexOf(column)
-    commitLoop("commitReplaceWhere", preWritten = batchFiles.files) { base =>
+    commitLoop("commitReplaceWhere", first, batchFiles.files) { base =>
       require(base > 0, s"replaceWhere on empty table at $root")
       val snap = snapshot(base)
       val prev = fileSetOf(snap)

@@ -12,26 +12,31 @@ import org.apache.spark.sql.types._
   * order-statistic idiom (OHLC open/close picks) with a FLAT aggregation
   * buffer.
   *
-  * Why it exists (r21 measurement, the ArgMinLongPair pattern widened
-  * with a payload slot per the r20 verdict): `min(struct(...))` carries a
-  * struct-typed buffer, which HashAggregateExec cannot hold in its
-  * UnsafeRow hash map, so Spark plans a SortAggregate with a Sort UNDER
+  * Why it exists: `min(struct(...))` carries a struct-typed buffer,
+  * which HashAggregateExec cannot hold in its UnsafeRow hash map, so
+  * Spark plans a SortAggregate. In label propagation (r20) that was a
+  * Sort on BOTH sides of every round's exchange for what is
+  * conceptually a two-long comparison; in OHLC bars (r21) a Sort UNDER
   * the partial aggregate — over the FULL input (every event row, at
   * 100 TB the fact table) rather than the grouped output
   * (plans/r21/misc_ohlc_bars_before.txt: Sort(4) + SortAggregate(5)
-  * directly over the scan). This DeclarativeAggregate keeps
+  * directly over the scan). The measured r20 workarounds lost: a
+  * max-then-min two-phase rewrite costs an extra checkpoint + join per
+  * round (LPA 3.37 → 4.54 s), and packing (-count, label) into one long
+  * caps the label range. This DeclarativeAggregate keeps
   * (bk1, bk2, bv, seen) as four mutable primitive slots —
-  * hash-aggregable, whole-stage-codegen'd, map-side combinable.
+  * hash-aggregable, whole-stage-codegen'd, map-side combinable. A
+  * two-field argmin `min(struct(k, v)).v` is `argminValue(k, v, v)`: the
+  * (k, v, v) triple orders exactly like the (k, v) pair.
   *
   * Semantics match min/max(struct(k1, k2, v)).v for NULL-FREE input: full
   * three-field lexicographic comparison (value participates in the
   * tie-break, exactly like the struct), ties resolving to the
   * first-compared smaller (min) / larger (max) triple. NULL contract
-  * (deliberate, same as [[ArgMinLongPair]]): rows with a NULL key or
-  * value are SKIPPED, where struct-min would rank a null field first —
-  * callers must guarantee non-null inputs or accept the difference (the
-  * oracle gates every call site at three SFs). Empty/all-null groups
-  * evaluate to NULL.
+  * (deliberate): rows with a NULL key or value are SKIPPED, where
+  * struct-min would rank a null field first — callers must guarantee
+  * non-null inputs or accept the difference (the oracle gates every call
+  * site at three SFs). Empty/all-null groups evaluate to NULL.
   *
   * Types: any mutable-primitive-backed atomic type per slot (LONG, INT,
   * TIMESTAMP, DATE, DOUBLE, FLOAT, SHORT, BYTE, BOOLEAN) — the
@@ -111,7 +116,10 @@ case class ArgExtremePairValue(key1: Expression, key2: Expression,
 
 object ArgExtremePairValue {
   /** The value of the row MINIMIZING (key1, key2, value) lexicographic —
-    * `min(struct(key1, key2, value)).value` with a flat buffer. */
+    * `min(struct(key1, key2, value)).value` with a flat buffer. NULL
+    * contract: rows with a NULL key or value are IGNORED (an empty or
+    * all-null group evaluates to NULL) — NOT a drop-in for struct-min on
+    * nullable inputs, where a null field ranks FIRST. */
   def argminValue(key1: Column, key2: Column, value: Column): Column =
     bridge.column(ArgExtremePairValue(bridge.expression(key1),
       bridge.expression(key2), bridge.expression(value),

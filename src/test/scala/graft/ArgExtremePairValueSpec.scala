@@ -10,9 +10,9 @@ import org.apache.spark.sql.graft.ArgExtremePairValue
   * (the VALUE participates as the third compare field, exactly like the
   * struct), NULL inputs (ignored — the documented contract difference vs
   * struct-min on nullable fields), and all-NULL groups (NULL result).
-  * Mixed slot types (timestamp key, double payload — the OHLC shape) and
-  * the plan claim that motivated it (HashAggregate, no SortAggregate)
-  * are pinned too. */
+  * The two-field (k, v, v) form, mixed slot types (timestamp key, double
+  * payload — the OHLC shape) and the plan claim that motivated it
+  * (HashAggregate, no SortAggregate) are pinned too. */
 class ArgExtremePairValueSpec extends SparkSpec {
   import spark.implicits._
 
@@ -53,6 +53,35 @@ class ArgExtremePairValueSpec extends SparkSpec {
     }
   }
 
+  // the two-field form (label propagation, paragraph dedup): the
+  // (k, v, v) triple orders exactly like the (k, v) pair
+  test("(k, v, v) == min(struct(k, v)).v under partitionings, ties, nulls") {
+    val rng = new scala.util.Random(11)
+    val rows = (1 to 3000).map { i =>
+      (rng.nextInt(50).toLong,
+        java.lang.Long.valueOf(rng.nextInt(6).toLong), // coarse keys: ties
+        java.lang.Long.valueOf(rng.nextInt(1000).toLong))
+    } ++ Seq(
+      (777L, null.asInstanceOf[java.lang.Long], java.lang.Long.valueOf(5L)),
+      (777L, java.lang.Long.valueOf(2L), null.asInstanceOf[java.lang.Long]),
+      (778L, null.asInstanceOf[java.lang.Long], null.asInstanceOf[java.lang.Long]))
+    val df = rows.toDF("g", "k", "v")
+    // groups 777/778 exist only through null-slotted rows: both must
+    // evaluate to NULL — the documented skip-null contract
+    val expected = df.filter(col("k").isNotNull && col("v").isNotNull)
+      .groupBy(col("g"))
+      .agg(min(struct(col("k"), col("v"))).as("m"))
+      .select(col("g"), col("m.v").as("v"))
+      .as[(Long, Option[Long])].collect().toMap ++
+      Map(777L -> (None: Option[Long]), 778L -> (None: Option[Long]))
+    for (n <- Seq(1, 3, 17)) {
+      val got = df.repartition(n).groupBy(col("g"))
+        .agg(ArgExtremePairValue.argminValue(col("k"), col("v"), col("v")).as("v"))
+        .as[(Long, Option[Long])].collect().toMap
+      assert(got == expected, s"mismatch at $n partitions")
+    }
+  }
+
   test("timestamp key + long key + double payload (the OHLC shape)") {
     val df = Seq(
       (1L, java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), 5L, 2.5),
@@ -70,13 +99,18 @@ class ArgExtremePairValueSpec extends SparkSpec {
   }
 
   test("plans as hash aggregate (the reason it exists)") {
-    val df = Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 2L, 3.0))
+    val ohlc = Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 2L, 3.0))
       .toDF("g", "ts", "id", "v")
       .groupBy(col("g"))
       .agg(ArgExtremePairValue.argminValue(col("ts"), col("id"), col("v")).as("o"),
         ArgExtremePairValue.argmaxValue(col("ts"), col("id"), col("v")).as("c"))
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("HashAggregate"), s"expected HashAggregate, got:\n$plan")
-    assert(!plan.contains("SortAggregate"), s"unexpected SortAggregate:\n$plan")
+    val pair = Seq((1L, 2L, 3L)).toDF("g", "k", "v")
+      .groupBy(col("g"))
+      .agg(ArgExtremePairValue.argminValue(col("k"), col("v"), col("v")).as("v"))
+    for (df <- Seq(ohlc, pair)) {
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("HashAggregate"), s"expected HashAggregate, got:\n$plan")
+      assert(!plan.contains("SortAggregate"), s"unexpected SortAggregate:\n$plan")
+    }
   }
 }

@@ -65,6 +65,22 @@ class CommitLoopSpec extends SparkSpec {
     }
   }
 
+  // the same two verbs on a table with no committed version: refused
+  // before they write anything
+  Seq[(String, SnapshotTable => Any)](
+    ("DELETE", _.commitDeleteByKey(Seq(2L).toDF("id"), Seq("id"))),
+    ("replaceWhere", _.commitReplaceWhere("id", Seq(1L, 2L).toDF("id"), 1L, 2L))
+  ).foreach { case (op, commit) =>
+    test(s"empty table: $op is refused and writes no commit dir") {
+      val root = freshRoot(s"${op}empty")
+      val t = new SnapshotTable(spark, root, statsCols = Seq("id"))
+      val e = intercept[IllegalArgumentException](commit(t))
+      assert(e.getMessage.contains(s"$op on empty table at $root"), e.getMessage)
+      val orphans = commitDirsOnDisk(root) -- commitDirsReferenced(t)
+      assert(orphans.isEmpty, s"$op on an empty table left commit dirs: $orphans")
+    }
+  }
+
   test("give-up: a re-deriving verb gives up the same way") {
     val root = freshRoot("repairgiveup")
     val t = new SnapshotTable(spark, root)
