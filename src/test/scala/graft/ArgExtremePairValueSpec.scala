@@ -99,18 +99,22 @@ class ArgExtremePairValueSpec extends SparkSpec {
   }
 
   test("plans as hash aggregate (the reason it exists)") {
-    val ohlc = Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 2L, 3.0))
+    val df = Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 2L, 3.0))
       .toDF("g", "ts", "id", "v")
       .groupBy(col("g"))
       .agg(ArgExtremePairValue.argminValue(col("ts"), col("id"), col("v")).as("o"),
         ArgExtremePairValue.argmaxValue(col("ts"), col("id"), col("v")).as("c"))
-    val pair = Seq((1L, 2L, 3L)).toDF("g", "k", "v")
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("HashAggregate"), s"expected HashAggregate, got:\n$plan")
+    assert(!plan.contains("SortAggregate"), s"unexpected SortAggregate:\n$plan")
+  }
+
+  test("(k, v, v) plans as hash aggregate") {
+    val df = Seq((1L, 2L, 3L)).toDF("g", "k", "v")
       .groupBy(col("g"))
       .agg(ArgExtremePairValue.argminValue(col("k"), col("v"), col("v")).as("v"))
-    for (df <- Seq(ohlc, pair)) {
-      val plan = df.queryExecution.executedPlan.toString
-      assert(plan.contains("HashAggregate"), s"expected HashAggregate, got:\n$plan")
-      assert(!plan.contains("SortAggregate"), s"unexpected SortAggregate:\n$plan")
-    }
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("HashAggregate"), s"expected HashAggregate, got:\n$plan")
+    assert(!plan.contains("SortAggregate"), s"unexpected SortAggregate:\n$plan")
   }
 }
