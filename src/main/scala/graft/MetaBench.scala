@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import graft.sources.{ColStats, SnapshotTable, SnapshotParquetWriter, SnapshotWriteMessage}
+import graft.sources.{ColStats, Pruning, SnapshotTable, SnapshotParquetWriter, SnapshotWriteMessage}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Metadata/planning cost at HIGH commit and file counts — the
@@ -88,10 +88,10 @@ object MetaBench {
       tPlan.read(tip).queryExecution.executedPlan.toString.length)
     val planStats = tPlan.dataStats.get()
     val t = fresh()
-    val (specFull, dmlFullMs) = timed(t.dmlSpecPruned(tip, Map.empty))
+    val (specFull, dmlFullMs) = timed(t.dmlSpecPruned(tip, Pruning()))
     val dmlStats = t.dataStats.get()
     val (specPruned, dmlPrunedMs) = timed(
-      fresh().dmlSpecPruned(tip, Map("id" -> (5L, 9L))))
+      fresh().dmlSpecPruned(tip, Pruning(bands = Map("id" -> ((5L, 9L))))))
     val (cnt, countMs) = timed(
       spark.read.format("graft-snapshot").load(root).count())
 

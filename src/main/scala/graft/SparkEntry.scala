@@ -48,14 +48,25 @@ object SparkEntry {
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    RetailQueries.queries ++ MetaQueries.queries ++ MmsQueries.queries ++
-      SyncQueries.queries ++ CheckQueries.queries ++ LlmQueries.queries ++
-      StreamQueries.queries ++ MiscQueries.queries ++ TpchQueries.queries ++
-      AnalyticsQueries.queries ++ MarketQueries.queries
+    mergeRegistries(RetailQueries.queries, MetaQueries.queries,
+      MmsQueries.queries, SyncQueries.queries, CheckQueries.queries,
+      LlmQueries.queries, StreamQueries.queries, MiscQueries.queries,
+      TpchQueries.queries, AnalyticsQueries.queries, MarketQueries.queries)
 
   def oracleSql: Map[String, String] =
-    RetailQueries.oracle ++ MetaQueries.oracle ++ MmsQueries.oracle ++
-      SyncQueries.oracle ++ CheckQueries.oracle ++ LlmQueries.oracle ++
-      StreamQueries.oracle ++ MiscQueries.oracle ++ TpchQueries.oracle ++
-      AnalyticsQueries.oracle ++ MarketQueries.oracle
+    mergeRegistries(RetailQueries.oracle, MetaQueries.oracle,
+      MmsQueries.oracle, SyncQueries.oracle, CheckQueries.oracle,
+      LlmQueries.oracle, StreamQueries.oracle, MiscQueries.oracle,
+      TpchQueries.oracle, AnalyticsQueries.oracle, MarketQueries.oracle)
+
+  /** The union of per-module registries. A name registered by more than
+    * one module fails, naming every such name — `++` would silently keep
+    * only the last registration. */
+  private[graft] def mergeRegistries[V](modules: Map[String, V]*): Map[String, V] = {
+    val dups = modules.flatMap(_.keys).groupBy(identity)
+      .collect { case (k, ks) if ks.length > 1 => k }.toSeq.sorted
+    require(dups.isEmpty,
+      s"query names registered by more than one module: ${dups.mkString(", ")}")
+    modules.reduce(_ ++ _)
+  }
 }

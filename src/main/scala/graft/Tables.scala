@@ -77,6 +77,18 @@ object Tables {
     dir
   }
 
+  /** A [[freshTmpDir]] warehouse registered as the snapshot catalog
+    * `name`, with its `name.db` namespace created; returns the warehouse
+    * path. Catalog confs are session-global, so each query picks a
+    * unique `name`. */
+  def freshCatalog(s: SparkSession, name: String, tag: String): String = {
+    val wh = freshTmpDir(s, tag).getAbsolutePath
+    s.conf.set(s"spark.sql.catalog.$name", "graft.sources.GraftCatalog")
+    s.conf.set(s"spark.sql.catalog.$name.warehouse", wh)
+    s.sql(s"CREATE NAMESPACE IF NOT EXISTS $name.db")
+    wh
+  }
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = spark.read.parquet(s"$dir/$name.parquet")
     Schemas.all.get(name).foreach { expected =>

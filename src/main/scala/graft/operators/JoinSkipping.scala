@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.sources.{BandKeys, SnapshotTable}
+import graft.sources.{BandKeys, Pruning, SnapshotTable}
 
 /** Join-driven dynamic FILE skipping on the snapshot table — the
   * dynamic-partition-pruning idea applied to the manifest's skipping
@@ -57,7 +57,7 @@ object JoinSkipping {
     if (sample.length <= maxKeys && keys.length == vals.length)
       // per-key pruning: a file survives iff SOME dim key lands in its
       // band AND (when present) its bloom filter admits that key
-      fact.readPruned(Map.empty, Map(factKey -> keys.distinct), Set.empty, v)._1
+      fact.readPruned(Pruning(points = Map(factKey -> keys.distinct)), v)._1
     else {
       // hull fallback: one distributed min/max, zero unbounded collects.
       // Band keys are (at least weakly) monotonic per type, so
@@ -69,7 +69,7 @@ object JoinSkipping {
       } yield (lo._1, hi._1)
       hull match {
         case Some((lo, hi)) =>
-          fact.readPruned(Map(factKey -> ((lo, hi))), Map.empty, Set.empty, v)._1
+          fact.readPruned(Pruning(bands = Map(factKey -> ((lo, hi)))), v)._1
         case None => fact.read(v) // underivable key type: no pruning lane
       }
     }

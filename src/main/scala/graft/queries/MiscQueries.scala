@@ -705,10 +705,7 @@ object MiscQueries {
     // time travel with `VERSION AS OF` against the catalog name. v1 is
     // the CREATE's empty snapshot, so the inserts are versions 2 and 3.
     "misc_catalog_sql" -> ((s, d) => {
-      val wh = Tables.freshTmpDir(s, "graft_catsql").getAbsolutePath
-      s.conf.set("spark.sql.catalog.gsql", "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gsql.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS gsql.db")
+      Tables.freshCatalog(s, "gsql", "graft_catsql")
       SharedFrames.ordersCents(s, d)
         .createOrReplaceTempView("catsql_src")
       s.sql("CREATE TABLE gsql.db.orders_cat (o_orderkey BIGINT, cents BIGINT) " +
@@ -956,10 +953,7 @@ object MiscQueries {
     // superset — the join re-applies the exact predicate).
     "misc_snapshot_join_auto" -> ((s, d) => {
       org.apache.spark.sql.graft.GraftFunctions.register(s)
-      val wh = Tables.freshTmpDir(s, "graft_snapjoinauto").getAbsolutePath
-      s.conf.set("spark.sql.catalog.gja", "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gja.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS gja.db")
+      val wh = Tables.freshCatalog(s, "gja", "graft_snapjoinauto")
       s.sql("CREATE TABLE gja.db.fact (o_custkey BIGINT, cents BIGINT) " +
         "USING `graft-snapshot` TBLPROPERTIES('stats_cols'='o_custkey')")
       val o = SharedFrames.ordersCustCents(s, d)
@@ -1011,9 +1005,8 @@ object MiscQueries {
       t.commitAppend(o.filter(col("day") >= lit(c2)).repartition(1))
       def day(x: String) = java.sql.Date.valueOf(x).toLocalDate.toEpochDay
       val est = t.estimateDistinct("day")
-      val estPruned = t.plannedColumnNdvs(
-        Map("day" -> ((day("1997-01-01"), day("1999-01-01") - 1))),
-        Map.empty, Set.empty, Seq.empty, -1L).get("day")
+      val estPruned = t.plannedColumnNdvs(graft.sources.Pruning(bands =
+        Map("day" -> ((day("1997-01-01"), day("1999-01-01") - 1)))), -1L).get("day")
       def leg(name: String, filter: org.apache.spark.sql.Column,
               estimate: Option[Long]) = {
         val exact = t.read().filter(filter).agg(
@@ -1096,10 +1089,7 @@ object MiscQueries {
     // over the same rows. The V2 path, not a side API.
     "misc_snapshot_cbo_bounds" -> ((s, d) => {
       org.apache.spark.sql.graft.GraftFunctions.register(s)
-      val wh = Tables.freshTmpDir(s, "graft_cbobounds").getAbsolutePath
-      s.conf.set("spark.sql.catalog.gcbs", "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gcbs.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS gcbs.db")
+      Tables.freshCatalog(s, "gcbs", "graft_cbobounds")
       s.sql("CREATE TABLE gcbs.db.t (k BIGINT, cents BIGINT) " +
         "USING `graft-snapshot` TBLPROPERTIES('stats_cols'='k,cents')")
       Tables.orders(s, d).select(col("o_orderkey").as("k"),
@@ -1131,10 +1121,7 @@ object MiscQueries {
     // files_pruned pins it; values replay as the plain join.
     "misc_snapshot_join_hull" -> ((s, d) => {
       org.apache.spark.sql.graft.GraftFunctions.register(s)
-      val wh = Tables.freshTmpDir(s, "graft_snapjoinhull").getAbsolutePath
-      s.conf.set("spark.sql.catalog.gjh", "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gjh.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS gjh.db")
+      val wh = Tables.freshCatalog(s, "gjh", "graft_snapjoinhull")
       s.sql("CREATE TABLE gjh.db.fact (o_custkey BIGINT, cents BIGINT) " +
         "USING `graft-snapshot` TBLPROPERTIES('stats_cols'='o_custkey')")
       val o = SharedFrames.ordersCustCents(s, d)
@@ -1199,10 +1186,7 @@ object MiscQueries {
     // read or written. metadata_only pins file identity across the
     // statement; the version history replays in DuckDB.
     "misc_catalog_dml_date" -> ((s, d) => {
-      val wh = Tables.freshTmpDir(s, "graft_catdmldate").getAbsolutePath
-      s.conf.set("spark.sql.catalog.gdd", "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gdd.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS gdd.db")
+      val wh = Tables.freshCatalog(s, "gdd", "graft_catdmldate")
       SharedFrames.ordersDayCents(s, d)
         .createOrReplaceTempView("catdmldate_src")
       s.sql("CREATE TABLE gdd.db.daily (day DATE, cents BIGINT) " +
@@ -1264,10 +1248,7 @@ object MiscQueries {
     // two edge files off the manifest with zero files read or written
     // (metadata_only pins file identity). Versions replay in DuckDB.
     "misc_catalog_dml_or" -> ((s, d) => {
-      val wh = Tables.freshTmpDir(s, "graft_catdmlor").getAbsolutePath
-      s.conf.set("spark.sql.catalog.gor", "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gor.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS gor.db")
+      val wh = Tables.freshCatalog(s, "gor", "graft_catdmlor")
       SharedFrames.ordersDayCents(s, d)
         .createOrReplaceTempView("catdmlor_src")
       s.sql("CREATE TABLE gor.db.daily (day DATE, cents BIGINT) " +
@@ -1302,10 +1283,7 @@ object MiscQueries {
     // written. metadata_only pins file identity across the statement;
     // the version history replays in DuckDB.
     "misc_catalog_dml_ts" -> ((s, d) => {
-      val wh = Tables.freshTmpDir(s, "graft_catdmlts").getAbsolutePath
-      s.conf.set("spark.sql.catalog.gts", "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gts.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS gts.db")
+      val wh = Tables.freshCatalog(s, "gts", "graft_catdmlts")
       Tables.events(s, d).select(col("ts"),
         expr("CAST(round(coalesce(value, 0) * 100) AS BIGINT)").as("cents"))
         .createOrReplaceTempView("catdmlts_src")
@@ -1341,10 +1319,7 @@ object MiscQueries {
     // DuckDB as the two updates applied sequentially — exactly what
     // many-writer snapshot isolation promises on a shared 100 TB table.
     "misc_catalog_dml_concurrent" -> ((s, d) => {
-      val wh = Tables.freshTmpDir(s, "graft_catdmlcc").getAbsolutePath
-      s.conf.set("spark.sql.catalog.gcc", "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gcc.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS gcc.db")
+      val wh = Tables.freshCatalog(s, "gcc", "graft_catdmlcc")
       SharedFrames.ordersDayCents(s, d)
         .createOrReplaceTempView("catdmlcc_src")
       s.sql("CREATE TABLE gcc.db.daily (day DATE, cents BIGINT) " +
@@ -1402,10 +1377,7 @@ object MiscQueries {
     // keys. both_committed pins the two versions; every version replays
     // in DuckDB as the insert then the update applied sequentially.
     "misc_catalog_mor_concurrent" -> ((s, d) => {
-      val wh = Tables.freshTmpDir(s, "graft_catmorcc").getAbsolutePath
-      s.conf.set("spark.sql.catalog.gmcq", "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gmcq.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS gmcq.db")
+      val wh = Tables.freshCatalog(s, "gmcq", "graft_catmorcc")
       Tables.orders(s, d).select(col("o_orderkey").as("id"),
         expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
         .createOrReplaceTempView("catmorcc_src")
@@ -1457,10 +1429,7 @@ object MiscQueries {
     // DuckDB; time travel below the DDL still reads the narrow type
     // (dtype pinned in TypeWideningSpec).
     "misc_catalog_widen" -> ((s, d) => {
-      val wh = Tables.freshTmpDir(s, "graft_catwiden").getAbsolutePath
-      s.conf.set("spark.sql.catalog.gwd", "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gwd.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS gwd.db")
+      val wh = Tables.freshCatalog(s, "gwd", "graft_catwiden")
       // k folds into INT range (pmod, not a raw cast): the 100× fixture
       // scales orderkeys past Int.MaxValue and an ANSI cast would fail
       // the INSERT — the r20 full-registry 100× session caught exactly
@@ -1529,10 +1498,7 @@ object MiscQueries {
     // subset (exact counts would pin the range partitioner's sampling,
     // which is an implementation detail); the values replay in DuckDB.
     "misc_catalog_cluster" -> ((s, d) => {
-      val wh = Tables.freshTmpDir(s, "graft_catcluster").getAbsolutePath
-      s.conf.set("spark.sql.catalog.gcl", "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gcl.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS gcl.db")
+      val wh = Tables.freshCatalog(s, "gcl", "graft_catcluster")
       Tables.orders(s, d).select(col("o_orderkey").as("k"),
         to_date(col("o_orderdate")).as("day"),
         expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
@@ -1546,8 +1512,8 @@ object MiscQueries {
       val t = new graft.sources.SnapshotTable(s, s"$wh/db/fact", Seq("k", "day"))
       val (d1, d2) = (java.sql.Date.valueOf("1997-01-01"),
         java.sql.Date.valueOf("1997-12-31"))
-      val (pruned, planned) = t.readPruned(
-        Map("day" -> (d1.toLocalDate.toEpochDay, d2.toLocalDate.toEpochDay)),
+      val (pruned, planned) = t.readPruned(graft.sources.Pruning(bands =
+        Map("day" -> ((d1.toLocalDate.toEpochDay, d2.toLocalDate.toEpochDay)))),
         t.latestVersion())
       val total = t.snapshot(t.latestVersion()).files.length
       pruned.filter(col("day").between(lit(d1), lit(d2)))
@@ -1563,10 +1529,7 @@ object MiscQueries {
     // with the manifest's row count. The post-migration / pre-promote
     // audit as one SQL call.
     "misc_catalog_fsck" -> ((s, d) => {
-      val wh = Tables.freshTmpDir(s, "graft_catfsck").getAbsolutePath
-      s.conf.set("spark.sql.catalog.gfk", "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gfk.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS gfk.db")
+      Tables.freshCatalog(s, "gfk", "graft_catfsck")
       SharedFrames.ordersKCents(s, d)
         .createOrReplaceTempView("catfsck_src")
       s.sql("CREATE TABLE gfk.db.t (k BIGINT, cents BIGINT) " +
@@ -1591,10 +1554,7 @@ object MiscQueries {
     // metadata-served row accounting, reads recover, and fsck is green.
     // Surviving contents equal DuckDB's replay of the two kept ranges.
     "misc_catalog_repair" -> ((s, d) => {
-      val wh = Tables.freshTmpDir(s, "graft_catrepair").getAbsolutePath
-      s.conf.set("spark.sql.catalog.grpr", "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.grpr.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS grpr.db")
+      val wh = Tables.freshCatalog(s, "grpr", "graft_catrepair")
       s.sql("CREATE TABLE grpr.db.t (k BIGINT, cents BIGINT) " +
         "USING `graft-snapshot` TBLPROPERTIES('stats_cols'='k')")
       val src = SharedFrames.ordersKCents(s, d)
@@ -1733,7 +1693,7 @@ object MiscQueries {
       t.commitAppend(slice(2, nullify = true))
       t.commitAppend(slice(0, nullify = false))
       val (pruned, planned) =
-        t.readPruned(Map.empty, Set("k"), t.latestVersion())
+        t.readPruned(graft.sources.Pruning(nullCols = Set("k")), t.latestVersion())
       pruned.filter(col("k").isNull)
         .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
         .select(lit(t.read().inputFiles.length).as("files_total"),
@@ -1753,10 +1713,10 @@ object MiscQueries {
       t.commitAppend(docs.filter(col("source") >= "src2" && col("source") < "src5")
         .repartition(1))
       t.commitAppend(docs.filter(col("source") >= "src5").repartition(1))
-      val bands = graft.sources.SnapshotBatch.bandsOf(Seq(
+      val prefix = graft.sources.Pruning.of(Seq(
         org.apache.spark.sql.sources.StringStartsWith("source", "src3")),
         t.tableBandsV)
-      val (pruned, planned) = t.readPruned(bands, t.latestVersion())
+      val (pruned, planned) = t.readPruned(prefix, t.latestVersion())
       pruned.filter(col("source").startsWith("src3"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
         .select(lit(t.read().inputFiles.length).as("files_total"),
@@ -1771,10 +1731,7 @@ object MiscQueries {
     // name. zero_rewrite pins file identity across the ALTER; every
     // leg's values replay in DuckDB.
     "misc_catalog_rename" -> ((s, d) => {
-      val wh = Tables.freshTmpDir(s, "graft_catrename").getAbsolutePath
-      s.conf.set("spark.sql.catalog.grn", "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.grn.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS grn.db")
+      val wh = Tables.freshCatalog(s, "grn", "graft_catrename")
       Tables.orders(s, d).select(col("o_orderkey"),
         expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("amount"))
         .createOrReplaceTempView("catrename_src")
@@ -1806,10 +1763,7 @@ object MiscQueries {
     // re-listed untouched — `outer_untouched` pins the file-surgical
     // claim, not just the row values). Versions replay in DuckDB.
     "misc_catalog_replace" -> ((s, d) => {
-      val wh = Tables.freshTmpDir(s, "graft_catrw").getAbsolutePath
-      s.conf.set("spark.sql.catalog.grw", "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.grw.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS grw.db")
+      val wh = Tables.freshCatalog(s, "grw", "graft_catrw")
       val base = SharedFrames.ordersCents(s, d)
       base.createOrReplaceTempView("catrw_src")
       val m = base.agg(max(col("o_orderkey"))).head.getLong(0)
@@ -1854,10 +1808,7 @@ object MiscQueries {
     // `CALL <catalog>.system.<proc>(...)`. The version history replays
     // in DuckDB; data_change pins compaction's feed-invisibility.
     "misc_catalog_maintenance" -> ((s, d) => {
-      val wh = Tables.freshTmpDir(s, "graft_catmt").getAbsolutePath
-      s.conf.set("spark.sql.catalog.gmt", "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gmt.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS gmt.db")
+      val wh = Tables.freshCatalog(s, "gmt", "graft_catmt")
       SharedFrames.ordersCents(s, d)
         .createOrReplaceTempView("catmt_src")
       s.sql("CREATE TABLE gmt.db.orders_mt (o_orderkey BIGINT, cents BIGINT) " +
@@ -1891,10 +1842,7 @@ object MiscQueries {
     // through the merge-on-read DML writer. The rejected_* literals are
     // Scala-side caught-exception pins the oracle hard-codes.
     "misc_catalog_constraints" -> ((s, d) => {
-      val wh = Tables.freshTmpDir(s, "graft_catconstr").getAbsolutePath
-      s.conf.set("spark.sql.catalog.gctr", "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gctr.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS gctr.db")
+      val wh = Tables.freshCatalog(s, "gctr", "graft_catconstr")
       SharedFrames.ordersCents(s, d)
         .createOrReplaceTempView("catconstr_src")
       s.sql("CREATE TABLE gctr.db.oc (o_orderkey BIGINT, cents BIGINT) " +
@@ -1922,10 +1870,7 @@ object MiscQueries {
     }),
 
     "misc_catalog_dml" -> ((s, d) => {
-      val wh = Tables.freshTmpDir(s, "graft_catdml").getAbsolutePath
-      s.conf.set("spark.sql.catalog.gdml", "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gdml.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS gdml.db")
+      val wh = Tables.freshCatalog(s, "gdml", "graft_catdml")
       val base = SharedFrames.ordersCents(s, d)
       base.createOrReplaceTempView("catdml_src")
       base.filter(col("o_orderkey") % 6 === 0)
@@ -1963,10 +1908,7 @@ object MiscQueries {
     // matching no file publishes no version at all. The version chain
     // replays in DuckDB.
     "misc_catalog_dml_pruned" -> ((s, d) => {
-      val wh = Tables.freshTmpDir(s, "graft_catdmlp").getAbsolutePath
-      s.conf.set("spark.sql.catalog.gdmlp", "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gdmlp.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS gdmlp.db")
+      val wh = Tables.freshCatalog(s, "gdmlp", "graft_catdmlp")
       val base = SharedFrames.ordersCents(s, d)
       base.createOrReplaceTempView("catdmlp_src")
       val m = base.agg(max(col("o_orderkey"))).head.getLong(0)
@@ -2020,10 +1962,7 @@ object MiscQueries {
     // statements took the MOR path. Replayed in DuckDB by key
     // arithmetic.
     "misc_catalog_dml_mor" -> ((s, d) => {
-      val wh = Tables.freshTmpDir(s, "graft_catmor").getAbsolutePath
-      s.conf.set("spark.sql.catalog.gmor", "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gmor.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS gmor.db")
+      val wh = Tables.freshCatalog(s, "gmor", "graft_catmor")
       SharedFrames.ordersCents(s, d)
         .createOrReplaceTempView("catmor_src")
       s.sql("CREATE TABLE gmor.db.orders_mor (o_orderkey BIGINT, cents BIGINT) " +
@@ -2065,10 +2004,7 @@ object MiscQueries {
     // change feed's retraction replay. Replayed in DuckDB by key
     // arithmetic.
     "misc_catalog_update_mor" -> ((s, d) => {
-      val wh = Tables.freshTmpDir(s, "graft_catumor").getAbsolutePath
-      s.conf.set("spark.sql.catalog.gumor", "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gumor.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS gumor.db")
+      val wh = Tables.freshCatalog(s, "gumor", "graft_catumor")
       val base = SharedFrames.ordersCents(s, d)
       base.filter(col("o_orderkey") % 3 === 0)
         .createOrReplaceTempView("catumor_src")
@@ -2129,10 +2065,7 @@ object MiscQueries {
     // the dimension-sync shape (sync full table, retire stale rows)
     // as ONE statement instead of DimSync's three-legged plan.
     "misc_catalog_merge_source" -> ((s, d) => {
-      val wh = Tables.freshTmpDir(s, "graft_catmbs").getAbsolutePath
-      s.conf.set("spark.sql.catalog.gmbsq", "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gmbsq.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS gmbsq.db")
+      val wh = Tables.freshCatalog(s, "gmbsq", "graft_catmbs")
       val base = SharedFrames.ordersKCents(s, d)
       base.filter(col("k") % 2 === 0)
         .select(col("k"), (col("cents") * 2).as("cents"))
@@ -2182,10 +2115,7 @@ object MiscQueries {
     // content with zero absolute references, and the zero_copy/pin_tag
     // flags are Scala-side structural pins the oracle hard-codes.
     "misc_catalog_clone" -> ((s, d) => {
-      val wh = Tables.freshTmpDir(s, "graft_catclone").getAbsolutePath
-      s.conf.set("spark.sql.catalog.gcln", "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gcln.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS gcln.db")
+      val wh = Tables.freshCatalog(s, "gcln", "graft_catclone")
       SharedFrames.ordersCents(s, d)
         .createOrReplaceTempView("catclone_src")
       s.sql("CREATE TABLE gcln.db.src (o_orderkey BIGINT, cents BIGINT) " +

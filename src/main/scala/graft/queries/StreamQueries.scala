@@ -378,10 +378,7 @@ object StreamQueries {
     // idle pump publishing nothing. Same oracle shape as the path-based
     // sink: the destination is a plain replay of the base table, once.
     "stream_catalog_names" -> ((s, d) => {
-      val wh = Tables.freshTmpDir(s, "graft_catstream").getAbsolutePath
-      s.conf.set("spark.sql.catalog.gstr", "graft.sources.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gstr.warehouse", wh)
-      s.sql("CREATE NAMESPACE IF NOT EXISTS gstr.db")
+      val wh = Tables.freshCatalog(s, "gstr", "graft_catstream")
       val o = SharedFrames.ordersCents(s, d)
       o.createOrReplaceTempView("catstr_src")
       s.sql("CREATE TABLE gstr.db.feed (o_orderkey BIGINT, cents BIGINT) " +

@@ -502,10 +502,7 @@ class GraftSnapshotScanBuilder(spark: SparkSession, table: SnapshotTable,
     * both sides). */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     hadFilters = filters.nonEmpty
-    pruning = filters.filter(f =>
-      SnapshotBatch.bandOf(f, bandsV).isDefined || f.isInstanceOf[IsNull] ||
-        SnapshotBatch.pointsOf(Seq(f), bandsV).nonEmpty ||
-        SnapshotBatch.orAltsOf(Seq(f), bandsV).nonEmpty)
+    pruning = filters.filter(Pruning.derives(_, bandsV))
     filters
   }
   override def pushedFilters(): Array[Filter] = pruning
@@ -645,10 +642,7 @@ class GraftSnapshotScanBuilder(spark: SparkSession, table: SnapshotTable,
     if (pushedCounts.nonEmpty)
       new GraftSnapshotCountScan(pushedCounts, version, table.toString)
     else new GraftSnapshotScan(spark, table, version, required,
-      SnapshotBatch.bandsOf(pruning.toSeq, bandsV), scanOptions,
-      SnapshotBatch.nullPruneCols(pruning.toSeq),
-      SnapshotBatch.pointsOf(pruning.toSeq, bandsV),
-      SnapshotBatch.orAltsOf(pruning.toSeq, bandsV))
+      Pruning.of(pruning.toSeq, bandsV), scanOptions)
 }
 
 /** One-row scan carrying COMPLETE manifest-served counts/extrema — the
@@ -709,14 +703,34 @@ case class SnapshotCountPartition(values: Array[Any])
   * just makes its OR conjunct prune nothing. */
 case class PruneAlt(bands: Map[String, (Long, Long)], isNull: Set[String])
 
+/** The four file-pruning lanes a scan or DML plan carries, each
+  * derived from pushed filters by [[Pruning.of]] and tested per file by
+  * [[SnapshotTable]]'s one admission rule: conjunctive `bands` (equality
+  * bands also consult the file's bloom filter), IN-list `points`
+  * (per-key band + bloom), IS-NULL `nullCols` (a known-zero null count
+  * prunes) and disjunctive `orAlts` (one [[PruneAlt]] list per OR
+  * conjunct). Lanes on non-stats columns prune nothing. */
+case class Pruning(bands: Map[String, (Long, Long)] = Map.empty,
+                   points: Map[String, Seq[Long]] = Map.empty,
+                   nullCols: Set[String] = Set.empty,
+                   orAlts: Seq[Seq[PruneAlt]] = Seq.empty)
+
+object Pruning {
+  def of(filters: Seq[Filter], bandsV: Int): Pruning =
+    Pruning(SnapshotBatch.bandsOf(filters, bandsV),
+      SnapshotBatch.pointsOf(filters, bandsV),
+      SnapshotBatch.nullPruneCols(filters),
+      SnapshotBatch.orAltsOf(filters, bandsV))
+
+  /** Whether `f` feeds any lane — the filters a builder reports pushed. */
+  def derives(f: Filter, bandsV: Int): Boolean = of(Seq(f), bandsV) != Pruning()
+}
+
 class GraftSnapshotScan(spark: SparkSession, table: SnapshotTable,
                         version: Long, required: StructType,
-                        bands: Map[String, (Long, Long)],
+                        pruning: Pruning,
                         options: CaseInsensitiveStringMap =
                           CaseInsensitiveStringMap.empty(),
-                        nullCols: Set[String] = Set.empty,
-                        points: Map[String, Seq[Long]] = Map.empty,
-                        orAlts: Seq[Seq[PruneAlt]] = Seq.empty,
                         joinPrunedCols: Set[String] = Set.empty) extends V1Scan
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
   override def readSchema(): StructType = required
@@ -743,13 +757,13 @@ class GraftSnapshotScan(spark: SparkSession, table: SnapshotTable,
     val keys = values.flatMap(v => BandKeys.valueKey(v, bandsV).map(_._1))
     if (keys.length != values.length) None
     else {
-      val merged = points.get(colName) match {
+      val merged = pruning.points.get(colName) match {
         case Some(existing) => existing.toSet.intersect(keys.toSet).toSeq.sorted
         case None => keys.distinct.sorted
       }
-      Some(new GraftSnapshotScan(spark, table, version, required, bands,
-        options, nullCols, points.updated(colName, merged), orAlts,
-        joinPrunedCols + colName))
+      Some(new GraftSnapshotScan(spark, table, version, required,
+        pruning.copy(points = pruning.points.updated(colName, merged)),
+        options, joinPrunedCols + colName))
     }
   }
 
@@ -769,13 +783,13 @@ class GraftSnapshotScan(spark: SparkSession, table: SnapshotTable,
       lo <- Option(minValue).flatMap(BandKeys.valueKey(_, bandsV)).map(_._1)
       hi <- Option(maxValue).flatMap(BandKeys.valueKey(_, bandsV)).map(_._1)
     } yield {
-      val merged = bands.get(colName) match {
+      val merged = pruning.bands.get(colName) match {
         case Some((elo, ehi)) => (math.max(elo, lo), math.min(ehi, hi))
         case None => (lo, hi)
       }
       new GraftSnapshotScan(spark, table, version, required,
-        bands.updated(colName, merged), options, nullCols, points, orAlts,
-        joinPrunedCols + colName)
+        pruning.copy(bands = pruning.bands.updated(colName, merged)),
+        options, joinPrunedCols + colName)
     }
   }
 
@@ -788,10 +802,10 @@ class GraftSnapshotScan(spark: SparkSession, table: SnapshotTable,
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new SnapshotMicroBatchStream(spark, table, required, options)
 
-  /** The manifest-planned file list after band + IS-NULL pruning — the
+  /** The manifest-planned file list after every pruning lane — the
     * evidence the connector spec pins (skipping survives the DSv2 path). */
   private[graft] def plannedFiles: Seq[String] =
-    table.readPruned(bands, points, nullCols, orAlts, version)._2
+    table.readPruned(pruning, version)._2
 
   /** EXACT row count from the manifest (maintained through every commit
     * path) feeding the planner's broadcast decision — a small snapshot
@@ -817,11 +831,10 @@ class GraftSnapshotScan(spark: SparkSession, table: SnapshotTable,
       // only shrink), the conservative direction an estimate may err in;
       // unknown vectors fall back to the unpruned totals (also an upper
       // bound).
-      private val pruningActive = bands.nonEmpty || points.nonEmpty ||
-        nullCols.nonEmpty || orAlts.nonEmpty
+      private val pruningActive = pruning != Pruning()
       private val (plannedRows, plannedBytes): (Option[Long], Option[Long]) =
         if (!pruningActive || snap.isEmpty) (None, None)
-        else try table.plannedStats(bands, points, nullCols, orAlts, version)
+        else try table.plannedStats(pruning, version)
         catch { case scala.util.control.NonFatal(_) => (None, None) }
       private val rows: Option[Long] = plannedRows.orElse(snap.map(_.rows))
       override def numRows(): java.util.OptionalLong =
@@ -843,11 +856,11 @@ class GraftSnapshotScan(spark: SparkSession, table: SnapshotTable,
           org.apache.spark.sql.connector.expressions.NamedReference,
           org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
         val ndvs =
-          try table.plannedColumnNdvs(bands, points, nullCols, orAlts, version)
+          try table.plannedColumnNdvs(pruning, version)
           catch { case scala.util.control.NonFatal(_) =>
             Map.empty[String, Long] }
         val boundsByCol =
-          try table.plannedColumnBounds(bands, points, nullCols, orAlts, version)
+          try table.plannedColumnBounds(pruning, version)
           catch { case scala.util.control.NonFatal(_) =>
             Map.empty[String, (Option[(Long, Long)], Option[Long])] }
         val bandsV = snap.map(_.bandsV).getOrElse(1)
@@ -901,16 +914,18 @@ class GraftSnapshotScan(spark: SparkSession, table: SnapshotTable,
     }
 
   override def toV1TableScan[T <: BaseRelation with TableScan](context: SQLContext): T =
-    new GraftSnapshotRelation(context, spark, table, version, required, bands,
-      nullCols, points, orAlts).asInstanceOf[T]
+    new GraftSnapshotRelation(context, spark, table, version, required,
+      pruning).asInstanceOf[T]
 
-  override def description(): String =
+  override def description(): String = {
+    val Pruning(bands, points, nullCols, orAlts) = pruning
     s"GraftSnapshotScan v$version bands=${bands.map { case (c, (lo, hi)) =>
       s"$c:[$lo,$hi]" }.mkString(",")}" +
       (if (nullCols.isEmpty) "" else s" isNull=${nullCols.mkString(",")}") +
       (if (points.isEmpty) "" else s" points=${points.map { case (c, ks) =>
         s"$c:${ks.length}" }.mkString(",")}") +
       (if (orAlts.isEmpty) "" else s" orAlts=${orAlts.map(_.length).mkString("|")}")
+  }
 }
 
 /** The V1 delegate: rows come from the engine's own MOR-aware plan,
@@ -919,17 +934,13 @@ class GraftSnapshotScan(spark: SparkSession, table: SnapshotTable,
   * exist at all. */
 class GraftSnapshotRelation(context: SQLContext, spark: SparkSession,
                             table: SnapshotTable, version: Long,
-                            required: StructType,
-                            bands: Map[String, (Long, Long)],
-                            nullCols: Set[String] = Set.empty,
-                            points: Map[String, Seq[Long]] = Map.empty,
-                            orAlts: Seq[Seq[PruneAlt]] = Seq.empty)
+                            required: StructType, pruning: Pruning)
     extends BaseRelation with TableScan {
   override def sqlContext: SQLContext = context
   override def schema: StructType = required
   override def buildScan(): RDD[Row] = {
     import org.apache.spark.sql.functions.{col, input_file_name, lit}
-    val (df, _) = table.readPruned(bands, points, nullCols, orAlts, version)
+    val (df, _) = table.readPruned(pruning, version)
     val pruned =
       if (required.isEmpty) df.select() // count-style scans need no columns
       else df.select(required.fieldNames.toIndexedSeq.map {

@@ -34,10 +34,11 @@ case class SnapshotDmlSpec(files: Seq[(String, Long)], seqs: Seq[Long],
   * the spec down from the full table. */
 /** ScanBuilder for the row-level DML read, with PREDICATE-PRUNED group
   * planning: Spark's group-based row-level planning pushes the
-  * statement's condition here as V1 filters; the band-derivable,
-  * null-rejecting conjuncts prune whole files off the manifest (the
-  * same skipping index the ordinary read path uses), and the scan then
-  * plans ONLY the files that can hold a matching row. Pruned files are
+  * statement's condition here as V1 filters; the conjuncts a
+  * [[Pruning]] lane derives from prune whole files off the manifest
+  * (the same lanes and admission rule, bloom filters included, as the
+  * ordinary read path), and the scan then plans ONLY the files that
+  * can hold a matching row. Pruned files are
   * reported back through `onPlanned` so the replacement commit
   * re-lists them untouched ([[SnapshotTable.commitWrittenRewriteFiles]])
   * instead of rewriting the whole table — a point UPDATE/DELETE on a
@@ -63,18 +64,14 @@ class SnapshotDmlScanBuilder(spark: SparkSession, table: SnapshotTable,
     catch { case scala.util.control.NonFatal(_) => 1 }
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pruning = filters.filter(f => SnapshotBatch.bandOf(f, bandsV).isDefined ||
-      f.isInstanceOf[org.apache.spark.sql.sources.IsNull] ||
-      SnapshotBatch.orAltsOf(Seq(f), bandsV).nonEmpty)
+    pruning = filters.filter(Pruning.derives(_, bandsV))
     filters // group pruning only — Spark keeps row-level evaluation
   }
   override def pushedFilters(): Array[Filter] = pruning
 
   override def build(): Scan = {
     val (spec, scannedRel, full) =
-      table.dmlSpecPruned(base, SnapshotBatch.bandsOf(pruning.toSeq, bandsV),
-        SnapshotBatch.nullPruneCols(pruning.toSeq),
-        SnapshotBatch.orAltsOf(pruning.toSeq, bandsV))
+      table.dmlSpecPruned(base, Pruning.of(pruning.toSeq, bandsV))
     onPlanned(scannedRel, full)
     new SnapshotDmlScan(spark, spec, base, root)
   }

@@ -1657,8 +1657,7 @@ class SnapshotTable(spark: SparkSession, root: String,
   }
 
   /** Data-skipping read on the table's FIRST stats column. */
-  def readRange(lo: Long, hi: Long): DataFrame = readRange(statsHead, lo, hi, -1L)
-  def readRange(lo: Long, hi: Long, version: Long): DataFrame =
+  def readRange(lo: Long, hi: Long, version: Long = -1L): DataFrame =
     readRange(statsHead, lo, hi, version)
 
   private def statsHead: String = statsCols.headOption.getOrElse(
@@ -1703,25 +1702,8 @@ class SnapshotTable(spark: SparkSession, root: String,
     * Files with unknown stats are read conservatively; the residual
     * predicate is applied either way, so the result equals
     * `read().filter(...)` exactly. */
-  def readRange(column: String, lo: Long, hi: Long, version: Long): DataFrame = {
-    val ci = statsCols.indexOf(column)
-    require(ci >= 0,
-      s"readRange on $root: '$column' is not a stats column (${statsCols.mkString(",")})")
-    val v = if (version < 0) latestVersion() else version
-    require(v > 0, s"no committed snapshot to read at $root")
-    val snap = snapshot(v)
-    val setAll = fileSetOf(snap)
-    val cs = setAll.stats(ci)
-    val keep = setAll.files.indices
-      .filter(i => cs.maxs(i) >= lo && cs.mins(i) <= hi &&
-        (lo != hi || FileBlooms.mightContain(cs.blooms(i), lo)))
-    val base =
-      if (keep.isEmpty) read(v).limit(0)
-      else morPlan(snap, keep, mergeSchema = false)
-    // the residual filter keys under the READ manifest's semantics —
-    // a version below a band upgrade keeps its own key space
-    base.filter(bandKeyCol(base, column, snap.bandsV).between(lo, hi))
-  }
+  def readRange(column: String, lo: Long, hi: Long, version: Long): DataFrame =
+    readRanges(column, Seq((lo, hi)), version)
 
   /** Union-of-ranges skipping read — [[readRange]] for a DISJUNCTION of
     * key ranges: only files whose band overlaps SOME range are planned
@@ -1735,20 +1717,12 @@ class SnapshotTable(spark: SparkSession, root: String,
   def readRanges(column: String, ranges: Seq[(Long, Long)],
                  version: Long = -1L): DataFrame = {
     require(ranges.nonEmpty, s"readRanges on $root: no ranges given")
-    val ci = statsCols.indexOf(column)
-    require(ci >= 0,
-      s"readRanges on $root: '$column' is not a stats column (${statsCols.mkString(",")})")
-    val v = if (version < 0) latestVersion() else version
-    require(v > 0, s"no committed snapshot to read at $root")
-    val snap = snapshot(v)
-    val setAll = fileSetOf(snap)
-    val cs = setAll.stats(ci)
-    val keep = setAll.files.indices.filter(i => ranges.exists { case (lo, hi) =>
-      cs.maxs(i) >= lo && cs.mins(i) <= hi &&
-        (lo != hi || FileBlooms.mightContain(cs.blooms(i), lo)) })
-    val base =
-      if (keep.isEmpty) read(v).limit(0)
-      else morPlan(snap, keep, mergeSchema = false)
+    require(statsCols.contains(column),
+      s"range read on $root: '$column' is not a stats column (${statsCols.mkString(",")})")
+    val alts = ranges.map { case (lo, hi) => PruneAlt(Map(column -> ((lo, hi))), Set.empty) }
+    val (snap, base, _) = prunedPlan(Pruning(orAlts = Seq(alts)), version)
+    // the residual filter keys under the READ manifest's semantics —
+    // a version below a band upgrade keeps its own key space
     val k = bandKeyCol(base, column, snap.bandsV)
     base.filter(ranges.map { case (lo, hi) => k.between(lo, hi) }.reduce(_ || _))
   }
@@ -1881,19 +1855,12 @@ class SnapshotTable(spark: SparkSession, root: String,
     * pruning would plan — what the connector's column statistics report
     * so join planning and distinct-count questions see the scan, not
     * the table. Columns without full sketch coverage are absent. */
-  private[graft] def plannedColumnNdvs(bands: Map[String, (Long, Long)],
-                                       points: Map[String, Seq[Long]],
-                                       nullCols: Set[String],
-                                       orAlts: Seq[Seq[PruneAlt]],
-                                       version: Long): Map[String, Long] = {
-    val v = if (version < 0) latestVersion() else version
-    if (v <= 0) return Map.empty
-    val fl = fileSetOf(snapshot(v))
-    val keep = prunedKeep(fl, bands, points, nullCols, orAlts)
-    statsCols.zipWithIndex.flatMap { case (c, ci) =>
-      ndvOf(fl, ci, keep).map(c -> _)
-    }.toMap
-  }
+  private[graft] def plannedColumnNdvs(p: Pruning, version: Long): Map[String, Long] =
+    admitted(p, version).fold(Map.empty[String, Long]) { case (_, fl, keep) =>
+      statsCols.zipWithIndex.flatMap { case (c, ci) =>
+        ndvOf(fl, ci, keep).map(c -> _)
+      }.toMap
+    }
 
   /** Post-pruning per-column (band-key [min, max], null count) over the
     * file set the given pruning would PLAN — the rest of the V2 column
@@ -1907,33 +1874,29 @@ class SnapshotTable(spark: SparkSession, root: String,
     * range or a null census) — the conservative direction an estimate
     * may err in. Keys convert back to typed values only where the key
     * function is exact ([[BandKeys.keyToCatalyst]]); the caller decides. */
-  private[graft] def plannedColumnBounds(bands: Map[String, (Long, Long)],
-                                         points: Map[String, Seq[Long]],
-                                         nullCols: Set[String],
-                                         orAlts: Seq[Seq[PruneAlt]],
-                                         version: Long)
+  private[graft] def plannedColumnBounds(p: Pruning, version: Long)
       : Map[String, (Option[(Long, Long)], Option[Long])] = {
-    val v = if (version < 0) latestVersion() else version
-    if (v <= 0) return Map.empty
-    val fl = fileSetOf(snapshot(v))
-    val keep = prunedKeep(fl, bands, points, nullCols, orAlts)
-    statsCols.zipWithIndex.map { case (c, ci) =>
-      val cs = fl.stats(ci)
-      val mins = alignOr(cs.mins, fl.files.length, UnknownMin)
-      val maxs = alignOr(cs.maxs, fl.files.length, UnknownMax)
-      val nulls = alignOr(cs.nulls, fl.files.length, UnknownNulls)
-      // inverted band (min > max) = known-EMPTY file: contributes no
-      // rows, so it cannot move a bound (and its null count is zero)
-      val nonEmpty = keep.filterNot(i => mins(i) > maxs(i))
-      val bounds =
-        if (nonEmpty.isEmpty || nonEmpty.exists(i =>
-            mins(i) == UnknownMin || maxs(i) == UnknownMax)) None
-        else Some((nonEmpty.map(mins).min, nonEmpty.map(maxs).max))
-      val nullTotal =
-        if (keep.exists(i => nulls(i) == UnknownNulls)) None
-        else Some(keep.map(nulls).sum)
-      c -> ((bounds, nullTotal))
-    }.toMap
+    admitted(p, version) match {
+      case None => Map.empty
+      case Some((_, fl, keep)) =>
+        statsCols.zipWithIndex.map { case (c, ci) =>
+          val cs = fl.stats(ci)
+          val mins = alignOr(cs.mins, fl.files.length, UnknownMin)
+          val maxs = alignOr(cs.maxs, fl.files.length, UnknownMax)
+          val nulls = alignOr(cs.nulls, fl.files.length, UnknownNulls)
+          // inverted band (min > max) = known-EMPTY file: contributes no
+          // rows, so it cannot move a bound (and its null count is zero)
+          val nonEmpty = keep.filterNot(i => mins(i) > maxs(i))
+          val bounds =
+            if (nonEmpty.isEmpty || nonEmpty.exists(i =>
+                mins(i) == UnknownMin || maxs(i) == UnknownMax)) None
+            else Some((nonEmpty.map(mins).min, nonEmpty.map(maxs).max))
+          val nullTotal =
+            if (keep.exists(i => nulls(i) == UnknownNulls)) None
+            else Some(keep.map(nulls).sum)
+          c -> ((bounds, nullTotal))
+        }.toMap
+    }
   }
 
   /** Per-stats-column table statistics at `version` (default: tip)
@@ -1950,10 +1913,8 @@ class SnapshotTable(spark: SparkSession, root: String,
     // each resolve `-1` independently could interleave with a
     // concurrent commit and mix two versions' stats in one report.
     val v = if (version < 0) latestVersion() else version
-    val bounds =
-      plannedColumnBounds(Map.empty, Map.empty, Set.empty, Seq.empty, v)
-    val ndvs =
-      plannedColumnNdvs(Map.empty, Map.empty, Set.empty, Seq.empty, v)
+    val bounds = plannedColumnBounds(Pruning(), v)
+    val ndvs = plannedColumnNdvs(Pruning(), v)
     // TYPED value bounds (today: STRING — recorded exactly where the
     // long key is lossy): min-of-mins / max-of-maxs under the bytewise
     // ordering IS the column extremum ([[TypedBounds]]); any non-empty
@@ -1992,86 +1953,74 @@ class SnapshotTable(spark: SparkSession, root: String,
     * (conservative: the caller falls back to unpruned totals). Rows are
     * an upper bound under MOR deletes (deletes only shrink) — exactly
     * the conservative direction an estimate may err in. */
-  private[graft] def plannedStats(bands: Map[String, (Long, Long)],
-                                  points: Map[String, Seq[Long]],
-                                  nullCols: Set[String],
-                                  orAlts: Seq[Seq[PruneAlt]],
-                                  version: Long): (Option[Long], Option[Long]) = {
-    val v = if (version < 0) latestVersion() else version
-    if (v <= 0) return (None, None)
-    val snap = snapshot(v)
-    val setAll = fileSetOf(snap)
-    val keep = prunedKeep(setAll, bands, points, nullCols, orAlts)
-    val fr = alignLens(setAll.frows, setAll.files.length)
-    val ln = alignLens(setAll.lens, setAll.files.length)
-    (if (keep.forall(fr(_) >= 0L)) Some(keep.map(fr).sum) else None,
-     if (keep.forall(ln(_) >= 0L)) Some(keep.map(ln).sum) else None)
+  private[graft] def plannedStats(p: Pruning, version: Long)
+      : (Option[Long], Option[Long]) = {
+    admitted(p, version) match {
+      case None => (None, None)
+      case Some((_, fl, keep)) =>
+        val fr = alignLens(fl.frows, fl.files.length)
+        val ln = alignLens(fl.lens, fl.files.length)
+        (if (keep.forall(fr(_) >= 0L)) Some(keep.map(fr).sum) else None,
+         if (keep.forall(ln(_) >= 0L)) Some(keep.map(ln).sum) else None)
+    }
   }
 
-  /** Manifest-pruned read for the DSv2 batch connector: keep only files
-    * whose stats bands overlap EVERY requested column band (bands on
-    * non-stats columns are ignored — nothing to prune with). Returns the
-    * MOR-aware plan plus the planned file list (the pruning evidence the
-    * connector spec pins). NO residual filter is applied here — the
-    * caller (Spark's own filter evaluation) re-applies its predicates,
-    * so correctness never depends on the band math; pruning is sound for
+  /** Manifest-pruned read for the DSv2 batch connector: keep only the
+    * files [[prunedKeep]] admits under `p` (lanes on non-stats columns
+    * are ignored — nothing to prune with). Returns the MOR-aware plan
+    * plus the planned file list (the pruning evidence the connector
+    * spec pins). NO residual filter is applied here — the caller
+    * (Spark's own filter evaluation) re-applies its predicates, so
+    * correctness never depends on the band math; pruning is sound for
     * null-rejecting predicates because a file's [min,max] band covers
-    * every non-null value it holds. */
-  private[graft] def readPruned(bands: Map[String, (Long, Long)],
-                                version: Long = -1L): (DataFrame, Seq[String]) =
-    readPruned(bands, Set.empty, version)
-
-  /** [[readPruned]] plus IS-NULL pruning: `nullCols` are columns some
-    * conjunct requires to BE NULL — a file whose recorded null count
-    * for that column is KNOWN-ZERO can hold no matching row and prunes
-    * (unknown counts read conservatively). The `WHERE c IS NULL` audit
-    * sweep on a 100 TB table opens only the files that ever wrote a
-    * NULL. */
-  private[graft] def readPruned(bands: Map[String, (Long, Long)],
-                                nullCols: Set[String],
-                                version: Long): (DataFrame, Seq[String]) =
-    readPruned(bands, Map.empty, nullCols, version)
-
-  /** [[readPruned]] plus per-key POINT-SET pruning (IN-lists): the hull
-    * band keeps every file the list's RANGE touches; a file survives
-    * point pruning only when SOME listed key lands inside its band AND
-    * its bloom filter (when present) admits it. */
-  private[graft] def readPruned(bands: Map[String, (Long, Long)],
-                                points: Map[String, Seq[Long]],
-                                nullCols: Set[String],
-                                version: Long): (DataFrame, Seq[String]) =
-    readPruned(bands, points, nullCols, Seq.empty, version)
-
-  /** [[readPruned]] plus DISJUNCTIVE pruning: each `orAlts` entry is one
-    * pushed OR conjunct as a list of alternatives ([[PruneAlt]]); a file
-    * survives the conjunct iff SOME alternative admits it — the lane
-    * that serves `ts < lo OR ts > hi` (conjunctive bands see only the
-    * all-covering hull). Alternatives touching non-stats columns are
-    * unverifiable and admit everything (sound: prune nothing). */
-  private[graft] def readPruned(bands: Map[String, (Long, Long)],
-                                points: Map[String, Seq[Long]],
-                                nullCols: Set[String],
-                                orAlts: Seq[Seq[PruneAlt]],
-                                version: Long): (DataFrame, Seq[String]) = {
-    val v = if (version < 0) latestVersion() else version
-    require(v > 0, s"no committed snapshot to read at $root")
-    val snap = snapshot(v)
-    val setAll = fileSetOf(snap)
-    val keep = prunedKeep(setAll, bands, points, nullCols, orAlts)
-    if (keep.isEmpty) (read(v).limit(0), Seq.empty)
-    else (morPlan(snap, keep, mergeSchema = false), keep.map(setAll.files))
+    * every non-null value it holds, and for IS NULL because a
+    * known-zero null count proves the file holds no NULL. */
+  private[graft] def readPruned(p: Pruning, version: Long = -1L)
+      : (DataFrame, Seq[String]) = {
+    val (_, df, planned) = prunedPlan(p, version)
+    (df, planned)
   }
 
-  /** The shared file-admission test of every pruning lane (bands,
-    * IN-list point sets, IS-NULL, disjunctive alternatives) — what
-    * [[readPruned]] plans and [[plannedStats]] sizes. */
-  private def prunedKeep(setAll: FileSet, bands: Map[String, (Long, Long)],
-                         points: Map[String, Seq[Long]],
-                         nullCols: Set[String],
-                         orAlts: Seq[Seq[PruneAlt]]): Seq[Int] = {
-    val active = bands.filter { case (c, _) => statsCols.contains(c) }
-    val activeNull = nullCols.filter(statsCols.contains)
-    val activePoints = points.filter { case (c, _) => statsCols.contains(c) }
+  /** [[readPruned]] with the read snapshot, whose band semantics a
+    * caller's residual filter must key under. */
+  private def prunedPlan(p: Pruning, version: Long)
+      : (Snapshot, DataFrame, Seq[String]) = {
+    val got = admitted(p, version)
+    require(got.nonEmpty, s"no committed snapshot to read at $root")
+    val (snap, fl, keep) = got.get
+    if (keep.isEmpty) (snap, read(snap.version).limit(0), Seq.empty)
+    else (snap, morPlan(snap, keep, mergeSchema = false), keep.map(fl.files))
+  }
+
+  /** Resolve `version` (negative = tip) once, then admit its files
+    * through [[prunedKeep]]: the (snapshot, file set, admitted indices)
+    * every admission caller starts from. None when nothing is
+    * committed. */
+  private def admitted(p: Pruning, version: Long)
+      : Option[(Snapshot, FileSet, Seq[Int])] = {
+    val v = if (version < 0) latestVersion() else version
+    if (v <= 0) None
+    else {
+      val snap = snapshot(v)
+      val fl = fileSetOf(snap)
+      Some((snap, fl, prunedKeep(fl, p)))
+    }
+  }
+
+  /** The ONE file-admission test of every pruning lane: a file is
+    * admitted iff it overlaps every band (equality bands also consult
+    * its bloom filter), holds some listed key of every IN-list point
+    * set (band + bloom), may hold a NULL in every IS-NULL column, and
+    * satisfies some alternative of every OR conjunct. Callers:
+    * [[readPruned]] (and through it [[readRange]], [[readRanges]],
+    * the connector's scan and [[JoinSkipping]]), [[dmlSpecPruned]]
+    * (row-level DML plans), [[commitUpsert]] (the files a batch's keys
+    * may touch) and the planned estimators [[plannedStats]],
+    * [[plannedColumnNdvs]] and [[plannedColumnBounds]]. */
+  private def prunedKeep(setAll: FileSet, p: Pruning): Seq[Int] = {
+    val active = p.bands.filter { case (c, _) => statsCols.contains(c) }
+    val activeNull = p.nullCols.filter(statsCols.contains)
+    val activePoints = p.points.filter { case (c, _) => statsCols.contains(c) }
     def bandAdmits(i: Int, c: String, lo: Long, hi: Long): Boolean = {
       val cs = setAll.stats(statsCols.indexOf(c))
       cs.maxs(i) >= lo && cs.mins(i) <= hi &&
@@ -2089,7 +2038,7 @@ class SnapshotTable(spark: SparkSession, root: String,
         val cs = setAll.stats(statsCols.indexOf(c))
         ks.exists(k => cs.maxs(i) >= k && cs.mins(i) <= k &&
           FileBlooms.mightContain(cs.blooms(i), k))
-      } && orAlts.forall { alts =>
+      } && p.orAlts.forall { alts =>
         alts.exists { alt =>
           if (!alt.bands.keysIterator.forall(statsCols.contains) ||
               !alt.isNull.forall(statsCols.contains)) true
@@ -2238,8 +2187,7 @@ class SnapshotTable(spark: SparkSession, root: String,
         // a file is UNTOUCHABLE iff provably disjoint from the batch's
         // keys on some stats key column (band + bloom evidence); unknown
         // stats read as overlapping
-        val overlapIdx = prunedKeep(prev, hullLanes, pointLanes,
-          Set.empty, Seq.empty)
+        val overlapIdx = prunedKeep(prev, Pruning(hullLanes, pointLanes))
         val keepIdx = prev.files.indices.filterNot(overlapIdx.toSet)
         if (keepIdx.isEmpty) Some(fullRewrite()) // nothing carries: same cost
         else {
@@ -2708,7 +2656,7 @@ class SnapshotTable(spark: SparkSession, root: String,
       .select(keyCols.map(col): _*).distinct()
     val scanned = keyBand match {
       case Some((lo, hi)) if keyCols.length == 1 && statsCols.contains(keyCols.head) =>
-        readPruned(Map(keyCols.head -> (lo, hi)), base)._1
+        readPruned(Pruning(bands = Map(keyCols.head -> ((lo, hi)))), base)._1
       case _ => read(base)
     }
     scanned.join(keys, keyCols, "left_semi").count()
@@ -2950,53 +2898,24 @@ class SnapshotTable(spark: SparkSession, root: String,
     * from one getFileStatus per file: planning cost O(files), no data
     * read. */
   private[sources] def dmlSpec(version: Long): SnapshotDmlSpec =
-    dmlSpecPruned(version, Map.empty)._1
+    dmlSpecPruned(version, Pruning())._1
 
-  /** [[dmlSpec]] PRUNED to the files whose stats bands CAN hold a row
-    * matching `bands` (the row-level statement's pushed null-rejecting
-    * conjuncts — the same overlap rule as [[readPruned]]). Also returns
-    * the RELATIVE paths of the planned files (what
-    * [[commitWrittenRewriteFiles]] must remove) and whether the scan
-    * covers the full table. Soundness: a pruned file provably holds no
+  /** [[dmlSpec]] PRUNED to the files [[prunedKeep]] admits under
+    * `pruning` (the row-level statement's pushed conjuncts — the same
+    * lanes and admission rule as [[readPruned]], bloom filters
+    * included). Also returns the RELATIVE paths of the planned files
+    * (what [[commitWrittenRewriteFiles]] must remove) and whether the
+    * scan covers the full table. Soundness: a pruned file provably holds no
     * row the statement's predicate matches (bands cover every non-null
-    * value; the pushed predicates reject NULLs), so keeping it OUT of
-    * the scan and re-listing it untouched preserves exactly its rows —
-    * files with unknown/absent stats always overlap and are never
-    * pruned. */
-  private[graft] def dmlSpecPruned(version: Long, bands: Map[String, (Long, Long)])
-      : (SnapshotDmlSpec, Seq[String], Boolean) =
-    dmlSpecPruned(version, bands, Set.empty)
-
-  private[graft] def dmlSpecPruned(version: Long, bands: Map[String, (Long, Long)],
-                                   nullCols: Set[String],
-                                   orAlts: Seq[Seq[PruneAlt]] = Seq.empty)
+    * value, a bloom filter never drops a stored key, and the pushed
+    * predicates reject NULLs), so keeping it OUT of the scan and
+    * re-listing it untouched preserves exactly its rows — files with
+    * unknown/absent stats always overlap and are never pruned. */
+  private[graft] def dmlSpecPruned(version: Long, pruning: Pruning)
       : (SnapshotDmlSpec, Seq[String], Boolean) = {
-    val s = snapshot(version)
-    val fl = fileSetOf(s)
-    val active = bands.filter { case (c, _) => statsCols.contains(c) }
-    val activeNull = nullCols.filter(statsCols.contains)
-    val keep = fl.files.indices.filter { i =>
-      active.forall { case (c, (lo, hi)) =>
-        val cs = fl.stats(statsCols.indexOf(c))
-        cs.maxs(i) >= lo && cs.mins(i) <= hi
-      } && activeNull.forall { c =>
-        fl.stats(statsCols.indexOf(c)).nulls(i) != 0L
-      } && orAlts.forall { alts =>
-        // disjunctive lane, same semantics as the read path: a file
-        // survives the OR conjunct iff SOME alternative admits it;
-        // unverifiable alternatives (non-stats columns) admit all
-        alts.exists { alt =>
-          if (!alt.bands.keysIterator.forall(statsCols.contains) ||
-              !alt.isNull.forall(statsCols.contains)) true
-          else alt.bands.forall { case (c, (lo, hi)) =>
-            val cs = fl.stats(statsCols.indexOf(c))
-            cs.maxs(i) >= lo && cs.mins(i) <= hi
-          } && alt.isNull.forall { c =>
-            fl.stats(statsCols.indexOf(c)).nulls(i) != 0L
-          }
-        }
-      }
-    }
+    val got = admitted(pruning, version)
+    require(got.nonEmpty, s"no committed snapshot to rewrite at $root")
+    val (s, fl, keep) = got.get
     def abs(rel: String) = new Path(dataDir, rel)
     def len(p: Path): Long = statOf(p).getLen
     val spec = SnapshotDmlSpec(
@@ -3556,8 +3475,10 @@ class SnapshotTable(spark: SparkSession, root: String,
       val snapBase = snapshot(base)
       val fl = fileSetOf(snapBase)
       val cs = fl.stats(ci)
-      // overlap test mirrors readRange: unknown bands read conservatively
-      // (they may hold in-range rows, so they join the rewrite)
+      // band overlap only, NOT readRange's admission: no bloom test — a
+      // point range re-clusters every file whose band covers the key,
+      // whether or not it holds it. Unknown bands overlap (they may hold
+      // in-range rows, so they join the rewrite)
       val hotIdx = fl.files.indices
         .filter(i => cs.maxs(i) >= lo && cs.mins(i) <= hi)
       if (hotIdx.length <= 1) Some(base)

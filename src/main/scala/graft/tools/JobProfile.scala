@@ -89,10 +89,12 @@ object JobProfile {
       val t0 = System.nanoTime()
       fn(spark, dir).count()
       val total = (System.nanoTime() - t0) / 1e9
+      // job-end and query-execution events arrive asynchronously: deliver
+      // every one this pass posted before detaching the listeners
+      org.apache.spark.sql.graft.bridge.drainListenerBus(spark.sparkContext)
       spark.sparkContext.removeSparkListener(listener)
       spark.listenerManager.unregister(qel)
       graft.QueryCaches.releaseAll()
-      Thread.sleep(500) // let async job-end / listener events drain
       import scala.jdk.CollectionConverters._
       val jobs = done.asScala.toSeq.sortBy(_._1)
       done.clear()

@@ -17,6 +17,11 @@ object bridge {
   def asNullable(schema: org.apache.spark.sql.types.StructType)
       : org.apache.spark.sql.types.StructType = schema.asNullable
 
+  /** Block until every event already posted to the listener bus has
+    * reached its listeners (the bus is private to Spark). */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
+
   /** Count a file this task wrote in its output metrics, as Spark's own
     * file writers do (the setters are private to Spark). */
   def recordOutput(file: org.apache.hadoop.fs.Path, records: Long): Unit = {

@@ -115,8 +115,8 @@ class BloomIndexSpec extends SparkSpec {
     // overlaps every file; only the per-key bloom test isolates the one
     val scan = new graft.sources.GraftSnapshotScan(spark, t,
       t.latestVersion(), t.read().schema,
-      bands = Map("id" -> (304L, 607L)),
-      points = Map("id" -> Seq(304L, 607L)))
+      graft.sources.Pruning(bands = Map("id" -> ((304L, 607L))),
+        points = Map("id" -> Seq(304L, 607L))))
     assert(scan.plannedFiles.length == 1,
       s"IN (304, 607) must plan one file, got ${scan.plannedFiles.length}")
     // end-to-end through SQL: exact rows plus the points in the plan text
@@ -129,8 +129,8 @@ class BloomIndexSpec extends SparkSpec {
     // a list of only-absent keys plans nothing and returns nothing
     val none = new graft.sources.GraftSnapshotScan(spark, t,
       t.latestVersion(), t.read().schema,
-      bands = Map("id" -> (10001L, 10007L)),
-      points = Map("id" -> Seq(10001L, 10007L)))
+      graft.sources.Pruning(bands = Map("id" -> ((10001L, 10007L))),
+        points = Map("id" -> Seq(10001L, 10007L))))
     assert(none.plannedFiles.isEmpty)
   }
 

@@ -68,7 +68,8 @@ class ColumnMappingSpec extends SparkSpec {
       "the alter commit must carry the bands forward, not erase them")
     // band pruning works under the new name (one of two files planned)
     val handle = new SnapshotTable(spark, s"$wh/db/renstats", tip.statsCols)
-    assert(handle.readPruned(Map("key_id" -> (120L, 130L)), t.latestVersion())
+    assert(handle.readPruned(
+      graft.sources.Pruning(bands = Map("key_id" -> ((120L, 130L)))), t.latestVersion())
       ._2.length == 1)
     // and values through SQL on the new name
     assert(spark.sql(

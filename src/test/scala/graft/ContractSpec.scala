@@ -17,6 +17,14 @@ class ContractSpec extends SparkSpec {
     assert(unchecked.isEmpty, s"queries without oracle: $unchecked")
   }
 
+  test("a name registered by two modules fails the registry merge, naming each duplicate") {
+    val e = intercept[IllegalArgumentException](SparkEntry.mergeRegistries(
+      Map("a" -> 1, "b" -> 2), Map("b" -> 3, "c" -> 4), Map("a" -> 5)))
+    assert(e.getMessage.contains("a, b"), e.getMessage)
+    assert(SparkEntry.mergeRegistries(Map("a" -> 1), Map("b" -> 2)) ==
+      Map("a" -> 1, "b" -> 2))
+  }
+
   test("every registered query analyzes at sf0.001") {
     SparkEntry.queries.foreach { case (name, fn) =>
       try fn(spark, dir).queryExecution.analyzed

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.sources.{GraftSnapshotScan, SnapshotTable}
+import graft.sources.{GraftSnapshotScan, Pruning, SnapshotTable}
 
 /** Per-file ROW COUNTS in the manifest (the public formats'
   * record_count vector): recorded by every write path, carried through
@@ -122,9 +122,9 @@ class FileRowCountsSpec extends SparkSpec {
   test("pruned connector statistics report post-pruning rows and bytes") {
     val t = threeBands(freshRoot("stats"))
     val full = new GraftSnapshotScan(spark, t, t.latestVersion(),
-      t.read().schema, Map.empty)
+      t.read().schema, Pruning())
     val pruned = new GraftSnapshotScan(spark, t, t.latestVersion(),
-      t.read().schema, Map("k" -> ((120L, 150L))))
+      t.read().schema, Pruning(bands = Map("k" -> ((120L, 150L)))))
     assert(full.estimateStatistics().numRows().getAsLong == 300L)
     assert(pruned.estimateStatistics().numRows().getAsLong == 100L,
       "a band pruned to the middle file must report that file's rows")

@@ -559,7 +559,8 @@ class GraftCatalogSpec extends SparkSpec {
     val t = new SnapshotTable(spark, s"$whRoot/db/clustered", Seq("k", "day"))
     val lo = java.sql.Date.valueOf("2026-01-10").toLocalDate.toEpochDay
     val hi = java.sql.Date.valueOf("2026-01-19").toLocalDate.toEpochDay
-    val (pruned, planned) = t.readPruned(Map("day" -> (lo, hi)), t.latestVersion())
+    val (pruned, planned) = t.readPruned(
+      graft.sources.Pruning(bands = Map("day" -> ((lo, hi)))), t.latestVersion())
     val total = t.snapshot(t.latestVersion()).files.length
     assert(total >= 3, s"three inserts must leave >= 3 files, got $total")
     assert(planned.length < total,

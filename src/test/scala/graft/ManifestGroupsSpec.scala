@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.sources.SnapshotTable
+import graft.sources.{Pruning, SnapshotTable}
 
 /** Manifest-list groups: a manifest references immutable group files
   * for its stable file-list prefix and inlines only the delta, so
@@ -72,7 +72,7 @@ class ManifestGroupsSpec extends SparkSpec {
     assert(!snap.stats(ci).mins.contains(Long.MinValue),
       "grouped files must keep their exact bands")
     // band lookup inside the SECOND (grouped) file plans exactly one file
-    val (_, planned) = t.readPruned(Map("id" -> (12L, 15L)), t.latestVersion())
+    val (_, planned) = t.readPruned(Pruning(bands = Map("id" -> ((12L, 15L)))), t.latestVersion())
     assert(planned.length == 1, s"expected 1 planned file, got $planned")
     assert(t.readRange(12L, 15L).count() == 4L)
   }
@@ -238,8 +238,8 @@ class ManifestGroupsSpec extends SparkSpec {
       assert(g.snapshot(v).rows == i.snapshot(v).rows, s"v$v row counts")
     }
     // pruning agrees too
-    val bandsG = g.readPruned(Map("id" -> (5L, 9L)), tip)._1.as[Long].collect().toSet
-    val bandsI = i.readPruned(Map("id" -> (5L, 9L)), tip)._1.as[Long].collect().toSet
+    val bandsG = g.readPruned(Pruning(bands = Map("id" -> ((5L, 9L)))), tip)._1.as[Long].collect().toSet
+    val bandsI = i.readPruned(Pruning(bands = Map("id" -> ((5L, 9L)))), tip)._1.as[Long].collect().toSet
     assert(bandsG == bandsI)
     // point-lookup (bloom) pruning agrees: same values AND same planned
     // file counts under both encodings

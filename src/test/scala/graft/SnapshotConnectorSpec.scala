@@ -90,7 +90,7 @@ class SnapshotConnectorSpec extends SparkSpec {
     // and the scan itself plans exactly ONE of the three files
     val scan = new graft.sources.GraftSnapshotScan(spark, t, 3L,
       spark.read.format("graft-snapshot").load(root).schema,
-      Map("id" -> (12L, 15L)))
+      graft.sources.Pruning(bands = Map("id" -> ((12L, 15L)))))
     assert(scan.plannedFiles.length == 1,
       s"band [12,15] must plan one file, got ${scan.plannedFiles}")
     // column pruning reaches the inner parquet scan
