@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE machine-readable JSON line
@@ -20,17 +19,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // comma-separated allowlist for targeted timing runs (empty = all);
     // unknown names fail loudly — a typo would otherwise yield a silent
     // empty run
-    val only = sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY", "")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSet
-    val unknown = only -- SparkEntry.queries.keySet
-    if (unknown.nonEmpty) {
-      System.err.println(s"[bench] unknown SPARK_GRAFT_BENCH_ONLY names: ${unknown.mkString(", ")}")
-      sys.exit(2)
-    }
+    val selected = SparkEntry.select(sys.env.getOrElse("SPARK_GRAFT_BENCH_ONLY", "")
+      .split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // Host-load provenance: this box is shared, and co-tenant load is the
     // documented cause of >1.5x same-code drift (BASELINE.md). Recording
     // the 1/5/15-min load averages at start lets a reader judge a noisy
@@ -47,26 +40,12 @@ object Bench {
     // (BASELINE.md noise table), so the artifact carries its own caveat.
     val loadedHost = loadavg.split(",").headOption
       .flatMap(s => scala.util.Try(s.toDouble).toOption).exists(_ > 3.0)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // ContextCleaner reclaims dead shuffle files / broadcasts only when
-      // driver GC collects their references; the periodic-GC fallback
-      // defaults to 30 MIN — longer than the whole 208-query session, so
-      // state from every query accumulates (r8 postmortem: queries timed
-      // late in the session ran up to 7x their standalone time). A 1-min
-      // floor plus the explicit gc below keeps the session steady-state.
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // Warm-up: absorb JVM/codegen/session init so timings measure queries,
     // not first-use JIT (runs a shuffle + a parquet read + codegen once).
     spark.range(1000000).selectExpr("sum(id) as s", "count(distinct id % 7) as d").collect()
     try spark.read.parquet(s"$sfDir/nation.parquet").count()
     catch { case _: Throwable => () }
-    val selected = SparkEntry.queries.filter(q => only.isEmpty || only(q._1))
     // Full untimed warm-up pass: materializes the plan-matched shared
     // caches (retail raw/fct), parquet footers, and per-query codegen, so
     // the timed passes measure steady-state execution instead of charging
@@ -98,8 +77,8 @@ object Bench {
     // section. Shuffle volume is the number that predicts 100 TB cost
     // (wall seconds on a shared host don't), so the bench line carries
     // it; per-query deltas go to stderr with the run lines. Listener
-    // delivery is async, so per-query attribution is ±a stage — fine
-    // for provenance, not an accounting ledger.
+    // delivery is async: the bus is drained after each timed run and
+    // before the totals, so every stage lands in the query that ran it.
     val shf = new org.apache.spark.scheduler.SparkListener {
       val read = new java.util.concurrent.atomic.AtomicLong
       val write = new java.util.concurrent.atomic.AtomicLong
@@ -115,12 +94,13 @@ object Bench {
         }
       }
     }
+    org.apache.spark.sql.graft.bridge.drainListenerBus(spark.sparkContext) // no warm-up stage
     spark.sparkContext.addSparkListener(shf)
     val shfStart = (shf.read.get, shf.write.get, shf.spill.get)
     // A query whose timed run throws is FAILED, not fast: it gets no
     // seconds, stays out of `total`, is named in `failed`, and the bench
     // exits non-zero (the seconds until a throw time nothing).
-    val timed = selected.toSeq.map { case (name, fn) =>
+    val timed = selected.map { case (name, fn) =>
       val runs = (1 to TimedRuns).map { i =>
         val t0 = System.nanoTime(); val g0 = gcMillis; val s0 = shf.write.get
         val ok = try { fn(spark, sfDir).count(); true } catch {
@@ -129,6 +109,7 @@ object Bench {
             false
         }
         val sec = (System.nanoTime() - t0) / 1e9
+        org.apache.spark.sql.graft.bridge.drainListenerBus(spark.sparkContext)
         System.err.println(f"[bench] $name%-28s run$i ${sec}%8.2f s  gc=${gcMillis - g0} ms  shfw=${(shf.write.get - s0) / 1048576}%4d MB")
         (sec, ok)
       }
@@ -137,11 +118,12 @@ object Bench {
       QueryCaches.releaseAll()
       // Outside the timed window: driver GC so the ContextCleaner frees
       // this query's dead shuffle files/broadcasts before the next one
-      // is timed (see the periodicGC comment above).
+      // is timed (see the periodicGC comment in GraftSession.local).
       System.gc()
       name -> (if (runs.forall(_._2)) Some(runs.map(_._1).sorted.apply(TimedRuns / 2)) // median
                else None)
     }
+    org.apache.spark.sql.graft.bridge.drainListenerBus(spark.sparkContext)
     val results = timed.collect { case (name, Some(sec)) => name -> sec }.toMap
     val failed = timed.collect { case (name, None) => name }
     // Locale.ROOT: the f-interpolator honors the JVM default locale, and a

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sources.SnapshotTable
 
@@ -33,14 +32,7 @@ object MaintBench {
     val morDeletes = if (args.length > 0) args(0).toInt else 200
     val bpeRounds = if (args.length > 1) args(1).toInt else 1000
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-maintbench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import spark.implicits._
 
     // ---- 1. MOR delete accumulation vs compactDeletes ----

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.sources.{ColStats, Pruning, SnapshotTable, SnapshotParquetWriter, SnapshotWriteMessage}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -32,14 +31,7 @@ object MetaBench {
     val commits = if (args.length > 0) args(0).toInt else 10000
     val root = if (args.length > 1) args(1)
       else s"/tmp/graft_metabench_$commits"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-metabench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     // "reuse" third arg: measure against an existing fixture (the
     // manifests are immutable; a rebuild adds 5 min for no new signal)

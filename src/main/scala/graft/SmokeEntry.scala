@@ -1,12 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object SmokeEntry {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     val n = SparkEntry.entry(spark).count()
     println(s"ENTRY_ROWS=$n")
     spark.stop()

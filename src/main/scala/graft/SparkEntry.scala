@@ -48,25 +48,36 @@ object SparkEntry {
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    mergeRegistries(RetailQueries.queries, MetaQueries.queries,
+    registry(Seq(RetailQueries.queries, MetaQueries.queries,
       MmsQueries.queries, SyncQueries.queries, CheckQueries.queries,
       LlmQueries.queries, StreamQueries.queries, MiscQueries.queries,
-      TpchQueries.queries, AnalyticsQueries.queries, MarketQueries.queries)
+      TpchQueries.queries, AnalyticsQueries.queries, MarketQueries.queries).flatten: _*)
 
   def oracleSql: Map[String, String] =
-    mergeRegistries(RetailQueries.oracle, MetaQueries.oracle,
+    registry(Seq(RetailQueries.oracle, MetaQueries.oracle,
       MmsQueries.oracle, SyncQueries.oracle, CheckQueries.oracle,
       LlmQueries.oracle, StreamQueries.oracle, MiscQueries.oracle,
-      TpchQueries.oracle, AnalyticsQueries.oracle, MarketQueries.oracle)
+      TpchQueries.oracle, AnalyticsQueries.oracle, MarketQueries.oracle).flatten: _*)
 
-  /** The union of per-module registries. A name registered by more than
-    * one module fails, naming every such name — `++` would silently keep
-    * only the last registration. */
-  private[graft] def mergeRegistries[V](modules: Map[String, V]*): Map[String, V] = {
-    val dups = modules.flatMap(_.keys).groupBy(identity)
-      .collect { case (k, ks) if ks.length > 1 => k }.toSeq.sorted
-    require(dups.isEmpty,
-      s"query names registered by more than one module: ${dups.mkString(", ")}")
-    modules.reduce(_ ++ _)
+  /** A registry built from its entries: a name given more than once —
+    * inside one module's literal or across modules — fails, naming every
+    * such name, where a `Map(...)` literal or `++` would silently keep only
+    * the last entry. Iterates as `Map(entries: _*)` does. */
+  private[graft] def registry[V](entries: (String, V)*): Map[String, V] = {
+    val dups = entries.groupBy(_._1)
+      .collect { case (k, es) if es.length > 1 => k }.toSeq.sorted
+    require(dups.isEmpty, s"registry names given more than once: ${dups.mkString(", ")}")
+    entries.toMap
+  }
+
+  /** The registered queries named in `names` (empty: all of them), in
+    * [[queries]]' iteration order — results may depend on the order
+    * queries share a session in. An unknown name fails, naming every
+    * unknown one. */
+  def select(names: Set[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val unknown = names -- all.keySet
+    require(unknown.isEmpty, s"unknown query names: ${unknown.toSeq.sorted.mkString(", ")}")
+    all.toSeq.filter { case (name, _) => names.isEmpty || names(name) }
   }
 }

@@ -55,21 +55,10 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional trailing query names = targeted re-dump (builder-side use;
     // the driver always runs the full registry)
-    val only = args.drop(2).toSet
-    val unknown = only -- SparkEntry.queries.keySet
-    require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = SparkEntry.select(args.drop(2).toSet)
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
-    val errors = dumpAll(spark,
-      SparkEntry.queries.filter { case (name, _) => only.isEmpty || only(name) },
-      sfDir, outDir)
+    val errors = dumpAll(spark, selected, sfDir, outDir)
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

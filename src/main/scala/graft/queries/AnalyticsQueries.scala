@@ -15,7 +15,7 @@ object AnalyticsQueries {
 
   private val dec = DecimalType(18, 2)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = graft.SparkEntry.registry(
     // Window-frame family over the per-customer order history: lag,
     // running total (unbounded preceding), 3-row moving sum, and
     // row_number — one shuffle (hash by customer) + in-partition sort
@@ -286,7 +286,7 @@ object AnalyticsQueries {
     })
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = graft.SparkEntry.registry(
     "misc_window_analytics" -> """
 SELECT o_orderkey, o_custkey,
        CAST(row_number() OVER w AS INTEGER) AS order_seq,

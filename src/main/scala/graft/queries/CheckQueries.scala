@@ -24,7 +24,7 @@ object CheckQueries {
     ColumnGte("l_extendedprice", "l_quantity", name = "price_gte_qty"),
     FailedRowsWhere(col("l_discount") > 0.08, name = "high_discount"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = graft.SparkEntry.registry(
     "dq_lineitem_suite" -> ((s, d) =>
       Checks.evaluateDf(Tables.lineitem(s, d), lineitemChecks)),
 
@@ -316,7 +316,7 @@ checks for lineitem:
         SELECT l_orderkey FROM lineitem WHERE l_discount > 0.08
 """
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = graft.SparkEntry.registry(
     "dq_lineitem_suite" -> """
 WITH agg AS (
   SELECT count(*) AS n,

@@ -117,7 +117,7 @@ object LlmQueries {
         .connectedComponents(dupEdges(s, d), "a", "b")
     }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = graft.SparkEntry.registry(
     "llm_exact_dup_groups" -> ((s, d) => Dedup.exactDupGroups(Tables.documents(s, d))),
     "llm_exact_dedup" -> ((s, d) => Dedup.exactDedup(Tables.documents(s, d))),
     "llm_ngram_jaccard" -> ((s, d) => Dedup.ngramJaccardPairs(Tables.documents(s, d))),
@@ -1702,7 +1702,7 @@ SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
 FROM per_doc GROUP BY lang"""
   }
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = graft.SparkEntry.registry(
     "llm_bm25_search" -> s"""
 WITH $bm25Ctes
 SELECT doc_id, dl, tf_join, tf_hash, tf_stream, score

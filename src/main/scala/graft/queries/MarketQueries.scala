@@ -32,7 +32,7 @@ object MarketQueries {
     s"round(($num) / ($den), 6)"
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = graft.SparkEntry.registry(
     // EWMA-smoothed hourly event-rate series — the metrics-smoothing /
     // trend-detection shape. The raw stream is first compacted to the
     // (type × hour) grain (one hash agg — the only pass over events),
@@ -289,7 +289,7 @@ object MarketQueries {
     })
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = graft.SparkEntry.registry(
     "misc_ewma" -> s"""
 WITH hourly AS (
   SELECT event_type, date_trunc('hour', ts) AS h, CAST(count(*) AS BIGINT) AS n

@@ -10,7 +10,7 @@ import graft.models.{Meta, TestdataAdapter}
   * model (F7, F1). SURVEY.md §2.8-§2.9. */
 object MetaQueries {
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = graft.SparkEntry.registry(
     // denseId=false + drop(id): the reference's `row_number() over ()` is
     // order-undefined, so the dense 1..N id is not oracle-comparable anyway —
     // and at cluster scale an unpartitioned window is a single-task sort.
@@ -153,7 +153,7 @@ WITH ads AS (
     ON a.campaign_id = concat('campaign_id_', substring(c.id, 4))
 )"""
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = graft.SparkEntry.registry(
     "meta_fb_ads_transformed" -> s"""$adsCte
 SELECT * FROM transformed""",
 

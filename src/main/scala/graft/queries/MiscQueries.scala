@@ -29,7 +29,7 @@ object MiscQueries {
       path
     })
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = graft.SparkEntry.registry(
     // L1 + ordering: top-10 orders by value. Spark executes this as a
     // TakeOrderedAndProject (per-partition heap + driver merge, no sort).
     "misc_topk_orders" -> ((s, d) =>
@@ -1005,8 +1005,8 @@ object MiscQueries {
       t.commitAppend(o.filter(col("day") >= lit(c2)).repartition(1))
       def day(x: String) = java.sql.Date.valueOf(x).toLocalDate.toEpochDay
       val est = t.estimateDistinct("day")
-      val estPruned = t.plannedColumnNdvs(graft.sources.Pruning(bands =
-        Map("day" -> ((day("1997-01-01"), day("1999-01-01") - 1)))), -1L).get("day")
+      val estPruned = t.plannedColumnNdvs(t.admitted(graft.sources.Pruning(bands =
+        Map("day" -> ((day("1997-01-01"), day("1999-01-01") - 1)))), -1L)).get("day")
       def leg(name: String, filter: org.apache.spark.sql.Column,
               estimate: Option[Long]) = {
         val exact = t.read().filter(filter).agg(
@@ -3115,7 +3115,7 @@ $cur AS (
              JOIN tr_edges e ON e.src = p.node
              GROUP BY e.dst) fl ON fl.dst = nd.node)"""
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = graft.SparkEntry.registry(
     // seed-teleport fixed-point replay, 5 unrolled rounds — see
     // trustrankIterCte
     "misc_trustrank" -> s"""

@@ -8,7 +8,7 @@ import graft.models.{Mms, TestdataAdapter}
   * left join (J2, F4). SURVEY.md §2.3, §2.8. */
 object MmsQueries {
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = graft.SparkEntry.registry(
     "mms_lb_staged" -> ((s, d) => Mms.lbStaged(TestdataAdapter.mmsSheet(s, d))),
     "mms_normalized_costs" -> ((s, d) => Mms.normalizedCosts(TestdataAdapter.mmsCosts(s, d))),
     "mms_perf_cost_combined" -> ((s, d) =>
@@ -70,7 +70,7 @@ WITH sheet AS (
   FROM costs_raw WHERE ET IS NOT NULL
 )"""
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = graft.SparkEntry.registry(
     "mms_lb_staged" -> s"""$cte
 SELECT * FROM staged""",
 

@@ -84,7 +84,7 @@ object RetailQueries {
   private def dimD(s: SparkSession, d: String) =
     Retail.dimDatetime(raw(s, d), TestdataAdapter.parseAdapterTs).persist(ser)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = graft.SparkEntry.registry(
     "retail_dim_customer" -> ((s, d) => dimC(s, d)),
     "retail_dim_product" -> ((s, d) => Retail.dimProduct(raw(s, d))),
     "retail_dim_datetime" -> ((s, d) => dimD(s, d)),
@@ -100,7 +100,7 @@ object RetailQueries {
   private val customerId = sk("CustomerID", "Country")
   private val datetimeId = sk("InvoiceDate")
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = graft.SparkEntry.registry(
     "retail_dim_customer" -> s"""$retail
 SELECT $customerId AS customer_id, r.Country AS country, cm.iso AS iso
 FROM (SELECT DISTINCT CustomerID, Country FROM raw_invoices WHERE CustomerID IS NOT NULL) r

@@ -10,7 +10,7 @@ import graft.streaming.EventsStream
   * Structured Streaming pipelines in graft.streaming, oracle-checked. */
 object StreamQueries {
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = graft.SparkEntry.registry(
     // Tumbling-window agg — same transform the streaming job runs.
     "stream_hourly_by_type" -> ((s, d) =>
       EventsStream.hourlyByType(Tables.events(s, d))),
@@ -412,7 +412,7 @@ object StreamQueries {
     })
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = graft.SparkEntry.registry(
     // exact distincts; first-seen keyed min; zero-fill via left join
     "stream_hourly_uniques" -> """
 WITH h AS (SELECT date_trunc('hour', ts) AS hour_ts,

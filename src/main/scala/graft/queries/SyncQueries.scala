@@ -11,7 +11,7 @@ import graft.sync.DimSync
   * insert path (new names) and delete path (stale names) are non-empty. */
 object SyncQueries {
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = graft.SparkEntry.registry(
     // J6: source values missing from the dim → idempotent insert set
     "sync_insert_missing" -> ((s, d) => {
       val customer = Tables.customer(s, d)
@@ -276,7 +276,7 @@ object SyncQueries {
     })
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = graft.SparkEntry.registry(
     "sync_pit_join" -> """
 WITH dim AS (
   SELECT c_custkey, c_acctbal AS bal,

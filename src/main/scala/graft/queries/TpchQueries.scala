@@ -25,7 +25,7 @@ object TpchQueries {
 
   private def dec2(c: String) = col(c).cast(DecimalType(18, 2))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = graft.SparkEntry.registry(
     // Q1-shaped pricing summary: scan-heavy partial+final aggregation.
     "tpch_pricing_summary" -> ((s, d) =>
       Tables.lineitem(s, d)
@@ -419,7 +419,7 @@ object TpchQueries {
   private val discPrice =
     "CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))"
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = graft.SparkEntry.registry(
     "tpch_late_orders" -> """
 SELECT o_orderpriority, count(*) AS order_count
 FROM orders WHERE EXISTS (

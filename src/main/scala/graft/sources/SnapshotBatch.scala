@@ -802,10 +802,13 @@ class GraftSnapshotScan(spark: SparkSession, table: SnapshotTable,
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new SnapshotMicroBatchStream(spark, table, required, options)
 
+  /** This scan's file admission, made once: the statistics, the
+    * planned file list and the V1 relation's read all take it. */
+  private lazy val admission = table.admitted(pruning, version)
+
   /** The manifest-planned file list after every pruning lane — the
     * evidence the connector spec pins (skipping survives the DSv2 path). */
-  private[graft] def plannedFiles: Seq[String] =
-    table.readPruned(pruning, version)._2
+  private[graft] def plannedFiles: Seq[String] = table.readAdmitted(admission)._2
 
   /** EXACT row count from the manifest (maintained through every commit
     * path) feeding the planner's broadcast decision — a small snapshot
@@ -834,7 +837,7 @@ class GraftSnapshotScan(spark: SparkSession, table: SnapshotTable,
       private val pruningActive = pruning != Pruning()
       private val (plannedRows, plannedBytes): (Option[Long], Option[Long]) =
         if (!pruningActive || snap.isEmpty) (None, None)
-        else try table.plannedStats(pruning, version)
+        else try table.plannedStats(admission)
         catch { case scala.util.control.NonFatal(_) => (None, None) }
       private val rows: Option[Long] = plannedRows.orElse(snap.map(_.rows))
       override def numRows(): java.util.OptionalLong =
@@ -856,11 +859,11 @@ class GraftSnapshotScan(spark: SparkSession, table: SnapshotTable,
           org.apache.spark.sql.connector.expressions.NamedReference,
           org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
         val ndvs =
-          try table.plannedColumnNdvs(pruning, version)
+          try table.plannedColumnNdvs(admission)
           catch { case scala.util.control.NonFatal(_) =>
             Map.empty[String, Long] }
         val boundsByCol =
-          try table.plannedColumnBounds(pruning, version)
+          try table.plannedColumnBounds(admission)
           catch { case scala.util.control.NonFatal(_) =>
             Map.empty[String, (Option[(Long, Long)], Option[Long])] }
         val bandsV = snap.map(_.bandsV).getOrElse(1)
@@ -915,7 +918,7 @@ class GraftSnapshotScan(spark: SparkSession, table: SnapshotTable,
 
   override def toV1TableScan[T <: BaseRelation with TableScan](context: SQLContext): T =
     new GraftSnapshotRelation(context, spark, table, version, required,
-      pruning).asInstanceOf[T]
+      admission).asInstanceOf[T]
 
   override def description(): String = {
     val Pruning(bands, points, nullCols, orAlts) = pruning
@@ -930,17 +933,17 @@ class GraftSnapshotScan(spark: SparkSession, table: SnapshotTable,
 
 /** The V1 delegate: rows come from the engine's own MOR-aware plan,
   * pruned to the required columns — the inner parquet scan keeps its
-  * pushdown/codegen, and the band-pruned manifest decides which files
+  * pushdown/codegen, and the scan's admission decides which files
   * exist at all. */
 class GraftSnapshotRelation(context: SQLContext, spark: SparkSession,
                             table: SnapshotTable, version: Long,
-                            required: StructType, pruning: Pruning)
+                            required: StructType, admission: Option[Admission])
     extends BaseRelation with TableScan {
   override def sqlContext: SQLContext = context
   override def schema: StructType = required
   override def buildScan(): RDD[Row] = {
     import org.apache.spark.sql.functions.{col, input_file_name, lit}
-    val (df, _) = table.readPruned(pruning, version)
+    val (df, _) = table.readAdmitted(admission)
     val pruned =
       if (required.isEmpty) df.select() // count-style scans need no columns
       else df.select(required.fieldNames.toIndexedSeq.map {

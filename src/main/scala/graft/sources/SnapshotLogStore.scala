@@ -129,6 +129,31 @@ object SnapshotLogStore {
     } finally lastCollision.remove()
   }
 
+  /** Best-effort tip hint (a table's `_snapshots/_tip`, the transaction
+    * log's `_txn/_tip`): 0 when absent, torn, or unreadable — the caller
+    * falls back to listing. Never authoritative. */
+  private[sources] def readTipHint(fs: FileSystem, path: Path): Long =
+    try {
+      if (!fs.exists(path)) 0L
+      else {
+        val in = fs.open(path)
+        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+                  finally in.close()
+        txt.toLong
+      }
+    } catch { case scala.util.control.NonFatal(_) => 0L }
+
+  /** Overwrite a tip hint after a successful publish. Best-effort by
+    * design: concurrent overwrites may tear or regress the hint, and
+    * both are safe — a reader probes forward past a stale hint and falls
+    * back to listing on a torn one. Correctness never depends on this
+    * write landing. */
+  private[sources] def writeTipHint(fs: FileSystem, path: Path, v: Long): Unit =
+    try {
+      val out = fs.create(path, /* overwrite = */ true)
+      try out.write(v.toString.getBytes("UTF-8")) finally out.close()
+    } catch { case scala.util.control.NonFatal(_) => () }
+
   /** Read a published manifest, retrying failures with bounded backoff
     * (9 tries, sleeping 2 → 200 ms between them, ~0.45 s in all): the
     * exclusive publish elects the writer atomically, but on local/HDFS

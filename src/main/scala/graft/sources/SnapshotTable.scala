@@ -206,6 +206,27 @@ case class Snapshot(version: Long, action: String, baseVersion: Long,
                     dmins: Seq[Long] = Seq.empty,
                     dmaxs: Seq[Long] = Seq.empty)
 
+/** Per-file stats + MOR bookkeeping aligned with a manifest's file
+  * list. `stats` is aligned with the reading table's `statsCols` (outer)
+  * and `files` (inner); columns a manifest doesn't cover carry the
+  * full-range sentinel — conservatively never pruned. */
+private[graft] case class FileSet(files: Seq[String], stats: Seq[ColStats],
+                                  seqs: Seq[Long] = Seq.empty,
+                                  deletes: Seq[String] = Seq.empty,
+                                  deleteSeqs: Seq[Long] = Seq.empty,
+                                  deleteKey: Seq[String] = Seq.empty,
+                                  lens: Seq[Long] = Seq.empty,
+                                  deleteLens: Seq[Long] = Seq.empty,
+                                  frows: Seq[Long] = Seq.empty,
+                                  drows: Seq[Long] = Seq.empty,
+                                  dmins: Seq[Long] = Seq.empty,
+                                  dmaxs: Seq[Long] = Seq.empty)
+
+/** One file admission ([[SnapshotTable.admitted]]): the read snapshot,
+  * its file set and the indices of the files every pruning lane admits.
+  * A scan computes it once; its estimators and its read take it. */
+private[graft] case class Admission(snap: Snapshot, fl: FileSet, keep: Seq[Int])
+
 /** Minimal snapshot-versioned table format: immutable parquet data files
   * plus a linear chain of JSON manifests, one per committed version —
   * the miniature of the public log-structured table-format idea
@@ -296,6 +317,8 @@ class SnapshotTable(spark: SparkSession, root: String,
   private[graft] val metaProbes = new java.util.concurrent.atomic.AtomicLong
   private[graft] val metaLists = new java.util.concurrent.atomic.AtomicLong
   private[graft] val metaOpens = new java.util.concurrent.atomic.AtomicLong
+  /** File admissions run ([[admitted]] calls): one per planned scan. */
+  private[graft] val metaAdmits = new java.util.concurrent.atomic.AtomicLong
   /** Per-file getFileStatus calls on DATA paths (read/DML/stream
     * planning fallbacks + commit-time length recording). On a
     * lens-recording table, planning must keep this at ZERO — each call
@@ -331,22 +354,6 @@ class SnapshotTable(spark: SparkSession, root: String,
     manifestCache.putIfAbsent(s.version, s)
     ()
   }
-
-  /** Per-file stats + MOR bookkeeping aligned with a manifest's file
-    * list. `stats` is aligned with THIS table's `statsCols` (outer) and
-    * `files` (inner); columns a manifest doesn't cover carry the
-    * full-range sentinel — conservatively never pruned. */
-  private case class FileSet(files: Seq[String], stats: Seq[ColStats],
-                             seqs: Seq[Long] = Seq.empty,
-                             deletes: Seq[String] = Seq.empty,
-                             deleteSeqs: Seq[Long] = Seq.empty,
-                             deleteKey: Seq[String] = Seq.empty,
-                             lens: Seq[Long] = Seq.empty,
-                             deleteLens: Seq[Long] = Seq.empty,
-                             frows: Seq[Long] = Seq.empty,
-                             drows: Seq[Long] = Seq.empty,
-                             dmins: Seq[Long] = Seq.empty,
-                             dmaxs: Seq[Long] = Seq.empty)
 
   /** `lens` aligned to an `n`-file list; any misaligned/absent vector
     * reads as all-unknown (-1) — NEVER positionally reinterpreted, a
@@ -443,38 +450,14 @@ class SnapshotTable(spark: SparkSession, root: String,
     fs.exists(p)
   }
 
-  /** Best-effort tip hint: 0 when absent, torn, or unreadable — the
-    * caller falls back to listing. Never authoritative. */
-  private def readTipHint(): Long =
-    try {
-      metaProbes.incrementAndGet()
-      if (!fs.exists(tipHintPath)) 0L
-      else {
-        val in = fs.open(tipHintPath)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-                  finally in.close()
-        txt.toLong
-      }
-    } catch { case scala.util.control.NonFatal(_) => 0L }
-
-  /** Overwrite the tip hint after a successful publish. Best-effort by
-    * design: concurrent overwrites may tear or regress the hint, and
-    * both are safe — [[latestVersion]] probes forward past a stale hint
-    * and falls back to listing on a torn one. Correctness never depends
-    * on this write landing. */
-  private def writeTipHint(v: Long): Unit =
-    try {
-      val out = fs.create(tipHintPath, /* overwrite = */ true)
-      try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-    } catch { case scala.util.control.NonFatal(_) => () }
-
   /** Latest committed version, 0 if the table is empty. Hint-guided:
     * O(commits since the hint) existence probes, no directory listing on
     * the hinted path (the `_last_checkpoint`-style tip pointer of the
     * public formats — a 10⁵-commit table's read does not list 10⁵
     * manifests). */
   def latestVersion(): Long = {
-    val hint = readTipHint()
+    metaProbes.incrementAndGet() // the hint read counts as a probe
+    val hint = SnapshotLogStore.readTipHint(fs, tipHintPath)
     if (hint > 0 && probeExists(manifestPath(hint))) {
       var v = hint
       while (probeExists(manifestPath(v + 1))) v += 1
@@ -1432,16 +1415,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     // quadratic in its own epoch count). Other writers' interleaved
     // versions neither match nor stop the walk. Vacuumed manifest
     // prefixes end the walk the same way: older epochs are settled.
-    var v = latestVersion()
-    var dup = -1L
-    while (v > 0 && dup < 0 && fs.exists(manifestPath(v))) {
-      val s = snapshot(v)
-      if (s.batchId == batchId && s.txnApp == txnApp && s.action == "append")
-        dup = s.version
-      else if (s.batchId >= 0 && s.batchId < batchId && s.txnApp == txnApp &&
-        s.action == "append") v = 0
-      else v -= 1
-    }
+    val dup = epochDup(txnApp, batchId, "append")
     if (dup >= 0) dup
     else {
       evolveSchema(tipSchemaOf(latestVersion()), df.schema) // fail-fast gate
@@ -1720,10 +1694,11 @@ class SnapshotTable(spark: SparkSession, root: String,
     require(statsCols.contains(column),
       s"range read on $root: '$column' is not a stats column (${statsCols.mkString(",")})")
     val alts = ranges.map { case (lo, hi) => PruneAlt(Map(column -> ((lo, hi))), Set.empty) }
-    val (snap, base, _) = prunedPlan(Pruning(orAlts = Seq(alts)), version)
+    val a = admitted(Pruning(orAlts = Seq(alts)), version)
+    val (base, _) = readAdmitted(a)
     // the residual filter keys under the READ manifest's semantics —
     // a version below a band upgrade keeps its own key space
-    val k = bandKeyCol(base, column, snap.bandsV)
+    val k = bandKeyCol(base, column, a.get.snap.bandsV)
     base.filter(ranges.map { case (lo, hi) => k.between(lo, hi) }.reduce(_ || _))
   }
 
@@ -1851,19 +1826,19 @@ class SnapshotTable(spark: SparkSession, root: String,
     else FileNdv.unionEstimate(nonEmpty.map(nd))
   }
 
-  /** Post-pruning per-column NDV estimates for the file set the given
-    * pruning would plan — what the connector's column statistics report
+  /** Post-pruning per-column NDV estimates for an admission's planned
+    * file set — what the connector's column statistics report
     * so join planning and distinct-count questions see the scan, not
     * the table. Columns without full sketch coverage are absent. */
-  private[graft] def plannedColumnNdvs(p: Pruning, version: Long): Map[String, Long] =
-    admitted(p, version).fold(Map.empty[String, Long]) { case (_, fl, keep) =>
+  private[graft] def plannedColumnNdvs(a: Option[Admission]): Map[String, Long] =
+    a.fold(Map.empty[String, Long]) { case Admission(_, fl, keep) =>
       statsCols.zipWithIndex.flatMap { case (c, ci) =>
         ndvOf(fl, ci, keep).map(c -> _)
       }.toMap
     }
 
   /** Post-pruning per-column (band-key [min, max], null count) over the
-    * file set the given pruning would PLAN — the rest of the V2 column
+    * file set an admission PLANS — the rest of the V2 column
     * statistics next to [[plannedColumnNdvs]], folded from the manifest
     * vectors alone (no file opened). Bounds are absent when nothing
     * survives pruning or when any planned non-empty file's bound is
@@ -1874,11 +1849,11 @@ class SnapshotTable(spark: SparkSession, root: String,
     * range or a null census) — the conservative direction an estimate
     * may err in. Keys convert back to typed values only where the key
     * function is exact ([[BandKeys.keyToCatalyst]]); the caller decides. */
-  private[graft] def plannedColumnBounds(p: Pruning, version: Long)
+  private[graft] def plannedColumnBounds(a: Option[Admission])
       : Map[String, (Option[(Long, Long)], Option[Long])] = {
-    admitted(p, version) match {
+    a match {
       case None => Map.empty
-      case Some((_, fl, keep)) =>
+      case Some(Admission(_, fl, keep)) =>
         statsCols.zipWithIndex.map { case (c, ci) =>
           val cs = fl.stats(ci)
           val mins = alignOr(cs.mins, fl.files.length, UnknownMin)
@@ -1909,21 +1884,20 @@ class SnapshotTable(spark: SparkSession, root: String,
     * still returned — callers needing the typed extremum use the typed
     * bounds / a scan). What `snapshot_stats(...)` surfaces to SQL. */
   def statsSummary(version: Long = -1L): Seq[ColumnStatsSummary] = {
-    // ONE version resolution for all three manifest lookups — letting
-    // each resolve `-1` independently could interleave with a
+    // ONE admission (one version resolution) for all three folds —
+    // letting each resolve `-1` independently could interleave with a
     // concurrent commit and mix two versions' stats in one report.
-    val v = if (version < 0) latestVersion() else version
-    val bounds = plannedColumnBounds(Pruning(), v)
-    val ndvs = plannedColumnNdvs(Pruning(), v)
+    val all = admitted(Pruning(), version)
+    val bounds = plannedColumnBounds(all)
+    val ndvs = plannedColumnNdvs(all)
     // TYPED value bounds (today: STRING — recorded exactly where the
     // long key is lossy): min-of-mins / max-of-maxs under the bytewise
     // ordering IS the column extremum ([[TypedBounds]]); any non-empty
     // file with an Absent bound makes the whole answer absent — a
     // partial fold would silently under-claim the range.
-    val typed: Map[String, (Option[String], Option[String])] =
-      if (v <= 0) Map.empty
-      else {
-        val fl = fileSetOf(snapshot(v))
+    val typed: Map[String, (Option[String], Option[String])] = all match {
+      case None => Map.empty
+      case Some(Admission(_, fl, _)) =>
         val n = fl.files.length
         statsCols.zipWithIndex.map { case (c, ci) =>
           val cs = fl.stats(ci)
@@ -1937,7 +1911,7 @@ class SnapshotTable(spark: SparkSession, root: String,
               .map(new String(_, "UTF-8"))
           c -> ((fold(tm, TypedBounds.minOf), fold(tx, TypedBounds.maxOf)))
         }.toMap
-      }
+    }
     statsCols.map { c =>
       val (b, nc) = bounds.getOrElse(c, (None, None))
       val (tmin, tmax) = typed.getOrElse(c, (None, None))
@@ -1946,18 +1920,18 @@ class SnapshotTable(spark: SparkSession, root: String,
     }
   }
 
-  /** (rows, bytes) of the file set the given pruning would PLAN — the
+  /** (rows, bytes) of the file set an admission PLANS — the
     * post-pruning statistics the connector reports so the optimizer's
     * broadcast decision sees what the scan will actually read, not the
     * whole table. None when any planned file lacks the recorded vector
     * (conservative: the caller falls back to unpruned totals). Rows are
     * an upper bound under MOR deletes (deletes only shrink) — exactly
     * the conservative direction an estimate may err in. */
-  private[graft] def plannedStats(p: Pruning, version: Long)
+  private[graft] def plannedStats(a: Option[Admission])
       : (Option[Long], Option[Long]) = {
-    admitted(p, version) match {
+    a match {
       case None => (None, None)
-      case Some((_, fl, keep)) =>
+      case Some(Admission(_, fl, keep)) =>
         val fr = alignLens(fl.frows, fl.files.length)
         val ln = alignLens(fl.lens, fl.files.length)
         (if (keep.forall(fr(_) >= 0L)) Some(keep.map(fr).sum) else None,
@@ -1976,34 +1950,27 @@ class SnapshotTable(spark: SparkSession, root: String,
     * every non-null value it holds, and for IS NULL because a
     * known-zero null count proves the file holds no NULL. */
   private[graft] def readPruned(p: Pruning, version: Long = -1L)
-      : (DataFrame, Seq[String]) = {
-    val (_, df, planned) = prunedPlan(p, version)
-    (df, planned)
-  }
+      : (DataFrame, Seq[String]) = readAdmitted(admitted(p, version))
 
-  /** [[readPruned]] with the read snapshot, whose band semantics a
-    * caller's residual filter must key under. */
-  private def prunedPlan(p: Pruning, version: Long)
-      : (Snapshot, DataFrame, Seq[String]) = {
-    val got = admitted(p, version)
-    require(got.nonEmpty, s"no committed snapshot to read at $root")
-    val (snap, fl, keep) = got.get
-    if (keep.isEmpty) (snap, read(snap.version).limit(0), Seq.empty)
-    else (snap, morPlan(snap, keep, mergeSchema = false), keep.map(fl.files))
+  /** [[readPruned]] over an admission already made. */
+  private[graft] def readAdmitted(a: Option[Admission]): (DataFrame, Seq[String]) = {
+    require(a.nonEmpty, s"no committed snapshot to read at $root")
+    val Admission(snap, fl, keep) = a.get
+    if (keep.isEmpty) (read(snap.version).limit(0), Seq.empty)
+    else (morPlan(snap, keep, mergeSchema = false), keep.map(fl.files))
   }
 
   /** Resolve `version` (negative = tip) once, then admit its files
-    * through [[prunedKeep]]: the (snapshot, file set, admitted indices)
-    * every admission caller starts from. None when nothing is
-    * committed. */
-  private def admitted(p: Pruning, version: Long)
-      : Option[(Snapshot, FileSet, Seq[Int])] = {
+    * through [[prunedKeep]]: the [[Admission]] every admission caller
+    * starts from. None when nothing is committed. */
+  private[graft] def admitted(p: Pruning, version: Long): Option[Admission] = {
+    metaAdmits.incrementAndGet()
     val v = if (version < 0) latestVersion() else version
     if (v <= 0) None
     else {
       val snap = snapshot(v)
       val fl = fileSetOf(snap)
-      Some((snap, fl, prunedKeep(fl, p)))
+      Some(Admission(snap, fl, prunedKeep(fl, p)))
     }
   }
 
@@ -2078,7 +2045,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     fs.mkdirs(snapsDir)
     try {
       store.writeExclusive(fs, manifestPath(v), body.getBytes("UTF-8"))
-      writeTipHint(v)
+      SnapshotLogStore.writeTipHint(fs, tipHintPath, v)
       maybeCheckpoint(v)
       Some(v)
     } catch {
@@ -2915,7 +2882,7 @@ class SnapshotTable(spark: SparkSession, root: String,
       : (SnapshotDmlSpec, Seq[String], Boolean) = {
     val got = admitted(pruning, version)
     require(got.nonEmpty, s"no committed snapshot to rewrite at $root")
-    val (s, fl, keep) = got.get
+    val Admission(s, fl, keep) = got.get
     def abs(rel: String) = new Path(dataDir, rel)
     def len(p: Path): Long = statOf(p).getLen
     val spec = SnapshotDmlSpec(
@@ -4056,10 +4023,7 @@ class SnapshotTable(spark: SparkSession, root: String,
     }
     SnapshotLogStore.forFileSystem(dfs).writeExclusive(dfs,
       new Path(destSnaps, f"v$v%020d.json"), body.getBytes("UTF-8"))
-    try { // best-effort tip hint, same contract as writeTipHint
-      val out = dfs.create(new Path(destSnaps, "_tip"), true)
-      try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-    } catch { case scala.util.control.NonFatal(_) => () }
+    SnapshotLogStore.writeTipHint(dfs, new Path(destSnaps, "_tip"), v)
     if (!deep) pinCloneTag(v)
     v
   }

@@ -84,25 +84,6 @@ class TableTransactions(spark: SparkSession, root: String,
     logStore.getOrElse(SnapshotLogStore.forFileSystem(fs))
   private def txnPath(v: Long) = new Path(txnDir, f"t$v%020d.json")
 
-  private def readTipHint(): Long =
-    try {
-      if (!fs.exists(tipHintPath)) 0L
-      else {
-        val in = fs.open(tipHintPath)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-                  finally in.close()
-        txt.toLong
-      }
-    } catch { case scala.util.control.NonFatal(_) => 0L }
-
-  /** Best-effort, like the table-level hint: a stale or torn hint only
-    * costs probes, never correctness. */
-  private def writeTipHint(v: Long): Unit =
-    try {
-      val out = fs.create(tipHintPath, /* overwrite = */ true)
-      try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-    } catch { case scala.util.control.NonFatal(_) => () }
-
   private def probeExists(p: Path): Boolean =
     try fs.getFileStatus(p) != null
     catch { case _: java.io.FileNotFoundException => false }
@@ -110,7 +91,7 @@ class TableTransactions(spark: SparkSession, root: String,
   /** Latest committed transaction number, 0 when none. Hint-guided
     * forward probe, listing fallback — O(txns since hint) HEADs. */
   def latestTxn(): Long = {
-    val hint = readTipHint()
+    val hint = SnapshotLogStore.readTipHint(fs, tipHintPath)
     if (hint > 0 && probeExists(txnPath(hint))) {
       var v = hint
       while (probeExists(txnPath(v + 1))) v += 1
@@ -188,7 +169,7 @@ class TableTransactions(spark: SparkSession, root: String,
       if (!fs.exists(txnDir)) fs.mkdirs(txnDir)
       try {
         store.writeExclusive(fs, txnPath(next), body.getBytes("UTF-8"))
-        writeTipHint(next)
+        SnapshotLogStore.writeTipHint(fs, tipHintPath, next)
         Some(next)
       } catch {
         case e: java.io.IOException

@@ -26,13 +26,7 @@ object HubJaccardBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     def time(label: String, cap: Long, nNodes: Long): Unit = {
       val g = graft.QueryCaches.scoped(und(spark, nNodes))
       g.count() // materialize input outside the timed window

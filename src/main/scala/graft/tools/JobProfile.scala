@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: per-JOB wall-time breakdown of one registered query — the
   * "where do a snapshot query's 25 jobs spend their 4 seconds" view the
@@ -25,11 +24,7 @@ object JobProfile {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1)
     require(names.nonEmpty, "usage: JobProfile [sfDir] queryName…")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Long)]()
     val listener = new SparkListener {

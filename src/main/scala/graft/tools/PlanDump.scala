@@ -1,32 +1,29 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: write `.explain("formatted")` of registered queries to
   * files — the plan evidence the optimization rounds commit under
-  * plans/<round>/. For multi-action queries (snapshot/catalog/stream)
-  * the dumped plan is the FINAL frame's; per-action shapes come from
-  * [[JobProfile]].
+  * plans/<round>/, and the plan review loop: grep the dumps for the
+  * load-bearing operators (join strategies, scans, exchanges). For
+  * multi-action queries (snapshot/catalog/stream) the dumped plan is the
+  * FINAL frame's; per-action shapes come from [[JobProfile]].
   *
-  * Usage: sbt "runMain graft.tools.PlanDump <outDir> <suffix> [sfDir] queryName…"
-  * writes <outDir>/<query>_<suffix>.txt
+  * Usage: sbt "runMain graft.tools.PlanDump <outDir> <suffix> <sfDir> [queryName…]"
+  * writes <outDir>/<query>_<suffix>.txt for each named query, or for
+  * every registered query when none is named. Runs at 8 cores (8 shuffle
+  * partitions), the setting the committed plans/ dumps were taken at.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 3, "usage: PlanDump <outDir> <suffix> <sfDir> queryName…")
+    require(args.length >= 3, "usage: PlanDump <outDir> <suffix> <sfDir> [queryName…]")
     val outDir = new java.io.File(args(0)); outDir.mkdirs()
     val suffix = args(1)
     val dir = args(2)
-    val names = args.drop(3)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    names.foreach { name =>
+    val selected = graft.SparkEntry.select(args.drop(3).toSet)
+    val spark = graft.GraftSession.local(8)
+    selected.foreach { case (name, fn) =>
       val out = new java.io.File(outDir, s"${name}_$suffix.txt")
       try {
-        val df = graft.SparkEntry.queries(name)(spark, dir)
+        val df = fn(spark, dir)
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         val w = new java.io.PrintWriter(out, "UTF-8")

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNull, LessThan, LessThanOrEqual, Or}
+import org.apache.spark.sql.sources.{BaseRelation, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNull, LessThan, LessThanOrEqual, Or, TableScan}
 import graft.sources.{GraftSnapshotScan, GraftSnapshotScanBuilder, Pruning, SnapshotTable}
 
 /** Every file-admission surface of the snapshot table agrees: for one
@@ -88,7 +88,7 @@ class AdmissionAgreementSpec extends SparkSpec {
     assert(rows(spark.sql(s"SELECT k, v FROM $cat.db.$name WHERE $predicate")) == truth,
       s"$name: SQL read rows")
 
-    assert(t.plannedStats(Pruning.of(filters, t.tableBandsV), -1L)._1 ==
+    assert(t.plannedStats(t.admitted(Pruning.of(filters, t.tableBandsV), -1L))._1 ==
       Some(100L * expected.size), s"$name: plannedStats rows")
 
     // the row-level DELETE rewrites exactly the files its plan admitted
@@ -125,6 +125,26 @@ class AdmissionAgreementSpec extends SparkSpec {
     agree("or", "k < 10 OR k > 2050",
       Seq(Or(LessThan("k", 10L), GreaterThan("k", 2050L))),
       Some(Seq((Long.MinValue, 9L), (2051L, Long.MaxValue))), Set(0, 1, 2, 4))
+  }
+
+  test("planning and collecting one pruned scan admits its files once") {
+    // the scan's statistics (rows, bytes, NDVs, bounds), its planned file
+    // list and its V1 relation's read share one admission
+    val (t, files) = fixture("once")
+    val truth = t.read().filter(col("k") >= 1000L).count()
+    val b = new GraftSnapshotScanBuilder(spark, t, t.latestVersion(), t.read().schema)
+    b.pushFilters(Array(GreaterThanOrEqual("k", 1000L)))
+    val before = t.metaAdmits.get
+    val scan = b.build().asInstanceOf[GraftSnapshotScan]
+    val stats = scan.estimateStatistics()
+    assert(stats.numRows().getAsLong == 200L)
+    assert(stats.sizeInBytes().isPresent)
+    assert(!stats.columnStats().isEmpty)
+    assert(scan.plannedFiles.map(rel).toSet == Set(rel(files(3)), rel(files(4))))
+    val relation = scan.toV1TableScan[BaseRelation with TableScan](spark.sqlContext)
+    assert(relation.buildScan().filter(r => !r.isNullAt(0) && r.getLong(0) >= 1000L)
+      .count() == truth)
+    assert(t.metaAdmits.get - before == 1, s"admissions: ${t.metaAdmits.get - before}")
   }
 
   test("DELETE of an absent key: the bloom prunes every file, so nothing is rewritten") {

@@ -256,7 +256,7 @@ class CboBoundsSpec extends SparkSpec {
     val t = new SnapshotTable(spark, root, statsCols = Seq("k"))
     t.commitAppend(spark.range(0, 100).toDF("k").repartition(1))
     t.commitDeleteByKey(spark.range(90, 100).toDF("k"), Seq("k"))
-    val b = t.plannedColumnBounds(graft.sources.Pruning(), -1L)
+    val b = t.plannedColumnBounds(t.admitted(graft.sources.Pruning(), -1L))
     // live max is 89 but the manifest bound stays 99 — a documented
     // upper bound (deletes only shrink), never an under-claim
     assert(b.get("k").exists(_._1.contains((0L, 99L))), s"got $b")

@@ -18,11 +18,44 @@ class ContractSpec extends SparkSpec {
   }
 
   test("a name registered by two modules fails the registry merge, naming each duplicate") {
-    val e = intercept[IllegalArgumentException](SparkEntry.mergeRegistries(
-      Map("a" -> 1, "b" -> 2), Map("b" -> 3, "c" -> 4), Map("a" -> 5)))
+    val e = intercept[IllegalArgumentException](SparkEntry.registry(
+      Seq(Map("a" -> 1, "b" -> 2), Map("b" -> 3, "c" -> 4), Map("a" -> 5)).flatten: _*))
     assert(e.getMessage.contains("a, b"), e.getMessage)
-    assert(SparkEntry.mergeRegistries(Map("a" -> 1), Map("b" -> 2)) ==
+    assert(SparkEntry.registry(Seq(Map("a" -> 1), Map("b" -> 2)).flatten: _*) ==
       Map("a" -> 1, "b" -> 2))
+  }
+
+  test("a name repeated inside one registry literal fails, naming each repeat") {
+    val e = intercept[IllegalArgumentException](SparkEntry.registry(
+      "c" -> 1, "a" -> 2, "c" -> 3, "b" -> 4, "a" -> 5))
+    assert(e.getMessage.contains("a, c"), e.getMessage)
+    assert(!e.getMessage.contains("b"), e.getMessage)
+  }
+
+  test("select keeps the registry's order and names every unknown query") {
+    val names = SparkEntry.queries.keys.toSeq
+    assert(SparkEntry.select(Set.empty).map(_._1) == names)
+    val some = Set(names.last, names.head, names(names.length / 2))
+    assert(SparkEntry.select(some).map(_._1) == names.filter(some))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select(Set(names.head, "no_such_q2", "no_such_q1")))
+    assert(e.getMessage.contains("no_such_q1, no_such_q2"), e.getMessage)
+  }
+
+  test("only GraftSession builds a SparkSession in src/main and src/test") {
+    // perfbench/ is not scanned: the benchmark builds its own session, so
+    // its numbers do not move when the program's session settings change
+    val pattern = """SparkSession\s*\.\s*builder""".r
+    def scalaFiles(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(scalaFiles)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
+    val files = Seq("src/main/scala", "src/test/scala")
+      .flatMap(d => scalaFiles(new java.io.File(d)))
+    assert(files.exists(_.getName == "GraftSession.scala"), "source tree not found")
+    val builders = files.filter { f =>
+      pattern.findFirstIn(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).nonEmpty
+    }.map(_.getName)
+    assert(builders == Seq("GraftSession.scala"), builders)
   }
 
   test("every registered query analyzes at sf0.001") {

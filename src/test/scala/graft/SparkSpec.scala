@@ -11,13 +11,6 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-    .getOrCreate()
+  /** Four cores: PlanShapeSpec pins its shuffle counts at 4 partitions. */
+  lazy val session: SparkSession = GraftSession.local(4)
 }
