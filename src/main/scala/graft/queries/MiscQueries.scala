@@ -267,13 +267,7 @@ object MiscQueries {
     }),
 
     "misc_snapshot_travel" -> ((s, d) => {
-      val root = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_snap_${s.sparkContext.applicationId}")
-      if (root.exists()) { // re-run inside one app: rebuild from scratch
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          root.toURI, s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(root.getAbsolutePath), true)
-      }
+      val root = Tables.freshTmpDir(s, "graft_snap")
       val t = new graft.sources.SnapshotTable(s, root.getAbsolutePath)
       val o = SharedFrames.ordersCents(s, d)
       t.commitAppend(o.filter(col("o_orderkey") % 4 === 0))
@@ -852,7 +846,7 @@ object MiscQueries {
     // aligned leg scans zero files, the straddling leg scans exactly
     // the two boundary files, and both counts replay in DuckDB.
     "misc_snapshot_count_range" -> ((s, d) => {
-      val root = Tables.freshTmpDir(s, "graft_snapcount").getAbsolutePath
+      val root = Tables.freshTmpDir(s, "graft_snapcountrange").getAbsolutePath
       val t = new graft.sources.SnapshotTable(s, root, statsCols = Seq("day"))
       val o = Tables.orders(s, d).select(to_date(col("o_orderdate")).as("day"))
       val (c1, c2) = (java.sql.Date.valueOf("1997-01-01"),
@@ -1954,11 +1948,11 @@ object MiscQueries {
     // SQL DELETE via MERGE-ON-READ: the table opts in with
     // write.delete.mode='merge-on-read' + write.delete.key, and
     // `DELETE FROM … WHERE …` publishes `delete_mor` versions (key
-    // files + manifest re-list, NO data rewrite —
-    // GraftSnapshotDeltaDeleteOperation). The chain exercises the
-    // equality-delete sequencing rule (a re-inserted key survives the
-    // earlier delete) and `cdf_deletes` pins the change feed's
-    // retraction replay. Actions in the history output prove the SQL
+    // files + manifest re-list, NO data rewrite — the row delta
+    // GraftSnapshotDeltaRowOperation, with no data rows). The chain
+    // exercises the equality-delete sequencing rule (a re-inserted key
+    // survives the earlier delete) and `cdf_deletes` pins the change
+    // feed's retraction replay. Actions in the history output prove the SQL
     // statements took the MOR path. Replayed in DuckDB by key
     // arithmetic.
     "misc_catalog_dml_mor" -> ((s, d) => {

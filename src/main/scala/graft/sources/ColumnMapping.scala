@@ -59,15 +59,9 @@ object ColumnMapping {
     else df.select(schema.fields.toIndexedSeq.map(f =>
       col(physicalName(f)).as(f.name, f.metadata)): _*)
 
-  /** Rename a logical frame's columns to their physical names per
-    * `mapping` (columns outside the mapping — including genuinely new
-    * columns, whose physical name IS their logical name — pass through). */
-  def toPhysical(df: DataFrame, mapping: Map[String, String]): DataFrame =
-    if (mapping.isEmpty || !df.columns.exists(mapping.contains)) df
-    else df.select(df.columns.toIndexedSeq.map(c =>
-      col(c).as(mapping.getOrElse(c, c))): _*)
-
-  /** Rename a write schema's fields to physical names per `mapping`. */
+  /** Rename a write schema's fields to physical names per `mapping`
+    * (fields outside the mapping — including genuinely new columns,
+    * whose physical name IS their logical name — pass through). */
   def renameFields(schema: StructType, mapping: Map[String, String]): StructType =
     if (mapping.isEmpty) schema
     else StructType(schema.fields.map(f =>

@@ -268,18 +268,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // Spark job) — the table SELECTs as zero rows from birth and every
     // later commit evolves from this recorded schema
     val t = new SnapshotTable(spark, p.toString, statsCols)
-    val uuid = java.util.UUID.randomUUID().toString
-    val conf = spark.sessionState.conf
-    val w = new SnapshotParquetWriter(new Path(p, "data").toString, uuid,
-      "part-00000-create.parquet", schema, statsCols,
-      conf.writeLegacyParquetFormat.toString, conf.parquetOutputTimestampType.toString,
-      spark.sparkContext.hadoopConfiguration)
-    val msg = w.commit().asInstanceOf[SnapshotWriteMessage]
     // bootstrap version: dataChange=false — an empty create delivers
     // nothing, so feeds and streams start cleanly from it
-    t.commitWrittenOverwrite(Seq(s"$uuid/${msg.file}"),
-      SnapshotWrite.colStats(Seq(msg), statsCols.length), 0L, schema,
-      dataChange = false, frows = Seq(0L))
+    t.commitEmptyOverwrite(schema, "part-00000-create.parquet", dataChange = false)
     // persist user TBLPROPERTIES (config sidecar) — minus the keys Spark
     // injects and stats_cols, which lives in the manifests themselves
     if (userProps.nonEmpty) t.setTableProperties(userProps)

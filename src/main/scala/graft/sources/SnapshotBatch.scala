@@ -406,11 +406,10 @@ class GraftSnapshotBatchTable(spark: SparkSession, root: String,
   /** SQL DELETE/UPDATE/MERGE — predicate-pruned group-based
     * copy-on-write rewrite by default ([[GraftSnapshotRowLevelOperation]]),
     * or merge-on-read deltas when the table opts in per statement kind:
-    * `write.delete.mode='merge-on-read'` routes DELETE to equality-delete
-    * commits ([[GraftSnapshotDeltaDeleteOperation]]);
-    * `write.update.mode` / `write.merge.mode` route UPDATE/MERGE to
-    * equality-delete + append delta commits
-    * ([[GraftSnapshotDeltaRowOperation]]). All share `write.delete.key`. */
+    * `write.delete.mode` / `write.update.mode` / `write.merge.mode` route
+    * DELETE/UPDATE/MERGE to equality-delete + append delta commits
+    * ([[GraftSnapshotDeltaRowOperation]]; a DELETE's delta carries no
+    * data rows). All share `write.delete.key`. */
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder =
@@ -454,22 +453,8 @@ class GraftSnapshotBatchTable(spark: SparkSession, root: String,
     * logical name in a data file); the commit records the LOGICAL
     * schema as every write path does. */
   override def truncateTable(): Boolean = {
-    val statsCols = statsColsForWrite
-    val table = new SnapshotTable(spark, root, statsCols)
-    val mapping = table.tipLogicalToPhysical
-    val uuid = java.util.UUID.randomUUID().toString
-    val conf = spark.sessionState.conf
-    val w = new SnapshotParquetWriter(
-      new org.apache.hadoop.fs.Path(root, "data").toString, uuid,
-      "part-00000-truncate.parquet",
-      ColumnMapping.renameFields(tableSchema, mapping),
-      statsCols.map(c => mapping.getOrElse(c, c)),
-      conf.writeLegacyParquetFormat.toString, conf.parquetOutputTimestampType.toString,
-      spark.sparkContext.hadoopConfiguration, bandsV = table.tableBandsV)
-    val msg = w.commit().asInstanceOf[SnapshotWriteMessage]
-    table.commitWrittenOverwrite(Seq(s"$uuid/${msg.file}"),
-      SnapshotWrite.colStats(Seq(msg), statsCols.length), 0L, tableSchema,
-      frows = Seq(0L))
+    new SnapshotTable(spark, root, statsColsForWrite)
+      .commitEmptyOverwrite(tableSchema, "part-00000-truncate.parquet")
     true
   }
 }
@@ -800,7 +785,7 @@ class GraftSnapshotScan(spark: SparkSession, table: SnapshotTable,
     * [[SnapshotMicroBatchStream]]. */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new SnapshotMicroBatchStream(spark, table, required, options)
+    new SnapshotMicroBatchStream(spark, table, required, options, checkpointLocation)
 
   /** This scan's file admission, made once: the statistics, the
     * planned file list and the V1 relation's read all take it. */
@@ -808,7 +793,11 @@ class GraftSnapshotScan(spark: SparkSession, table: SnapshotTable,
 
   /** The manifest-planned file list after every pruning lane — the
     * evidence the connector spec pins (skipping survives the DSv2 path). */
-  private[graft] def plannedFiles: Seq[String] = table.readAdmitted(admission)._2
+  private[graft] def plannedFiles: Seq[String] = {
+    require(admission.nonEmpty, s"no committed snapshot to read at ${table.rootPath}")
+    val a = admission.get
+    a.keep.map(a.fl.files)
+  }
 
   /** EXACT row count from the manifest (maintained through every commit
     * path) feeding the planner's broadcast decision — a small snapshot

@@ -14,12 +14,17 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 /** DSv2 micro-batch STREAM over a snapshot table — what makes
   * `spark.readStream.table("cat.db.t")` work (the catalog is the front
   * door; the path-based V1 source `format("graft-snapshot")` keeps its
-  * own provider). Identical semantics to the V1 [[SnapshotSource]]:
+  * own provider). The V1 [[SnapshotSource]]'s semantics, minus two of
+  * its options: no `changeFeed` (retractions stream only through the
+  * path-based source) and no `branch` (the catalog stream reads the
+  * table's main chain):
   *
   *  - offsets ARE table versions (`LongOffset`), checkpointed by the
-  *    engine — a restart resumes at the next uncommitted version, and
-  *    a `startingVersion=latest` resolution is persisted BY the engine
-  *    in its offset log (resolved once per fresh checkpoint);
+  *    engine — a restart resumes at the next uncommitted version;
+  *    `startingVersion=latest` is resolved ONCE per checkpoint and
+  *    persisted under the source's checkpoint dir
+  *    ([[StreamAdmission.resolveLatestOnce]], shared with the V1 source),
+  *    so a restart never floors past commits made while it was down;
   *  - insert-only contract: a non-append data change in the range is an
   *    error unless `skipChangeCommits=true` (appends-only), exactly the
   *    V1 source's rule; compactions (dataChange=false) never deliver;
@@ -46,7 +51,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   */
 class SnapshotMicroBatchStream(spark: SparkSession, table: SnapshotTable,
                                schema: StructType,
-                               options: CaseInsensitiveStringMap)
+                               options: CaseInsensitiveStringMap,
+                               checkpointLocation: String)
     extends MicroBatchStream with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
   private val root = table.rootPath
@@ -54,7 +60,8 @@ class SnapshotMicroBatchStream(spark: SparkSession, table: SnapshotTable,
     options.getBoolean("skipChangeCommits", false)
   private val startingVersion: Long =
     Option(options.get("startingVersion")).map {
-      case "latest" => table.latestVersion() + 1
+      case "latest" =>
+        StreamAdmission.resolveLatestOnce(spark, root, checkpointLocation)
       case v => v.toLong
     }.getOrElse(1L)
   private def floor: Long =
@@ -137,6 +144,26 @@ class SnapshotMicroBatchStream(spark: SparkSession, table: SnapshotTable,
   * a single over-cap commit delivers alone and whole. */
 private[sources] object StreamAdmission {
   import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, ReadLimit, ReadMaxBytes, ReadMaxRows}
+
+  /** `startingVersion=latest` ("from now on"), resolved ONCE per
+    * checkpoint and persisted under the source's `metadataPath`:
+    * re-resolving on every restart would floor past the commits made
+    * while the query was down and silently drop them. */
+  def resolveLatestOnce(spark: SparkSession, root: String, metadataPath: String): Long = {
+    val marker = new Path(metadataPath, "graft-starting-version")
+    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(marker)) {
+      val in = fs.open(marker)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
+      finally in.close()
+    } else {
+      val v = new SnapshotTable(spark, root).latestVersion() + 1
+      fs.mkdirs(marker.getParent)
+      val out = fs.create(marker, /* overwrite = */ false)
+      try out.write(v.toString.getBytes("UTF-8")) finally out.close()
+      v
+    }
+  }
 
   def capOption(raw: Option[String], key: String): Option[Long] =
     raw.map { v =>
@@ -236,19 +263,9 @@ class SnapshotStreamingWrite(spark: SparkSession, root: String,
     dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
-      : StreamingDataWriterFactory = {
-    val conf = spark.sessionState.conf
-    // column-mapped tables: streamed epochs write PHYSICAL names too
-    val h = new SnapshotTable(spark, root)
-    val mapping = h.tipLogicalToPhysical
-    SnapshotStreamingWriterFactory(dataDir.toString, commitUuid,
-      ColumnMapping.renameFields(schema, mapping).json,
-      statsCols.map(c => mapping.getOrElse(c, c)),
-      conf.writeLegacyParquetFormat.toString,
-      conf.parquetOutputTimestampType.toString, h.tableBandsV,
-      h.boundConstraints(schema),
-      h.bloomColumns.map(c => mapping.getOrElse(c, c)))
-  }
+      : StreamingDataWriterFactory =
+    new SnapshotTable(spark, root, statsCols)
+      .writerFactory(schema, commitUuid, constrained = true)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val all = messages.toSeq.map(_.asInstanceOf[SnapshotWriteMessage])
@@ -256,47 +273,24 @@ class SnapshotStreamingWrite(spark: SparkSession, root: String,
     empty.foreach(m =>
       hadoopFs.delete(new Path(new Path(dataDir, commitUuid), m.file), false))
     val table = new SnapshotTable(spark, root, statsCols)
-    val files = nonEmpty.map(m => s"$commitUuid/${m.file}")
-    val stats: Seq[ColStats] = statsCols.indices.map { c =>
-      ColStats(nonEmpty.map(_.mins(c)), nonEmpty.map(_.maxs(c)),
-        nonEmpty.map(_.nulls(c)),
-        nonEmpty.map(_.tminsOr(statsCols.length)(c)),
-        nonEmpty.map(_.tmaxsOr(statsCols.length)(c)),
-        nonEmpty.map(_.bloomsOr(statsCols.length)(c)))
-    }
-    val rows = nonEmpty.map(_.rows).sum
+    // complete mode must publish even an empty result set: ensure one
+    // schema-bearing file (a file-less manifest is unreadable)
+    val written =
+      if (complete && nonEmpty.isEmpty)
+        Seq(table.writerFactory(schema, commitUuid).emptyFile(
+          f"epoch-$epochId%020d-empty.parquet", spark.sparkContext.hadoopConfiguration))
+      else nonEmpty
+    val files = written.map(m => s"$commitUuid/${m.file}")
+    val stats = SnapshotWrite.colStats(written, statsCols.length)
+    val rows = written.map(_.rows).sum
     val replay: Boolean =
-      if (complete) {
-        // complete mode must publish even an empty result set: ensure
-        // one schema-bearing file (a file-less manifest is unreadable)
-        val ensured =
-          if (nonEmpty.nonEmpty) (files, stats, rows, nonEmpty.map(_.rows))
-          else {
-            val conf = spark.sessionState.conf
-            val w = new SnapshotParquetWriter(dataDir.toString, commitUuid,
-              f"epoch-$epochId%020d-empty.parquet", schema, statsCols,
-              conf.writeLegacyParquetFormat.toString,
-              conf.parquetOutputTimestampType.toString,
-              spark.sparkContext.hadoopConfiguration,
-              bandsV = table.tableBandsV)
-            val m = w.commit().asInstanceOf[SnapshotWriteMessage]
-            (Seq(s"$commitUuid/${m.file}"),
-              statsCols.indices.map(c =>
-                ColStats(Seq(m.mins(c)), Seq(m.maxs(c)), Seq(m.nulls(c)),
-                  Seq(m.tminsOr(statsCols.length)(c)),
-                  Seq(m.tmaxsOr(statsCols.length)(c)),
-                  Seq(m.bloomsOr(statsCols.length)(c)))),
-              0L, Seq(0L))
-          }
-        table.commitWrittenOverwriteOnce(queryId, epochId,
-          ensured._1, ensured._2, ensured._3, schema,
-          frows = ensured._4)._2
-      } else if (nonEmpty.isEmpty) {
-        false // an empty append epoch publishes no version — replay-safe
-      } else {
-        table.commitWrittenAppendOnce(queryId, epochId,
-          files, stats, rows, schema, frows = nonEmpty.map(_.rows))._2
-      }
+      if (complete)
+        table.commitWrittenOverwriteOnce(queryId, epochId, files, stats, rows,
+          schema, frows = written.map(_.rows))._2
+      else if (written.isEmpty) false // an empty append epoch publishes no version — replay-safe
+      else
+        table.commitWrittenAppendOnce(queryId, epochId, files, stats, rows,
+          schema, frows = written.map(_.rows))._2
     if (replay)
       // the epoch was already committed by a previous run: nothing
       // references this run's files for it — drop them
@@ -312,24 +306,4 @@ class SnapshotStreamingWrite(spark: SparkSession, root: String,
     }
     ()
   }
-}
-
-/** Serializable executor-side factory: one parquet file per (epoch,
-  * task) under the run's `data/<uuid>/` dir — epoch in the name keeps
-  * a long-lived run's files collision-free across its commits. */
-case class SnapshotStreamingWriterFactory(dataDir: String, commitUuid: String,
-                                          schemaJson: String, statsCols: Seq[String],
-                                          legacyFormat: String, timestampType: String,
-                                          bandsV: Int = BandKeys.CurrentBandsV,
-                                          constraints: Seq[(String, org.apache.spark.sql.catalyst.expressions.Expression)] = Seq.empty,
-                                          bloomCols: Seq[String] = Seq.empty)
-    extends StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[org.apache.spark.sql.catalyst.InternalRow] =
-    new SnapshotParquetWriter(dataDir, commitUuid,
-      f"epoch-$epochId%020d-part-$partitionId%05d-$taskId.parquet",
-      org.apache.spark.sql.types.DataType.fromJson(schemaJson).asInstanceOf[StructType],
-      statsCols, legacyFormat, timestampType,
-      new org.apache.hadoop.conf.Configuration(), bandsV = bandsV,
-      constraints = constraints, bloomCols = bloomCols)
 }

@@ -147,12 +147,11 @@ class SnapshotSourceProvider extends StreamSourceProvider
       // (inclusive). Lets a fresh consumer bootstrap on a vacuumed table
       // whose old manifests are gone: read(tip) + stream from
       // startingVersion=latest, the Delta-source idiom. "latest" is
-      // resolved ONCE per checkpoint and persisted under metadataPath —
-      // re-resolving on every restart would floor past commits made
-      // while the query was down and silently drop them.
+      // resolved ONCE per checkpoint, persisted under metadataPath.
       startingVersion = parameters.get("startingVersion").map {
         case "latest" =>
-          resolveLatestOnce(sqlContext.sparkSession, rootOf(parameters), metadataPath)
+          StreamAdmission.resolveLatestOnce(sqlContext.sparkSession,
+            rootOf(parameters), metadataPath)
         case n => n.toLong
       }.getOrElse(1L))
 
@@ -162,24 +161,6 @@ class SnapshotSourceProvider extends StreamSourceProvider
       require(n >= 1, s"$key must be >= 1, got $n")
       n
     }
-
-  private def resolveLatestOnce(spark: org.apache.spark.sql.SparkSession,
-                                root: String, metadataPath: String): Long = {
-    import org.apache.hadoop.fs.Path
-    val marker = new Path(metadataPath, "graft-starting-version")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-      finally in.close()
-    } else {
-      val v = new SnapshotTable(spark, root).latestVersion() + 1
-      fs.mkdirs(marker.getParent)
-      val out = fs.create(marker, /* overwrite = */ false)
-      try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-      v
-    }
-  }
 }
 
 /** Rate limiting: the source implements [[SupportsAdmissionControl]]

@@ -1083,21 +1083,11 @@ class SnapshotTable(spark: SparkSession, root: String,
     * file's stats, so it may re-key them all consistently). */
   private def writeDataFiles(df: DataFrame, bandsV: Int): (FileSet, Long) = {
     val commitId = java.util.UUID.randomUUID().toString
-    // column-mapped tables store PHYSICAL names in every data file
-    // (identity on unmapped tables — no plan change); files are written
-    // nullable, as df.write.parquet writes them
-    val mapping = tipLogicalToPhysical
-    val out = ColumnMapping.toPhysical(df, mapping)
-    val physSchema = bridge.asNullable(out.schema)
-    val physStatsCols = statsCols.map(c => mapping.getOrElse(c, c))
-    val conf = spark.sessionState.conf
-    val written = SnapshotWrite.committedFiles(spark, dataDir, commitId,
-      physSchema, physStatsCols,
-      SnapshotWrite.writeFiles(out, SnapshotWriterFactory(dataDir.toString,
-        commitId, physSchema.json, physStatsCols,
-        conf.writeLegacyParquetFormat.toString,
-        conf.parquetOutputTimestampType.toString, bandsV = bandsV,
-        bloomCols = bloomColumns.map(c => mapping.getOrElse(c, c)))))
+    // files are written nullable, as df.write.parquet writes them; rows
+    // are positional, so the factory's physical names need no projection
+    val factory = writerFactory(bridge.asNullable(df.schema), commitId, bandsV = bandsV)
+    val written = SnapshotWrite.committedFiles(spark, factory,
+      SnapshotWrite.writeFiles(df, factory))
     // the commit-dir listing is the length source: manifests record each
     // file's byte length so reads never re-stat them
     val lens = fs.listStatus(new Path(dataDir, commitId))
@@ -1363,6 +1353,46 @@ class SnapshotTable(spark: SparkSession, root: String,
       : Seq[(String, org.apache.spark.sql.catalyst.expressions.Expression)] =
     if (constraintSqls.isEmpty) Seq.empty
     else TableConstraints.bind(spark, schema, constraintSqls)
+
+  /** The one [[SnapshotWriterFactory]] of this table's writes over rows
+    * of the LOGICAL `schema` — every data file, delete-key file
+    * ([[SnapshotWriterFactory.forKeys]]) and empty schema file comes
+    * from it. Captures, once: the tip's logical→physical mapping
+    * (column-mapped tables store PHYSICAL field and stats-column names
+    * in every data file; commits still record the logical schema), the
+    * band-semantics version, the opted bloom columns, and the
+    * session's parquet legacy-format and timestamp settings (so files
+    * match what df.write.parquet would produce). With `constrained`,
+    * the table's CHECK constraints are bound against the logical schema
+    * — positions match the physical row layout (rename preserves field
+    * order); a column-less write carries no table row and binds none. */
+  private[sources] def writerFactory(schema: StructType, commitUuid: String,
+                                     constrained: Boolean = false,
+                                     opColumn: Boolean = false,
+                                     bandsV: Int = tableBandsV): SnapshotWriterFactory = {
+    val mapping = tipLogicalToPhysical
+    val conf = spark.sessionState.conf
+    SnapshotWriterFactory(dataDir.toString, commitUuid,
+      ColumnMapping.renameFields(schema, mapping).json,
+      statsCols.map(c => mapping.getOrElse(c, c)),
+      conf.writeLegacyParquetFormat.toString, conf.parquetOutputTimestampType.toString,
+      opColumn, bandsV,
+      if (constrained && schema.nonEmpty) boundConstraints(schema) else Seq.empty,
+      bloomColumns.map(c => mapping.getOrElse(c, c)))
+  }
+
+  /** Publish an EMPTY overwrite of `schema`: one driver-written 0-row
+    * schema-bearing file (no Spark job) — a file-less manifest would be
+    * unreadable. CREATE's bootstrap version and TRUNCATE TABLE. */
+  private[sources] def commitEmptyOverwrite(schema: StructType, fileName: String,
+                                            dataChange: Boolean = true): Long = {
+    val uuid = java.util.UUID.randomUUID().toString
+    val msg = writerFactory(schema, uuid)
+      .emptyFile(fileName, spark.sparkContext.hadoopConfiguration)
+    commitWrittenOverwrite(Seq(s"$uuid/${msg.file}"),
+      SnapshotWrite.colStats(Seq(msg), statsCols.length), 0L, schema,
+      dataChange = dataChange, frows = Seq(0L))
+  }
 
   /** Constraint guard over a NEW-data batch: identity when the table
     * has no constraints; otherwise the first violating row fails the
@@ -2517,58 +2547,6 @@ class SnapshotTable(spark: SparkSession, root: String,
     }
   }
 
-  /** Publish PRE-WRITTEN delete-key files as a merge-on-read DELETE at
-    * exactly `base + 1` — the SQL `DELETE FROM … WHERE …` commit when
-    * the table opts in via `write.delete.mode='merge-on-read'`:
-    * O(matched keys) written, no data file rewritten, readers anti-join
-    * (exactly [[commitDeleteByKey]], distributed). `deltaRows` is the
-    * number of rows the statement's predicate matched (the delta
-    * writer's delete() calls). The exact-count scan doubles as the
-    * key-uniqueness guard: an equality delete removes EVERY live row
-    * sharing a matched key, so if that count differs from the
-    * predicate's, executing it would delete rows the statement never
-    * named (key not row-unique) or silently miss NULL-keyed rows (NULL
-    * never equality-matches) — refuse loudly either way. Same at-base
-    * snapshot-isolation validation as the other SQL DML commits. */
-  private[sources] def commitWrittenDeleteByKey(base: Long, keyFiles: Seq[String],
-                                                keyCols: Seq[String],
-                                                deltaRows: Long,
-                                                keyBand: Option[(Long, Long)] = None,
-                                                keyFrows: Seq[Long] = Seq.empty,
-                                                keyBands: Seq[(Long, Long)] = Seq.empty)
-      : Option[Long] = {
-    keyCols.foreach(jsonSafe(_, "delete-key column"))
-    // FILE-DISJOINT OPTIMISTIC CONCURRENCY, MOR flavor: a lost race
-    // auto-rebases when the window held only appends (files superset,
-    // delete vector and schema identical) AND a RECOUNT at the new tip
-    // still matches the statement's count — the recount is the whole
-    // proof: equal means the concurrent appends hold no matching key
-    // (the published delete, outsequencing them, removes exactly the
-    // statement's rows); greater means they do, and deleting rows the
-    // statement never matched must surface as a conflict. The recount
-    // reuses the commit's own key-band-pruned scan — O(overlapping
-    // files), the cost the original commit already paid once.
-    val added = FileSet(Seq.empty, emptyStats, deletes = keyFiles,
-      deleteKey = keyCols, drows = keyFrows,
-      dmins = keyBands.map(_._1), dmaxs = keyBands.map(_._2))
-    rebasing("commitWrittenDeleteByKey", base, _.files.toSet) { (at, snapAt, prev) =>
-      require(prev.deleteKey.isEmpty || prev.deleteKey == keyCols,
-        s"table at $root already carries MOR deletes keyed by " +
-          s"(${prev.deleteKey.mkString(",")}); got (${keyCols.mkString(",")})")
-      val removed = countMatchingKeys(at, keyFiles, keyCols, keyBand)
-      if (at == base)
-        require(removed == deltaRows,
-          s"merge-on-read DELETE at $root: the predicate matched $deltaRows rows " +
-            s"but an equality delete on (${keyCols.mkString(",")}) would remove " +
-            s"$removed — write.delete.key must be row-unique and non-null for " +
-            "the matched rows (use copy-on-write mode for non-key predicates)")
-      if (removed != deltaRows) Some(None) // concurrent appends carry matching keys
-      // fresh executor-written key files: publish stats them (O(new))
-      else publishAtBase(at, "delete_mor", spliced(prev, added, at + 1),
-        snapAt.rows - removed, snapAt.schemaJson).map(Some(_))
-    }
-  }
-
   /** Per-file delete-KEY bands from a written key FileSet, aligned to
     * `kf.files`. Single stats-column key: the raw per-file band, as
     * always. COMPOSITE key (2-8 stats columns): the per-column bands
@@ -2630,20 +2608,24 @@ class SnapshotTable(spark: SparkSession, root: String,
   }
 
   /** Publish PRE-WRITTEN delete-key files AND data files as ONE
-    * merge-on-read row delta at exactly `base + 1` — the SQL
+    * merge-on-read row delta at exactly `base + 1` — the SQL `DELETE` /
     * `UPDATE` / `MERGE INTO` commit when the table opts in via
-    * `write.update.mode` / `write.merge.mode` = 'merge-on-read': the
-    * matched rows' pre-image keys become equality deletes, the
-    * updated/inserted rows append as fresh data files, and NO existing
-    * data file is rewritten — statement cost tracks changed rows.
-    * Sequencing: both lists carry `base + 1`; the deletes apply only to
-    * STRICTLY older data files, so the statement's own replacement rows
-    * survive while every older copy of a touched key is removed.
-    * `deltaDeleteRows` = the delta writers' delete()+update() calls;
-    * verified against the equality-removed count exactly like
-    * [[commitWrittenDeleteByKey]] (row-unique, non-null key or refuse).
-    * Same at-base snapshot-isolation validation as every SQL DML
-    * commit. */
+    * `write.delete.mode` / `write.update.mode` / `write.merge.mode` =
+    * 'merge-on-read': the matched rows' pre-image keys become equality
+    * deletes, the updated/inserted rows (none for a DELETE, whose
+    * `batchSchema` may have no columns) append as fresh data files, and
+    * NO existing data file is rewritten — statement cost tracks changed
+    * rows. Sequencing: both lists carry `base + 1`; the deletes apply
+    * only to STRICTLY older data files, so the statement's own
+    * replacement rows survive while every older copy of a touched key
+    * is removed. `deltaDeleteRows` = the delta writers' delete()+update()
+    * calls. The exact-count scan doubles as the key-uniqueness guard: an
+    * equality delete removes EVERY live row sharing a matched key, so if
+    * that count differs from the statement's, executing it would delete
+    * rows the statement never named (key not row-unique) or silently
+    * miss NULL-keyed rows (NULL never equality-matches) — refuse loudly
+    * either way. Same at-base snapshot-isolation validation as every SQL
+    * DML commit. */
   private[sources] def commitWrittenRowDelta(base: Long, action: String,
                                              keyFiles: Seq[String],
                                              keyCols: Seq[String],
@@ -2658,11 +2640,16 @@ class SnapshotTable(spark: SparkSession, root: String,
                                              keyBands: Seq[(Long, Long)] = Seq.empty)
       : Option[Long] = {
     keyCols.foreach(jsonSafe(_, "delete-key column"))
-    // Same MOR-flavor optimistic concurrency as
-    // [[commitWrittenDeleteByKey]]: append-only window + tip recount
-    // equal to the statement's matched count proves the rebase sound
-    // (the delta's replacement rows outsequence everything, and the
-    // concurrent appends provably hold no matched key).
+    // FILE-DISJOINT OPTIMISTIC CONCURRENCY, MOR flavor: a lost race
+    // auto-rebases when the window held only appends (files superset,
+    // delete vector and schema identical) AND a RECOUNT at the new tip
+    // still matches the statement's count — the recount is the whole
+    // proof: equal means the concurrent appends hold no matched key (the
+    // published delta, outsequencing them, removes exactly the
+    // statement's rows); greater means they do, and deleting rows the
+    // statement never matched must surface as a conflict. The recount
+    // reuses the commit's own key-band-pruned scan — O(overlapping
+    // files), the cost the original commit already paid once.
     // fresh executor files (data and delete): publish stats them
     val added = FileSet(dataFiles, dataStats, frows = dataFrows,
       deletes = keyFiles, deleteKey = keyCols, drows = keyFrows,
@@ -2684,10 +2671,12 @@ class SnapshotTable(spark: SparkSession, root: String,
             "write.delete.key must be row-unique and non-null for the " +
             "matched rows (use copy-on-write mode otherwise)")
       if (removed != deltaDeleteRows) Some(None) // concurrent appends carry matched keys
-      // row-level DML never evolves the schema: keep the base's recorded one
+      // row-level DML never evolves the schema: keep the base's recorded
+      // one (a column-less DELETE row schema never stands in for it)
       else publishAtBase(at, action, spliced(prev, added, at + 1),
         snapAt.rows - removed + insertedRows,
-        snapAt.schemaJson.orElse(Some(normalizeSchema(batchSchema).json))).map(Some(_))
+        snapAt.schemaJson.orElse(Some(batchSchema).filter(_.nonEmpty)
+          .map(normalizeSchema(_).json))).map(Some(_))
     }
   }
 

@@ -8,6 +8,7 @@ import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
 import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
@@ -88,28 +89,20 @@ object SnapshotWrite {
     * litter the manifest with schema-only shards. A write with no rows
     * at all still needs one schema-bearing file (a file-less manifest
     * would make read() of the version unplannable): it is written here,
-    * with the same writer, no Spark job. */
-  private[sources] def committedFiles(spark: SparkSession, dataDir: Path,
-                                      commitUuid: String,
-                                      physSchema: StructType,
-                                      physStatsCols: Seq[String],
+    * with the same factory, no Spark job. */
+  private[sources] def committedFiles(spark: SparkSession,
+                                      factory: SnapshotWriterFactory,
                                       all: Seq[SnapshotWriteMessage])
       : Seq[SnapshotWriteMessage] = {
     val (nonEmpty, empty) = all.partition(_.rows > 0L)
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
     if (empty.nonEmpty) {
-      val fs = dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      empty.foreach(m => fs.delete(new Path(new Path(dataDir, commitUuid), m.file), false))
+      val dir = new Path(factory.dataDir, factory.commitUuid)
+      val fs = dir.getFileSystem(hadoopConf)
+      empty.foreach(m => fs.delete(new Path(dir, m.file), false))
     }
     if (nonEmpty.nonEmpty) nonEmpty
-    else {
-      val conf = spark.sessionState.conf
-      val w = new SnapshotParquetWriter(dataDir.toString, commitUuid,
-        "part-00000-empty.parquet", physSchema, physStatsCols,
-        conf.writeLegacyParquetFormat.toString,
-        conf.parquetOutputTimestampType.toString,
-        spark.sparkContext.hadoopConfiguration)
-      Seq(w.commit().asInstanceOf[SnapshotWriteMessage])
-    }
+    else Seq(factory.emptyFile("part-00000-empty.parquet", hadoopConf))
   }
 
   /** Per-stats-column [[ColStats]] over written files' messages, each
@@ -430,35 +423,19 @@ class GraftSnapshotBatchWrite(spark: SparkSession, root: String,
   private val commitUuid = java.util.UUID.randomUUID().toString
   private def dataDir = new Path(root, "data")
 
-  // column-mapped tables (post RENAME COLUMN): executors write PHYSICAL
-  // field names; the commit below still records the LOGICAL schema.
-  // Captured once at write creation — the mapping is immutable per
-  // column, so a concurrent rename cannot change what these names mean.
-  // The band-semantics version is likewise immutable (fixed by the
-  // table's first manifest), so capturing it here keeps every executor
-  // fold consistent with the manifest the driver will publish.
-  private val handle = new SnapshotTable(spark, root)
-  private val mapping: Map[String, String] = handle.tipLogicalToPhysical
-  private val bandsV: Int = handle.tableBandsV
-  private val physSchema = ColumnMapping.renameFields(schema, mapping)
-  private val physStatsCols = statsCols.map(c => mapping.getOrElse(c, c))
+  // captured once at write creation: the column mapping and the
+  // band-semantics version are immutable per column / per table, so a
+  // concurrent rename cannot change what the physical names mean and
+  // every executor fold stays consistent with the manifest the driver
+  // will publish
+  private val factory = new SnapshotTable(spark, root, statsCols)
+    .writerFactory(schema, commitUuid, constrained = true, opColumn = opColumn)
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    // parquet writer settings captured from the SESSION on the driver so
-    // executor-written files match what df.write.parquet would produce
-    val conf = spark.sessionState.conf
-    SnapshotWriterFactory(dataDir.toString, commitUuid, physSchema.json, physStatsCols,
-      conf.writeLegacyParquetFormat.toString, conf.parquetOutputTimestampType.toString,
-      opColumn, bandsV,
-      // bound against the LOGICAL schema — positions match the physical
-      // row layout (rename preserves field order)
-      handle.boundConstraints(schema),
-      handle.bloomColumns.map(c => mapping.getOrElse(c, c)))
-  }
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
+    factory
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val ensured = SnapshotWrite.committedFiles(spark, dataDir, commitUuid,
-      physSchema, physStatsCols,
+    val ensured = SnapshotWrite.committedFiles(spark, factory,
       messages.toSeq.map(_.asInstanceOf[SnapshotWriteMessage]))
     val files = ensured.map(m => s"$commitUuid/${m.file}")
     val stats = SnapshotWrite.colStats(ensured, statsCols.length)
@@ -574,19 +551,16 @@ class GraftSnapshotRowLevelBuilder(spark: SparkSession, root: String,
       // AFTER the statement commits (DDL-validated integer)
       val autoAt = props.get("write.delete.compact.at")
         .flatMap(v => scala.util.Try(v.toInt).toOption)
-      if (info.command() == RowLevelOperation.Command.DELETE)
-        new GraftSnapshotDeltaDeleteOperation(spark, root, statsCols, keyCols,
-          autoAt)
-      else
-        // UPDATE/MERGE as equality-delete + append in ONE delta commit.
-        // Sequencing stays correct when the same key is touched twice
-        // between compactions: each statement's delete file gets the new
-        // version as its sequence and applies only to STRICTLY older
-        // data files, so the previous update's row (older seq) is
-        // removed while this statement's replacement (same seq as the
-        // delete) survives — the Iceberg v2 rule, exercised by spec.
-        new GraftSnapshotDeltaRowOperation(spark, root, statsCols, keyCols,
-          info.command(), autoAt)
+      // every command as equality-delete + append in ONE delta commit (a
+      // DELETE is the delta with no data rows). Sequencing stays correct
+      // when the same key is touched twice between compactions: each
+      // statement's delete file gets the new version as its sequence and
+      // applies only to STRICTLY older data files, so the previous
+      // update's row (older seq) is removed while this statement's
+      // replacement (same seq as the delete) survives — the Iceberg v2
+      // rule, exercised by spec.
+      new GraftSnapshotDeltaRowOperation(spark, root, statsCols, keyCols,
+        info.command(), autoAt)
     } else {
       new GraftSnapshotRowLevelOperation(spark, root, statsCols, info.command())
     }
@@ -640,176 +614,31 @@ class GraftSnapshotRowLevelOperation(spark: SparkSession, root: String,
     s"graft-snapshot ${cmd.name} at v$base of $root"
 }
 
-/** SQL `DELETE FROM … WHERE …` as a MERGE-ON-READ delta operation
-  * (Spark's [[SupportsDelta]]): the rewrite plans only the MATCHING
-  * rows (condition applied, scan file-pruned by the same band math as
-  * the copy-on-write path), projects them to the table's declared
-  * equality key (`write.delete.key`), and the delta writers emit
-  * commit-sized delete-KEY parquet files — no data file is rewritten.
-  * The commit publishes a `delete_mor` version exactly like the Scala
-  * [[SnapshotTable.commitDeleteByKey]]: readers anti-join, the next
-  * compaction materializes, change feeds replay the retraction, and a
-  * later re-insert of a deleted key survives (the equality-delete
-  * sequencing rule). This is the DELETE that survives 100 TB — cost
-  * O(matched keys) written + one scan for the exact count, versus the
-  * copy-on-write path's O(matched files) rewrite.
+/** SQL `DELETE` / `UPDATE` / `MERGE INTO` as a MERGE-ON-READ delta
+  * operation ([[SupportsDelta]]): one statement publishes ONE version
+  * carrying equality-delete KEY files (the matched rows' pre-image keys)
+  * plus fresh DATA files (the updated/inserted rows; none for a DELETE)
+  * — no existing data file is rewritten, so a point UPDATE on a 100 TB
+  * table costs O(changed rows), not O(matched files), and a DELETE
+  * O(matched keys) written plus one scan for the exact count. The scan
+  * is file-pruned by the same band math as the copy-on-write path.
+  * Spark's delta rewrite hands the writer the ORIGINAL row's key for
+  * every update (`buildOriginalRowIdValues`), so key-changing updates
+  * delete the OLD key and insert the new row. Readers anti-join, the
+  * next compaction materializes, change feeds replay the retraction.
   *
-  * Contract: `write.delete.key` must be row-unique and non-null for
-  * the matched rows; the commit VERIFIES this (predicate-matched count
-  * vs equality-removed count) and refuses loudly on divergence rather
-  * than deleting rows the statement never named. */
-class GraftSnapshotDeltaDeleteOperation(spark: SparkSession, root: String,
-                                        statsCols: Seq[String],
-                                        keyCols: Seq[String],
-                                        autoCompactAt: Option[Int] = None)
-    extends RowLevelOperation with SupportsDelta {
-  private val table = new SnapshotTable(spark, root, statsCols)
-  private val base = table.latestVersion()
-
-  override def command(): RowLevelOperation.Command =
-    RowLevelOperation.Command.DELETE
-
-  override def rowId(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    keyCols.map(org.apache.spark.sql.connector.expressions.Expressions.column).toArray
-
-  override def newScanBuilder(options: org.apache.spark.sql.util.CaseInsensitiveStringMap)
-      : org.apache.spark.sql.connector.read.ScanBuilder = {
-    require(base > 0, s"DELETE on empty table at $root")
-    // same pruned pinned-version scan as the CoW path; the planned-file
-    // callback is unused — a delta commit removes no files
-    new SnapshotDmlScanBuilder(spark, table, base, root, (_, _) => ())
-  }
-
-  override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
-    new DeltaWriteBuilder {
-      override def build(): DeltaWrite = new DeltaWrite {
-        override def toBatch: DeltaBatchWrite = {
-          val keySchema = if (info.rowIdSchema().isPresent) info.rowIdSchema().get
-            else {
-              val full = table.read(base).schema
-              StructType(keyCols.map(c => full.fields(full.fieldNames.indexOf(c))))
-            }
-          new SnapshotDeltaDeleteBatchWrite(spark, root, statsCols, keyCols,
-            keySchema, base, autoCompactAt)
-        }
-      }
-    }
-
-  override def description(): String =
-    s"graft-snapshot merge-on-read DELETE at v$base of $root " +
-      s"(key: ${keyCols.mkString(",")})"
-}
-
-/** Distributed delete-key write: each task streams the matched rows'
-  * key projections into ONE commit-sized parquet file; the driver
-  * publishes them as a `delete_mor` version
-  * ([[SnapshotTable.commitWrittenDeleteByKey]]). A statement matching
-  * nothing publishes no version. */
-class SnapshotDeltaDeleteBatchWrite(spark: SparkSession, root: String,
-                                    statsCols: Seq[String], keyCols: Seq[String],
-                                    keySchema: StructType, base: Long,
-                                    autoCompactAt: Option[Int] = None)
-    extends DeltaBatchWrite {
-  private val commitUuid = java.util.UUID.randomUUID().toString
-  private def dataDir = new Path(root, "data")
-  private def hadoopFs =
-    dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
-    val conf = spark.sessionState.conf
-    SnapshotDeltaWriterFactory(dataDir.toString, commitUuid, keySchema.json,
-      keyCols, conf.writeLegacyParquetFormat.toString,
-      conf.parquetOutputTimestampType.toString,
-      new SnapshotTable(spark, root).tableBandsV)
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val all = messages.toSeq.map(_.asInstanceOf[SnapshotWriteMessage])
-    val (nonEmpty, empty) = all.partition(_.rows > 0L)
-    empty.foreach(m =>
-      hadoopFs.delete(new Path(new Path(dataDir, commitUuid), m.file), false))
-    if (nonEmpty.isEmpty) {
-      // predicate matched nothing: no delete files, no version
-      hadoopFs.delete(new Path(dataDir, commitUuid), true)
-      return
-    }
-    val table = new SnapshotTable(spark, root, statsCols)
-    table.commitWrittenDeleteByKey(base,
-        nonEmpty.map(m => s"$commitUuid/${m.file}"), keyCols,
-        nonEmpty.map(_.rows).sum,
-        SnapshotWrite.foldedKeyBand(keyCols, nonEmpty),
-        keyFrows = nonEmpty.map(_.rows),
-        keyBands = SnapshotWrite.perFileKeyBands(keyCols, nonEmpty))
-      .getOrElse {
-        hadoopFs.delete(new Path(dataDir, commitUuid), true)
-        throw new java.util.ConcurrentModificationException(
-          s"merge-on-read delete on $root: table version moved past v$base " +
-            "while the statement ran (concurrent writer); re-run the " +
-            "statement against the new snapshot")
-      }
-    SnapshotWrite.maybeAutoCompactDeletes(table, autoCompactAt)
-    ()
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    hadoopFs.delete(new Path(dataDir, commitUuid), true)
-    ()
-  }
-}
-
-/** Serializable executor-side factory for delete-KEY files. The writer
-  * answers ONLY delete(): this operation never updates or inserts, so
-  * any other row reaching it is a plan shape it must not silently
-  * absorb. Readers load delete-key files whole (commit-sized by
-  * construction); the KEY min/max folded here serves only the commit's
-  * exact-count scan, which prunes to the files whose stats band
-  * overlaps the deleted-key range ([[SnapshotWrite.foldedKeyBand]]). */
-case class SnapshotDeltaWriterFactory(dataDir: String, commitUuid: String,
-                                      keySchemaJson: String, keyCols: Seq[String],
-                                      legacyFormat: String, timestampType: String,
-                                      bandsV: Int = BandKeys.CurrentBandsV)
-    extends DeltaWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] = {
-    val inner = new SnapshotParquetWriter(dataDir, commitUuid,
-      f"delete-$partitionId%05d-$taskId.parquet",
-      DataType.fromJson(keySchemaJson).asInstanceOf[StructType], keyCols,
-      legacyFormat, timestampType, new Configuration(), bandsV = bandsV)
-    new DeltaWriter[InternalRow] {
-      override def delete(meta: InternalRow, id: InternalRow): Unit =
-        inner.write(id)
-      override def update(meta: InternalRow, id: InternalRow, row: InternalRow): Unit =
-        throw new IllegalStateException(
-          "delete-only delta operation received an UPDATE row")
-      override def insert(row: InternalRow): Unit =
-        throw new IllegalStateException(
-          "delete-only delta operation received an INSERT row")
-      override def commit(): WriterCommitMessage = inner.commit()
-      override def abort(): Unit = inner.abort()
-      override def close(): Unit = inner.close()
-    }
-  }
-}
-
-/** SQL `UPDATE` / `MERGE INTO` as a MERGE-ON-READ delta operation
-  * ([[SupportsDelta]]): one statement publishes ONE version carrying
-  * equality-delete KEY files (the matched rows' pre-image keys) plus
-  * fresh DATA files (the updated/inserted rows) — no existing data file
-  * is rewritten, so a point UPDATE on a 100 TB table costs O(changed
-  * rows), not O(matched files). Spark's delta rewrite hands the writer
-  * the ORIGINAL row's key for every update (`buildOriginalRowIdValues`),
-  * so key-changing updates delete the OLD key and insert the new row.
-  *
-  * Sequencing (why double-updating a key between compactions is safe):
-  * the statement's delete files and data files BOTH get the committed
-  * version as their sequence; equality deletes apply only to STRICTLY
-  * older data files, so this statement's replacement rows survive its
-  * own delete while every older copy — including a previous update's
-  * replacement — is removed.
+  * Sequencing (why double-updating a key between compactions is safe,
+  * and why a re-inserted deleted key survives): the statement's delete
+  * files and data files BOTH get the committed version as their
+  * sequence; equality deletes apply only to STRICTLY older data files,
+  * so this statement's replacement rows survive its own delete while
+  * every older copy — including a previous update's replacement — is
+  * removed.
   *
   * Contract: `write.delete.key` must be row-unique and non-null for the
   * matched rows; the commit verifies (matched count vs equality-removed
-  * count) and refuses loudly on divergence — same guard as the MOR
-  * DELETE. */
+  * count) and refuses loudly on divergence rather than deleting rows the
+  * statement never named. */
 class GraftSnapshotDeltaRowOperation(spark: SparkSession, root: String,
                                      statsCols: Seq[String],
                                      keyCols: Seq[String],
@@ -841,9 +670,9 @@ class GraftSnapshotDeltaRowOperation(spark: SparkSession, root: String,
               val full = table.read(base).schema
               StructType(keyCols.map(c => full.fields(full.fieldNames.indexOf(c))))
             }
+          // a DELETE's row schema has no columns: it writes keys only
           new SnapshotDeltaRowBatchWrite(spark, root, statsCols, keyCols,
-            keySchema, info.schema(), base, s"${cmd.name.toLowerCase}_mor",
-            autoCompactAt)
+            keySchema, info.schema(), base, cmd, autoCompactAt)
         }
       }
     }
@@ -864,35 +693,27 @@ case class SnapshotDeltaRowMessage(key: SnapshotWriteMessage,
 /** Distributed delta-row write: each task streams matched-row keys into
   * one delete-key parquet file and replacement/inserted rows into one
   * data parquet file (stats folded inline like any batch write); the
-  * driver publishes both lists as ONE `update_mor`/`merge_mor` version
-  * ([[SnapshotTable.commitWrittenRowDelta]]). A statement matching and
-  * inserting nothing publishes no version. */
+  * driver publishes both lists as ONE `delete_mor`/`update_mor`/
+  * `merge_mor` version ([[SnapshotTable.commitWrittenRowDelta]]). A
+  * statement matching and inserting nothing publishes no version. */
 class SnapshotDeltaRowBatchWrite(spark: SparkSession, root: String,
                                  statsCols: Seq[String], keyCols: Seq[String],
                                  keySchema: StructType, rowSchema: StructType,
-                                 base: Long, action: String,
+                                 base: Long, cmd: RowLevelOperation.Command,
                                  autoCompactAt: Option[Int] = None)
     extends DeltaBatchWrite {
   private val commitUuid = java.util.UUID.randomUUID().toString
+  private val action = s"${cmd.name.toLowerCase}_mor"
   private def dataDir = new Path(root, "data")
   private def hadoopFs =
     dataDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
-    val conf = spark.sessionState.conf
-    // column-mapped tables: data files carry PHYSICAL names (keys are
-    // unrenameable by DDL guard, so the key schema needs no mapping);
-    // the commit records the LOGICAL rowSchema
-    val h = new SnapshotTable(spark, root)
-    val mapping = h.tipLogicalToPhysical
-    SnapshotDeltaRowWriterFactory(dataDir.toString, commitUuid,
-      keySchema.json, keyCols,
-      ColumnMapping.renameFields(rowSchema, mapping).json,
-      statsCols.map(c => mapping.getOrElse(c, c)),
-      conf.writeLegacyParquetFormat.toString,
-      conf.parquetOutputTimestampType.toString, h.tableBandsV,
-      h.boundConstraints(rowSchema),
-      h.bloomColumns.map(c => mapping.getOrElse(c, c)))
+    // the commit records the LOGICAL rowSchema; data files carry the
+    // factory's physical names
+    val data = new SnapshotTable(spark, root, statsCols)
+      .writerFactory(rowSchema, commitUuid, constrained = true)
+    SnapshotDeltaRowWriterFactory(data.forKeys(keySchema, keyCols), data)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -901,6 +722,13 @@ class SnapshotDeltaRowBatchWrite(spark: SparkSession, root: String,
     val (dataMsgs, dataEmpty) = all.map(_.data).partition(_.rows > 0L)
     (keyEmpty ++ dataEmpty).foreach(m =>
       hadoopFs.delete(new Path(new Path(dataDir, commitUuid), m.file), false))
+    if (cmd == RowLevelOperation.Command.DELETE && dataMsgs.nonEmpty) {
+      hadoopFs.delete(new Path(dataDir, commitUuid), true)
+      throw new IllegalStateException(
+        s"merge-on-read DELETE on $root: the delta carried " +
+          s"${dataMsgs.map(_.rows).sum} data rows — a DELETE writes delete " +
+          "keys only; refusing to publish (plan shape not understood)")
+    }
     if (keyMsgs.isEmpty && dataMsgs.isEmpty) {
       // matched nothing, inserted nothing: no version (no-op contract)
       hadoopFs.delete(new Path(dataDir, commitUuid), true)
@@ -937,64 +765,85 @@ class SnapshotDeltaRowBatchWrite(spark: SparkSession, root: String,
 /** Serializable executor-side factory for the delta-row write: each
   * task owns a delete-key writer and a data writer. delete() records
   * the pre-image key; update() records the ORIGINAL key + the updated
-  * row; insert() records the new row. A task that only inserts still
-  * opens both files — the driver's commit drops 0-row files from disk
-  * and keeps them out of the manifest. */
-case class SnapshotDeltaRowWriterFactory(dataDir: String, commitUuid: String,
-                                         keySchemaJson: String, keyCols: Seq[String],
-                                         rowSchemaJson: String, statsCols: Seq[String],
-                                         legacyFormat: String, timestampType: String,
-                                         bandsV: Int = BandKeys.CurrentBandsV,
-                                         constraints: Seq[(String, org.apache.spark.sql.catalyst.expressions.Expression)] = Seq.empty,
-                                         bloomCols: Seq[String] = Seq.empty)
+  * row; insert() records the new row. The data file opens on its first
+  * row, so a task that only deletes — every task of a DELETE — writes
+  * none; the key file opens eagerly, and the driver's commit drops
+  * 0-row files from disk and keeps them out of the manifest. */
+case class SnapshotDeltaRowWriterFactory(keys: SnapshotWriterFactory,
+                                         data: SnapshotWriterFactory)
     extends DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] = {
-    val keyW = new SnapshotParquetWriter(dataDir, commitUuid,
-      f"delete-$partitionId%05d-$taskId.parquet",
-      DataType.fromJson(keySchemaJson).asInstanceOf[StructType], keyCols,
-      legacyFormat, timestampType, new Configuration(), bandsV = bandsV)
-    // constraints guard DATA rows only (UPDATE SET / MERGE-inserted
-    // rows); delete-key pre-images are not table rows
-    val dataW = new SnapshotParquetWriter(dataDir, commitUuid,
-      f"part-$partitionId%05d-$taskId.parquet",
-      DataType.fromJson(rowSchemaJson).asInstanceOf[StructType], statsCols,
-      legacyFormat, timestampType, new Configuration(), bandsV = bandsV,
-      constraints = constraints, bloomCols = bloomCols)
+    val keyW = keys.writer(f"delete-$partitionId%05d-$taskId.parquet")
+    val dataFile = f"part-$partitionId%05d-$taskId.parquet"
     new DeltaWriter[InternalRow] {
+      private var dataW: SnapshotParquetWriter = null
+      private def writeData(row: InternalRow): Unit = {
+        if (dataW == null) dataW = data.writer(dataFile)
+        dataW.write(row)
+      }
       override def delete(meta: InternalRow, id: InternalRow): Unit =
         keyW.write(id)
       override def update(meta: InternalRow, id: InternalRow, row: InternalRow): Unit = {
         keyW.write(id) // id carries the ORIGINAL row's key values
-        dataW.write(row)
+        writeData(row)
       }
-      override def insert(row: InternalRow): Unit = dataW.write(row)
+      override def insert(row: InternalRow): Unit = writeData(row)
       override def commit(): WriterCommitMessage =
         SnapshotDeltaRowMessage(
           keyW.commit().asInstanceOf[SnapshotWriteMessage],
-          dataW.commit().asInstanceOf[SnapshotWriteMessage])
-      override def abort(): Unit = { keyW.abort(); dataW.abort() }
-      override def close(): Unit = { keyW.close(); dataW.close() }
+          if (dataW == null)
+            SnapshotWriteMessage(dataFile, 0L, Array.empty, Array.empty, Array.empty)
+          else dataW.commit().asInstanceOf[SnapshotWriteMessage])
+      override def abort(): Unit = { keyW.abort(); if (dataW != null) dataW.abort() }
+      override def close(): Unit = ()
     }
   }
 }
 
-/** Serializable executor-side factory: one parquet file per task under
-  * `data/<commitUuid>/`. Carries only strings/schemas — the executor
-  * re-opens the filesystem from a fresh Hadoop config. */
+/** Serializable factory of every parquet file a snapshot-table write
+  * produces, built by [[SnapshotTable.writerFactory]], all under
+  * `data/<commitUuid>/`: one data file per batch task
+  * (`part-<partition>-<task>`) or per streaming (epoch, task) —
+  * `epoch-<epoch>-part-…`, the epoch keeping a long-lived run's files
+  * collision-free across its commits; the delta writes' delete-key
+  * files through [[forKeys]]; and the driver's empty schema-bearing
+  * files through [[emptyFile]]. Carries only strings/schemas — the
+  * executor re-opens the filesystem from a fresh Hadoop config. */
 case class SnapshotWriterFactory(dataDir: String, commitUuid: String,
                                  schemaJson: String, statsCols: Seq[String],
                                  legacyFormat: String, timestampType: String,
-                                 opColumn: Boolean = false,
-                                 bandsV: Int = BandKeys.CurrentBandsV,
-                                 constraints: Seq[(String, org.apache.spark.sql.catalyst.expressions.Expression)] = Seq.empty,
-                                 bloomCols: Seq[String] = Seq.empty)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new SnapshotParquetWriter(dataDir, commitUuid,
-      f"part-$partitionId%05d-$taskId.parquet",
+                                 opColumn: Boolean, bandsV: Int,
+                                 constraints: Seq[(String, org.apache.spark.sql.catalyst.expressions.Expression)],
+                                 bloomCols: Seq[String])
+    extends DataWriterFactory with StreamingDataWriterFactory {
+  def writer(fileName: String,
+             hadoopConf: Configuration = new Configuration()): SnapshotParquetWriter =
+    new SnapshotParquetWriter(dataDir, commitUuid, fileName,
       DataType.fromJson(schemaJson).asInstanceOf[StructType], statsCols,
-      legacyFormat, timestampType, new Configuration(), opColumn, bandsV,
+      legacyFormat, timestampType, hadoopConf, opColumn, bandsV,
       constraints, bloomCols)
+
+  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
+    writer(f"part-$partitionId%05d-$taskId.parquet")
+
+  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
+      : DataWriter[InternalRow] =
+    writer(f"epoch-$epochId%020d-part-$partitionId%05d-$taskId.parquet")
+
+  /** One 0-row schema-bearing file, written on the driver with no Spark
+    * job: a version must list at least one file to stay readable. */
+  def emptyFile(fileName: String, hadoopConf: Configuration): SnapshotWriteMessage =
+    writer(fileName, hadoopConf).commit().asInstanceOf[SnapshotWriteMessage]
+
+  /** The delete-KEY side of a delta write: `keySchema` rows with the key
+    * columns as stats columns — their folded band prunes only the
+    * commit's exact-count scan ([[SnapshotWrite.foldedKeyBand]]; readers
+    * load key files whole). No constraints (pre-image keys are not table
+    * rows), no blooms, and logical names: key columns cannot be renamed
+    * (DDL guard), so a key schema needs no mapping. */
+  def forKeys(keySchema: StructType, keyCols: Seq[String]): SnapshotWriterFactory =
+    copy(schemaJson = keySchema.json, statsCols = keyCols, opColumn = false,
+      constraints = Seq.empty, bloomCols = Seq.empty)
 }
 
 /** Task-side parquet writer over Spark's own [[ParquetWriteSupport]]

@@ -113,6 +113,35 @@ class ConstraintsSpec extends SparkSpec {
       .select(sum(col("cents"))).head.getLong(0) == 119L)
   }
 
+  test("merge-on-read DELETE on a constrained table writes delete keys only") {
+    val cat = "graftconstrmordel"
+    val wh = java.nio.file.Files.createTempDirectory("graft_constrmordel_wh").toString
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.db")
+    spark.sql(s"CREATE TABLE $cat.db.md (id BIGINT, cents BIGINT) " +
+      "USING `graft-snapshot` TBLPROPERTIES(" +
+      "'constraint.nonneg'='cents >= 0'," +
+      "'write.delete.mode'='merge-on-read','write.delete.key'='id')")
+    spark.sql(s"INSERT INTO $cat.db.md VALUES (1, 10), (2, 20), (3, 30)")
+    val t = new SnapshotTable(spark, s"$wh/db/md")
+    val before = t.snapshot(t.latestVersion())
+    // the DELETE's row schema has no columns: no constraint to bind, and
+    // the lazily-opened data writer never opens
+    spark.sql(s"DELETE FROM $cat.db.md WHERE id = 2")
+    val after = t.snapshot(t.latestVersion())
+    assert(after.action == "delete_mor")
+    assert(after.deletes.nonEmpty)
+    assert(after.files == before.files, "a MOR DELETE adds no data file")
+    after.deletes.map(_.split('/').head).distinct.foreach { dir =>
+      val names = new java.io.File(s"$wh/db/md/data/$dir").list().toSeq
+      assert(names.exists(_.startsWith("delete-")), names)
+      assert(!names.exists(_.startsWith("part-")), names)
+    }
+    assert(spark.table(s"$cat.db.md")
+      .select(sum(col("cents"))).head.getLong(0) == 40L)
+  }
+
   test("branch writes enforce the table's constraints (props are shared)") {
     val t = new SnapshotTable(spark, freshRoot("branch"))
     t.setTableProperties(Map("constraint.nonneg" -> "cents >= 0"))

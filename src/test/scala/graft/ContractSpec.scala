@@ -58,6 +58,25 @@ class ContractSpec extends SparkSpec {
     assert(builders == Seq("GraftSession.scala"), builders)
   }
 
+  test("no freshTmpDir tag or freshCatalog name is given twice in src/main/scala") {
+    // two queries sharing a tag share one scratch dir, and building one
+    // deletes the other's table; catalog names are session-global
+    def scalaFiles(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(scalaFiles)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
+    val src = scalaFiles(new java.io.File("src/main/scala")).map(f =>
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).mkString("\n")
+    val tmpDir = """freshTmpDir\(\s*\w+\s*,\s*"([^"]+)"""".r
+    val catalog = """freshCatalog\(\s*\w+\s*,\s*"([^"]+)"\s*,\s*"([^"]+)"""".r
+    val catalogs = catalog.findAllMatchIn(src).toSeq
+    val tags = tmpDir.findAllMatchIn(src).map(_.group(1)).toSeq ++ catalogs.map(_.group(2))
+    val names = catalogs.map(_.group(1))
+    assert(tags.length > 40 && names.length > 20, s"${tags.length} tags, ${names.length} names")
+    def repeated(xs: Seq[String]) = xs.groupBy(identity).collect { case (x, g) if g.length > 1 => x }
+    assert(repeated(tags).isEmpty, s"freshTmpDir tags given twice: ${repeated(tags)}")
+    assert(repeated(names).isEmpty, s"freshCatalog names given twice: ${repeated(names)}")
+  }
+
   test("every registered query analyzes at sf0.001") {
     SparkEntry.queries.foreach { case (name, fn) =>
       try fn(spark, dir).queryExecution.analyzed
